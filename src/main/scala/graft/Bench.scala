@@ -141,11 +141,21 @@ object Bench {
       s""","passes":$passes,"pass_counts":$nPasses,""" +
       s""""warmup_total":$warm,"n_queries":${results.size},"errors":$err,""" +
       s""""fixture_mtimes":$mtimes,"sf":"$sfDir"}"""
-    java.nio.file.Files.writeString(outPath, full + "\n")
+    // a failed write must not cost the console lines: log it, and the
+    // short line names no file
+    val queriesFile =
+      try {
+        java.nio.file.Files.writeString(outPath, full + "\n")
+        "\"" + outPath.toString.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+      } catch {
+        case e: java.io.IOException =>
+          System.err.println(s"Bench: could not write $outPath: $e")
+          "null"
+      }
     val shortLine = s"""{"metric":"total","value":${f3(total)},"unit":"sec",""" +
       s""""n_queries":${results.size},"passes":$passes,""" +
       s""""warmup_total":${f3(warm)},"n_errors":${errors.size},"errors":$errShort,""" +
-      s""""queries_file":"$outPath","sf":"$sfDir"}"""
+      s""""queries_file":$queriesFile,"sf":"$sfDir"}"""
     println(line)
     println(shortLine)
     spark.stop()

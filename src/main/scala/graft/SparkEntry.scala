@@ -27,7 +27,7 @@ object SparkEntry {
     * through YamlLoader — the C1 driver path. Resources are extracted to a
     * temp dir because YamlLoader reads a directory tree.
     */
-  private lazy val yamlCompiled = {
+  private[graft] lazy val yamlCompiled = {
     val files = Seq("meta.yaml", "relations.yaml",
       "sources/customer2.yaml", "sources/events.yaml", "sources/orders2.yaml",
       "sources/orders_self.yaml", "sources/part2.yaml",

@@ -4,7 +4,9 @@ import graft.core._
 import graft.parse._
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
+import java.util.Locale
 import scala.collection.mutable
+import scala.util.control.NonFatal
 
 /** Compile-time empirical type checking — the reference's C12 pass.
   *
@@ -32,6 +34,17 @@ import scala.collection.mutable
   * Dependency waves (importProject.py:87-108 re-tests as types resolve) are
   * implicit here: rules are probed in evaluation order and sources in
   * topological order, so a rule's dependencies are always typed before it.
+  * The check runs in two passes:
+  *  1. typing — every probe query is analyzed, never executed, in that
+  *     order (then relations, then filters); each rule's type is recorded
+  *     as it resolves, so dependents' exemplars see it;
+  *  2. NULL check — the typed probes execute together in a few shared
+  *     queries (see `nullFlags`), one `head()` each.
+  * If either pass fails anywhere, the state is cleared and the
+  * per-expression path (`checkSequentially`: one executed probe per
+  * expression, in the same order) runs instead, so the first error and
+  * its message are exactly what that path reports. Both passes give the
+  * same types and the same warnings in the same order as that path.
   *
   * ANSI note: the reference probes on Spark 3.5 with ANSI off, where a
   * malformed cast returns NULL (→ warning). This engine runs Spark 4 with
@@ -47,6 +60,10 @@ final class TypeProbe(spark: SparkSession, failOnNullResult: Boolean = false) {
   /** Probed rule types per (source, rule) — decimal-normalized. */
   private val ruleTypes = mutable.Map.empty[(String, String), DataType]
   private val warnings = mutable.ListBuffer.empty[String]
+  /** Typed probes whose NULL check is still to run, in probe order, with
+    * the subject their warning would name.
+    */
+  private val unchecked = mutable.ArrayBuffer.empty[(String, ProbeParts)]
 
   /** Probe the whole project; returns reference-parity warnings, throws
     * CompileError on failures.
@@ -61,14 +78,46 @@ final class TypeProbe(spark: SparkSession, failOnNullResult: Boolean = false) {
     */
   def checkWithTypes(cp: CompiledProject): (Map[(String, String), DataType], Seq[String]) = {
     ensureDatatypesView(spark)
-    cp.sources.foreach { cs =>
-      cs.rules.foreach(cr => probeRule(cp, cs.source, cr))
+    val nulls =
+      try {
+        walk(cp, p => Right((spark.sql(p.sql).schema.fields.head.dataType, None)))
+        Some(nullFlags(unchecked.map(_._2).toIndexedSeq))
+      } catch { case NonFatal(_) => None }
+    nulls match {
+      case Some(flags) =>
+        unchecked.map(_._1).zip(flags).foreach { case (subject, isNull) =>
+          if (isNull) warn(subject)
+        }
+        (ruleTypes.toMap, warnings.toList)
+      case None => checkSequentially(cp)
     }
-    cp.relations.values.foreach(probeRelation(cp, _))
-    cp.outputs.foreach { co =>
-      co.channels.foreach(ch => ch.filter.foreach(probeFilter(cp, co, ch, _)))
-    }
+  }
+
+  /** The per-expression path: each expression's probe executes on its
+    * own, and each error and warning is raised where the walk meets it.
+    */
+  private[analyze] def checkSequentially(
+      cp: CompiledProject): (Map[(String, String), DataType], Seq[String]) = {
+    ensureDatatypesView(spark)
+    ruleTypes.clear(); warnings.clear(); unchecked.clear()
+    walk(cp, p => runProbe(p.sql).map(cols => (cols.head._1, Some(cols.head._2))))
     (ruleTypes.toMap, warnings.toList)
+  }
+
+  /** Probe every rule (sources in topological order, rules in evaluation
+    * order), then every relation, then every output filter. `probe` gives
+    * an expression's result type and, when it executed the expression,
+    * whether the result was NULL; `None` defers the NULL check to
+    * `unchecked`.
+    */
+  private def walk(cp: CompiledProject, probe: Prober): Unit = {
+    cp.sources.foreach { cs =>
+      cs.rules.foreach(cr => probeRule(cp, cs.source, cr, probe))
+    }
+    cp.relations.values.foreach(probeRelation(cp, _, probe))
+    cp.outputs.foreach { co =>
+      co.channels.foreach(ch => ch.filter.foreach(probeFilter(cp, co, ch, _, probe)))
+    }
   }
 
   private def paramType(cp: CompiledProject, sourceOfThis: String, rp: ResolvedParam): DataType = {
@@ -101,58 +150,64 @@ final class TypeProbe(spark: SparkSession, failOnNullResult: Boolean = false) {
       }
     }
 
-  private def probeRule(cp: CompiledProject, s: SourceDef, cr: CompiledRule): Unit = {
-    val sql = probeSql(cr.expr, i => paramType(cp, s.name, cr.params(i)),
+  private def probeRule(
+      cp: CompiledProject, s: SourceDef, cr: CompiledRule, probe: Prober): Unit = {
+    val parts = probeParts(cr.expr, i => paramType(cp, s.name, cr.params(i)),
       cr.rule.castDatatype)
-    runProbe(sql, s"""rule_name: ${cr.name}, source_name: ${s.name}""") match {
+    probe(parts) match {
       case Left(err) =>
         throw CompileError(
           s"""Invalid rule expressions: [{"rule_name": "${cr.name}", """ +
             s""""source_name": "${s.name}", "error": "$err"}]""")
-      case Right((dt, wasNull)) =>
-        if (wasNull) warn(s"rule '${cr.name}' of source '${s.name}'")
+      case Right((dt, isNull)) =>
+        noteNull(s"rule '${cr.name}' of source '${s.name}'", parts, isNull)
         ruleTypes((s.name, cr.name)) = CoreTypes.normalize(dt)
     }
   }
 
-  private def probeRelation(cp: CompiledProject, rel: CompiledRelation): Unit = {
-    val sql = probeSql(rel.expr, { i =>
+  private def probeRelation(cp: CompiledProject, rel: CompiledRelation, probe: Prober): Unit = {
+    val parts = probeParts(rel.expr, { i =>
       val side = if (rel.sides(i) == "This") rel.relation.sourceName
                  else rel.relation.relatedName
       attrType(cp, side, rel.expr.params(i))
     }, None)
-    val outcome = runProbe(sql, s"relation ${rel.relation.name}")
-    val boolOk = outcome match {
-      case Right((BooleanType, wasNull)) =>
-        if (wasNull) warn(s"relation '${rel.relation.name}'"); true
-      case _ => false
-    }
-    if (!boolOk) {
-      val err = outcome.left.toOption.getOrElse(
-        s"data_type ${outcome.toOption.map(o => CoreTypes.typeName(o._1)).getOrElse("?")} is not boolean")
-      throw CompileError(
+    probeBoolean(parts, probe, s"relation '${rel.relation.name}'") { err =>
+      CompileError(
         s"""Invalid relation expressions: [{"name": "${rel.relation.name}", "error": "$err"}]""")
     }
   }
 
   private def probeFilter(
-      cp: CompiledProject, co: CompiledOutput, ch: CompiledChannel, f: CompiledFilter): Unit = {
+      cp: CompiledProject, co: CompiledOutput, ch: CompiledChannel, f: CompiledFilter,
+      probe: Prober): Unit = {
     val src = ch.channel.sourceName
-    val sql = probeSql(f.expr, i => paramType(cp, src, f.params(i)), None)
-    val outcome = runProbe(sql, s"filter of output ${co.output.name}")
-    val boolOk = outcome match {
-      case Right((BooleanType, wasNull)) =>
-        if (wasNull) warn(s"filter of output '${co.output.name}' (channel '$src')"); true
-      case _ => false
-    }
-    if (!boolOk) {
-      val err = outcome.left.toOption.getOrElse(
-        s"data_type ${outcome.toOption.map(o => CoreTypes.typeName(o._1)).getOrElse("?")} is not boolean")
-      throw CompileError(
+    val parts = probeParts(f.expr, i => paramType(cp, src, f.params(i)), None)
+    probeBoolean(parts, probe, s"filter of output '${co.output.name}' (channel '$src')") { err =>
+      CompileError(
         s"""Invalid output filter expressions: [{"source_name": "$src", """ +
           s""""output_name": "${co.output.name}", "error": "$err"}]""")
     }
   }
+
+  /** Relations and filters must probe as boolean; anything else, or a probe
+    * error, is the caller's `invalid` error.
+    */
+  private def probeBoolean(parts: ProbeParts, probe: Prober, subject: String)(
+      invalid: String => CompileError): Unit = {
+    val outcome = probe(parts)
+    outcome match {
+      case Right((BooleanType, isNull)) => noteNull(subject, parts, isNull)
+      case _ =>
+        throw invalid(outcome.left.toOption.getOrElse(
+          s"data_type ${outcome.toOption.map(o => CoreTypes.typeName(o._1)).getOrElse("?")} is not boolean"))
+    }
+  }
+
+  private def noteNull(subject: String, parts: ProbeParts, isNull: Option[Boolean]): Unit =
+    isNull match {
+      case Some(wasNull) => if (wasNull) warn(subject)
+      case None          => unchecked += subject -> parts
+    }
 
   private def warn(what: String): Unit = {
     val msg = s"$what: $NullWarning"
@@ -161,13 +216,58 @@ final class TypeProbe(spark: SparkSession, failOnNullResult: Boolean = false) {
       throw CompileError(s"NULL probe result (strict mode): $msg")
   }
 
-  /** Execute one probe; Left(error) | Right((resultType, resultWasNull)). */
-  private def runProbe(sql: String, label: String): Either[String, (DataType, Boolean)] =
+  /** Whether each probe's result is NULL on the row its own query's
+    * `head()` reads. Probes with parameters and no window share queries:
+    * scalar bodies with scalar bodies, aggregate bodies with aggregate
+    * bodies, each query over the union of its members' `ct` entries, so
+    * two probes share one only when every alias they both bind has the
+    * same exemplar (aliases compared lower-cased, as Spark resolves
+    * column names). Aliases are never renamed — struct-building bodies
+    * take their field names from them. A window body runs alone (row
+    * order after a `Window` depends on its spec), and so does a
+    * parameter-less one (a `count(*)` body counts the rows of `FROM ct`).
+    * Throws if any query fails.
+    */
+  private def nullFlags(probes: IndexedSeq[ProbeParts]): IndexedSeq[Boolean] = {
+    final class Group(val aggregate: Boolean) {
+      val entries = mutable.LinkedHashMap.empty[String, String]
+      val members = mutable.ArrayBuffer.empty[Int]
+      def admits(p: ProbeParts): Boolean =
+        p.aggregate == aggregate &&
+          p.entries.forall { case (a, e) => entries.get(a.toLowerCase(Locale.ROOT)).forall(_ == e) }
+    }
+    def firstRowNulls(sql: String): Seq[Boolean] =
+      runProbe(sql).fold(err => throw CompileError(err), _.map(_._2))
+    val flags = Array.ofDim[Boolean](probes.size)
+    val groups = mutable.ArrayBuffer.empty[Group]
+    probes.indices.foreach { i =>
+      val p = probes(i)
+      if (p.entries.isEmpty || p.window) flags(i) = firstRowNulls(p.sql).head
+      else {
+        val g = groups.find(_.admits(p)).getOrElse {
+          val g = new Group(p.aggregate); groups += g; g
+        }
+        p.entries.foreach { case (a, e) => g.entries(a.toLowerCase(Locale.ROOT)) = e }
+        g.members += i
+      }
+    }
+    groups.foreach { g =>
+      val bodies = g.members.zipWithIndex.map { case (i, k) => s"${probes(i).body} AS c$k" }
+      val sql = s"WITH ct AS (SELECT ${g.entries.values.mkString(", ")} FROM datatypes) " +
+        s"SELECT ${bodies.mkString(", ")} FROM ct"
+      g.members.zip(firstRowNulls(sql)).foreach { case (i, isNull) => flags(i) = isNull }
+    }
+    flags.toIndexedSeq
+  }
+
+  /** Execute one probe query and read its first row: Left(error) |
+    * Right(per column: (type, wasNull)). The only place a probe runs.
+    */
+  private def runProbe(sql: String): Either[String, Seq[(DataType, Boolean)]] =
     try {
       val df = spark.sql(sql)
-      val field = df.schema.fields.head
       val row = df.head()
-      Right((field.dataType, row.isNullAt(0)))
+      Right(df.schema.fields.toSeq.zipWithIndex.map { case (f, k) => (f.dataType, row.isNullAt(k)) })
     } catch {
       case e: org.apache.spark.sql.AnalysisException =>
         Left(e.getSimpleMessage.replace("\"", "'").replace("\n", " "))
@@ -225,7 +325,24 @@ object TypeProbe {
     case other          => "`" + CoreTypes.typeName(other) + "`"
   }
 
-  /** Build the probe SQL for one parsed expression
+  /** One probe query, split so the NULL pass can share a query between
+    * probes: the `ct` entries (alias → `<exemplar> AS <alias>`, empty when
+    * the expression has no parameters) and the select body.
+    */
+  private[analyze] final case class ProbeParts(
+      entries: Seq[(String, String)], body: String, aggregate: Boolean, window: Boolean) {
+    def sql: String =
+      if (entries.isEmpty) s"SELECT $body as col1"
+      else s"WITH ct AS (SELECT ${entries.map(_._2).mkString(", ")} FROM datatypes) " +
+        s"SELECT $body as col1 FROM ct"
+  }
+
+  /** Result type of one probe, and whether it was NULL when the probe ran;
+    * `None` when only its type was taken.
+    */
+  private type Prober = ProbeParts => Either[String, (DataType, Option[Boolean])]
+
+  /** Build the probe query for one parsed expression
     * (reference: u_build_datatype_test_expr.sql:26-74).
     *
     * Parameters bind under their ATTRIBUTE name (suffixed with any struct
@@ -234,8 +351,8 @@ object TypeProbe {
     * rules (`struct([This].a, [This].b)` must probe with fields a, b so
     * dependents' key walks resolve).
     */
-  def probeSql(
-      e: ParsedExpr, paramType: Int => DataType, castDatatype: Option[String]): String = {
+  private[analyze] def probeParts(
+      e: ParsedExpr, paramType: Int => DataType, castDatatype: Option[String]): ProbeParts = {
     def quote(n: String) = "`" + n.replace("`", "``") + "`"
     def alias(i: Int): String = {
       val p = e.params(i)
@@ -248,17 +365,13 @@ object TypeProbe {
       i => if (hasAggs) s"first_value(${quote(alias(i))})" else quote(alias(i)),
       j => e.renderAggInner(j, i => quote(alias(i))))
     castDatatype.foreach(t => body = s"CAST($body as $t)")
-    if (e.params.isEmpty) s"SELECT $body as col1"
-    else {
-      val entries = e.params.indices
-        .map(i => alias(i) -> s"${exemplar(paramType(i))} AS ${quote(alias(i))}").distinct
-      entries.groupBy(_._1).collect { case (a, es) if es.size > 1 => a }.headOption
-        .foreach(a => throw CompileError(
-          s"Probe alias collision: parameter `$a` resolves to different types " +
-            "in one expression"))
-      s"WITH ct AS (SELECT ${entries.map(_._2).mkString(", ")} FROM datatypes) " +
-        s"SELECT $body as col1 FROM ct"
-    }
+    val entries = e.params.indices
+      .map(i => alias(i) -> s"${exemplar(paramType(i))} AS ${quote(alias(i))}").distinct
+    entries.groupBy(_._1).collect { case (a, es) if es.size > 1 => a }.headOption
+      .foreach(a => throw CompileError(
+        s"Probe alias collision: parameter `$a` resolves to different types " +
+          "in one expression"))
+    ProbeParts(entries, body, hasAggs, e.windowFlag)
   }
 
   /** Probe a compiled project (strict C12 mode): returns NULL-probe

@@ -243,7 +243,7 @@ object Dedup {
         */
       verifyPar: Int = 0): DataFrame = {
     require(threshold > 0 && threshold <= 1, "threshold must be in (0, 1]")
-    // sh fans out to the df aggregate + the index join; byDoc to the
+    // sh fans out to the df aggregate + the index join; byDocBase to the
     // prefix index + both verify sides — materialize each once
     // ([[minhashPairs]] discipline)
     val sh = shingleRows(docs, textCol, n) // doc_id, n_sh, shingle
@@ -258,8 +258,7 @@ object Dedup {
         expr(s"""transform(
           slice(__ord, 1, CAST(size(__ord) - ceil($threshold * size(__ord)) + 1 AS INT)),
           x -> x.shingle)""").as("__pref"))
-    val byDoc = byDocBase
-    val idxBase = byDoc.select(col("doc_id"), explode(col("__pref")).as("__p"))
+    val idxBase = byDocBase.select(col("doc_id"), explode(col("__pref")).as("__p"))
     // verifyPar spread (r17, measured placement): the CPU lives in two
     // post-exchange waves whose BYTES are tiny (so AQE coalesces them to
     // ~5 tasks at sf0.1): (1) the candidate probe — prefix-collision pair
@@ -287,7 +286,7 @@ object Dedup {
           .dropDuplicates("doc_a", "doc_b")
       else candBase.distinct()
     verifyJaccard(cand,
-      byDoc.select("doc_id", "__sh"), byDoc.select("doc_id", "__sh"),
+      byDocBase.select("doc_id", "__sh"), byDocBase.select("doc_id", "__sh"),
       threshold)
   }
 
