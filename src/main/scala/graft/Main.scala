@@ -105,19 +105,7 @@ object Main {
     case "init" :: targetDir :: Nil =>
       // starter project (the reference's `--init` copies its packaged
       // sample; ours ships the runtime_project resources)
-      val files = Seq("meta.yaml", "relations.yaml",
-        "sources/customer2.yaml", "sources/events.yaml", "sources/orders2.yaml",
-        "sources/orders_self.yaml", "sources/part2.yaml",
-        "outputs/event_struct.yaml")
-      files.foreach { f =>
-        val in = getClass.getClassLoader.getResourceAsStream(s"runtime_project/$f")
-        require(in != null, s"missing resource runtime_project/$f")
-        val t = java.nio.file.Paths.get(targetDir, f)
-        java.nio.file.Files.createDirectories(t.getParent)
-        java.nio.file.Files.copy(in, t,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        in.close()
-      }
+      RuntimeProject.copyTo(java.nio.file.Paths.get(targetDir))
       println(s"Initialized starter project: $targetDir")
 
     case "run" :: projectDir :: dataDir :: outDir :: Nil =>
@@ -200,15 +188,7 @@ object Main {
     // (table-type) writes land here
     val wh = warehouseDir.getOrElse(
       java.nio.file.Files.createTempDirectory("graft_warehouse").toString)
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.warehouse.dir", wh)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = Sessions.local(cpus, Some(wh))
     s.sparkContext.setLogLevel("WARN")
     s
   }

@@ -28,19 +28,8 @@ object SparkEntry {
     * temp dir because YamlLoader reads a directory tree.
     */
   private[graft] lazy val yamlCompiled = {
-    val files = Seq("meta.yaml", "relations.yaml",
-      "sources/customer2.yaml", "sources/events.yaml", "sources/orders2.yaml",
-      "sources/orders_self.yaml", "sources/part2.yaml",
-      "outputs/event_struct.yaml")
     val tmp = java.nio.file.Files.createTempDirectory("graft_runtime_project")
-    files.foreach { f =>
-      val in = getClass.getClassLoader.getResourceAsStream(s"runtime_project/$f")
-      require(in != null, s"missing resource runtime_project/$f")
-      val target = tmp.resolve(f)
-      java.nio.file.Files.createDirectories(target.getParent)
-      java.nio.file.Files.copy(in, target)
-      in.close()
-    }
+    RuntimeProject.copyTo(tmp)
     new Compiler(graft.parse.YamlLoader.load(tmp.toString)).compile()
   }
 

@@ -74,13 +74,25 @@ final class OutputPlanner(cp: CompiledProject, hubs: String => DataFrame) {
   * outputs (reference: svc_generate_queries.sql:85-127 run.sql ordering,
   * databricks_sql.py sequential execution).
   *
+  * Every hub comes from one provider, [[hubs]]: a source planned with only
+  * the rules a consumer needs (see graft.analyze.Pruner for why Catalyst
+  * cannot prune lookup joins itself). One memo keyed by (source, sorted
+  * rule set) means the same key always yields the same DataFrame, and one
+  * lock map — a lock per key — means a key is built (and written) once
+  * even under concurrent callers. A build holds its key's lock while it
+  * resolves dependencies, which the compiler guarantees are acyclic, so
+  * locks are always taken upstream and cannot deadlock.
+  *
   * `materializeDir = Some(dir)` writes every hub as parquet and re-reads it
   * — the reference's DROP/CREATE hub behavior (S3), and the spill-safe /
   * restartable mode for very large pipelines (file-backed stats also feed
   * Catalyst's broadcast decisions). `None` keeps hubs as lazy plans in one
   * DAG — Catalyst sees through the whole pipeline (column pruning reaches
   * the scans across source boundaries), the right default for tests and
-  * moderate scale.
+  * moderate scale. The write target is a function of the key: the full
+  * rule set writes the reference's `hubName`, any pruned set writes
+  * `<hubName>__<fingerprint of its rule names>`, so a pruned write never
+  * replaces a hub another DataFrame reads.
   */
 final class Runner(
     cp: CompiledProject,
@@ -95,39 +107,57 @@ final class Runner(
       */
     materializeTables: Boolean = false) {
 
-  private val hubCache = mutable.LinkedHashMap.empty[String, DataFrame]
-  // Per-name build locks (ADVICE r16): the cache reads are synchronized but
-  // the build/write is not, so two concurrent hub(name) callers (possible
-  // via the public API outside prebuildHubs' distinct-per-level guarantee)
-  // could both run the overwriteTable/parquet write on the same target.
-  // Holding name's lock while building takes dependency locks in DAG order
-  // (the compiler guarantees acyclic deps), so no deadlock is possible.
-  private val hubLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
+  private type Key = (String, Seq[String])
+  private val memo = new java.util.concurrent.ConcurrentHashMap[Key, DataFrame]()
+  private val locks = new java.util.concurrent.ConcurrentHashMap[Key, Object]()
 
-  def hub(name: String): DataFrame =
-    hubCache.synchronized(hubCache.get(name)).getOrElse {
-      hubLocks.computeIfAbsent(name, _ => new Object).synchronized {
-        hubCache.synchronized(hubCache.get(name)).getOrElse(buildHub(name))
+  /** The hub provider: each source planned (and, in materialized mode,
+    * written) with only its rules in `needed`; dependencies resolve through
+    * the same provider.
+    */
+  def hubs(needed: Map[String, Set[String]]): String => DataFrame = {
+    lazy val get: String => DataFrame = name => {
+      val cs = cp.compiledSource(name)
+      val keep = needed.getOrElse(name, Set.empty)
+      val rules = cs.rules.filter(r => keep.contains(r.name))
+      val key: Key = (name, rules.map(_.name).sorted)
+      Option(memo.get(key)).getOrElse {
+        locks.computeIfAbsent(key, _ => new Object).synchronized {
+          Option(memo.get(key)).getOrElse {
+            val pruned = cs.copy(rules = rules)
+            val built = materialize(pruned, target(cs, key._2),
+              new SourcePlanner(cp, pruned, reader, get).plan())
+            memo.put(key, built)
+            built
+          }
+        }
       }
     }
-
-  private def buildHub(name: String): DataFrame = {
-      val cs = cp.compiledSource(name)
-      // dependencies first (topo order guarantees no cycles)
-      cs.dependsOn.foreach(hub)
-      val built = materialize(cs,
-        new SourcePlanner(cp, cs, reader, hub).plan())
-      hubCache.synchronized(hubCache.getOrElseUpdate(name, built))
+    get
   }
 
-  /** The DROP/CREATE materialization itself (write + read-back), shared by
-    * the full-hub cache path and the per-output pruned path. Jobs are
-    * labeled per hub (guide §1.5) — descriptions are thread-local, so the
-    * level-parallel prebuild labels each concurrent write correctly.
+  // SHA-1, not hashCode: a rule set names the same target in every JVM
+  private def target(cs: CompiledSource, rules: Seq[String]): String =
+    if (rules.size == cs.rules.size) cs.source.hubName
+    else {
+      val sha = java.security.MessageDigest.getInstance("SHA-1")
+        .digest(rules.mkString("\n").getBytes("UTF-8"))
+      cs.source.hubName + "__" + sha.take(8).map(b => f"$b%02x").mkString
+    }
+
+  private lazy val fullHubs =
+    hubs(cp.sources.map(cs => cs.source.name -> cs.rules.map(_.name).toSet).toMap)
+
+  /** A source's full enriched hub (every rule). */
+  def hub(name: String): DataFrame = fullHubs(name)
+
+  /** The DROP/CREATE materialization itself (write + read-back) of one
+    * hub to `target`. Jobs are labeled per target (guide §1.5) —
+    * descriptions are thread-local, so the level-parallel prebuild labels
+    * each concurrent write correctly.
     */
   private def materialize(
-      cs: CompiledSource, planned: DataFrame): DataFrame = {
+      cs: CompiledSource, target: String, planned: DataFrame): DataFrame = {
     var built = planned
     val sc = built.sparkSession.sparkContext
     // A write-parallelism floor (repartition(cores) before the write when
@@ -135,11 +165,11 @@ final class Runner(
     // (r17): parallelizing the parquet encode was outweighed by the added
     // exchange per hub write plus 32 tiny files per hub whose read-back
     // taxes every downstream consumer — q_feature_customer_mat 5.2→8.3 s.
-    sc.setJobDescription(s"hub materialize: ${cs.source.name}")
+    sc.setJobDescription(s"hub materialize: $target")
     try {
       if (materializeTables) {
         val s = cs.source
-        Runner.overwriteTable(built, s.hubName) { w0 =>
+        Runner.overwriteTable(built, target) { w0 =>
           var w = w0
           if (s.hubPartitionBy.nonEmpty) w = w.partitionBy(s.hubPartitionBy: _*)
           if (s.hubBucketBy.nonEmpty) {
@@ -149,9 +179,9 @@ final class Runner(
           }
           w
         }
-        built = built.sparkSession.table(s.hubName)
+        built = built.sparkSession.table(target)
       } else materializeDir.foreach { dir =>
-        val path = s"$dir/${cs.source.hubName}"
+        val path = s"$dir/$target"
         val writer = built.write.mode("overwrite")
         val partitioned =
           if (cs.source.hubPartitionBy.nonEmpty)
@@ -171,8 +201,8 @@ final class Runner(
     * writes from a small thread pool — Spark schedules concurrent jobs
     * FIFO, so the next hub's tasks back-fill executors freed by the
     * current hub's tail. Results are identical: levels run in topological
-    * order, so every dependency is in `hubCache` before any dependent
-    * plans, and names within a level are distinct (no double-build).
+    * order, so every dependency is memoized before any dependent plans,
+    * and names within a level are distinct (no double-build).
     * Lazy mode (no materialization) skips this — hub "builds" there are
     * driver-side plan construction with nothing to overlap.
     */
@@ -190,7 +220,7 @@ final class Runner(
           (cp.compiledSource(n).dependsOn.toSeq.map(d => depth(d) + 1) :+ 0).max
       }
       need.toSeq.groupBy(depth).toSeq.sortBy(_._1).foreach { case (_, lvl) =>
-        // build(n) is idempotent and per-name locked, so an already-cached
+        // build(n) is idempotent and per-key locked, so an already-built
         // name is a cheap no-op; names within a level are distinct
         if (lvl.size <= 1) lvl.foreach(build)
         else {
@@ -205,104 +235,30 @@ final class Runner(
       }
     }
 
-  def buildAllHubs(): Map[String, DataFrame] = {
+  def buildAllHubs(): Unit = {
     prebuildHubs(cp.sources.map(_.source.name), hub)
     cp.sources.foreach(cs => hub(cs.source.name))
-    hubCache.toMap
-  }
-
-  /** Materializing twin of [[prunedHubs]] (r17, guide §6 "prune what you
-    * write"): each hub in the output's transitive closure is still written
-    * and re-read (the reference's DROP/CREATE contract — restartability,
-    * file-backed stats), but the written hub carries only the rules the
-    * requesting output's closure reaches. The enriched FACT hub's unused
-    * lookup/aggregate columns dominated the materialized write (profiled:
-    * one 4.3 s write job of 9.3 s total for q_feature_customer_mat).
-    * Output values are identical to the full-hub path: the lazy mode has
-    * always planned this exact closure (Pruner.neededForOutput) and is
-    * oracle-gated against the same SQL. Per-call cache, like prunedHubs:
-    * a different output's pruning must not bleed in; the shared full-hub
-    * cache is bypassed on purpose (a full cached hub would be wider than
-    * the contract requires, a pruned cached hub could starve a later
-    * full-hub caller).
-    */
-  private def prunedMatHubs(
-      needed: Map[String, Set[String]]): String => DataFrame = {
-    val cache = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-    val locks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
-    lazy val get: String => DataFrame = name =>
-      Option(cache.get(name)).getOrElse {
-        locks.computeIfAbsent(name, _ => new Object).synchronized {
-          Option(cache.get(name)).getOrElse {
-            val cs = cp.compiledSource(name)
-            cs.dependsOn.foreach(get(_))
-            val keep = needed.getOrElse(name, Set.empty)
-            val pruned = cs.copy(rules = cs.rules.filter(r => keep.contains(r.name)))
-            val built =
-              materialize(pruned, new SourcePlanner(cp, pruned, reader, get).plan())
-            cache.putIfAbsent(name, built)
-            built
-          }
-        }
-      }
-    get
-  }
-
-  /** A hub-provider that only plans the rules in `needed` for each source —
-    * lookup joins and aggregate shuffles feeding unused rules are never
-    * built (see graft.analyze.Pruner for why Catalyst cannot do this).
-    * Each call gets its own cache so different consumers' prunings don't
-    * bleed into each other.
-    */
-  /** Public face of [[prunedHubs]] for callers outside this file that
-    * need hub frames carrying only a known rule set (RelationAudit: the
-    * audit joins read relation KEY columns, not the full enriched hub —
-    * planning every lookup/aggregate rule just to count key matches
-    * re-built the whole fact-hub join tree once per audited relation).
-    */
-  def hubProvider(needed: Map[String, Set[String]]): String => DataFrame =
-    prunedHubs(needed)
-
-  private def prunedHubs(needed: Map[String, Set[String]]): String => DataFrame = {
-    val cache = mutable.Map.empty[String, DataFrame]
-    lazy val get: String => DataFrame = name =>
-      cache.getOrElseUpdate(name, {
-        val cs = cp.compiledSource(name)
-        val keep = needed.getOrElse(name, Set.empty)
-        val pruned = cs.copy(rules = cs.rules.filter(r => keep.contains(r.name)))
-        new SourcePlanner(cp, pruned, reader, get).plan()
-      })
-    get
   }
 
   /** Project `cols` out of a source's hub, planning only the rules the
     * selection transitively needs — the API callers should use when they
     * want a column subset of an enriched source.
     */
-  def hubSelect(name: String, cols: String*): DataFrame = {
-    if (materializeDir.isDefined || materializeTables)
-      return hub(name).select(cols.map(c => org.apache.spark.sql.functions.col(SourcePlanner.q(c))): _*)
-    val needed = Pruner.closure(cp, Map(name -> cols.toSet))
-    prunedHubs(needed)(name)
-      .select(cols.map(c => org.apache.spark.sql.functions.col(SourcePlanner.q(c))): _*)
-  }
+  def hubSelect(name: String, cols: String*): DataFrame =
+    hubs(Pruner.closure(cp, Map(name -> cols.toSet)))(name)
+      .select(cols.map(c => col(SourcePlanner.q(c))): _*)
 
+  /** One output's DataFrame over hubs carrying only the rules its
+    * mappings and filter transitively reach (VERDICT r1 scale defect #3);
+    * in materialized mode every hub in the closure is written first,
+    * level-parallel.
+    */
   def output(name: String): DataFrame = {
     val co = cp.outputs.find(_.output.name == name)
       .getOrElse(throw CompileError(s"Unknown output '$name'"))
-    // Both modes plan each source with only the rules the output's
-    // mappings/filter transitively reach (VERDICT r1 scale defect #3;
-    // r17 extends the pruning to the materialized write — see
-    // prunedMatHubs). Materialized mode still writes + re-reads every hub
-    // in the closure, level-parallel.
-    val needed = Pruner.neededForOutput(cp, co)
-    val hubFn: String => DataFrame =
-      if (materializeDir.isDefined || materializeTables) {
-        val get = prunedMatHubs(needed)
-        prebuildHubs(co.channels.map(_.channel.sourceName).distinct, get)
-        get
-      } else prunedHubs(needed)
-    new OutputPlanner(cp, hubFn).plan(co)
+    val get = hubs(Pruner.neededForOutput(cp, co))
+    prebuildHubs(co.channels.map(_.channel.sourceName).distinct, get)
+    new OutputPlanner(cp, get).plan(co)
   }
 
   /** Execute the full pipeline: all hubs, then write all outputs.

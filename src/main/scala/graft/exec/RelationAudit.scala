@@ -44,7 +44,7 @@ object RelationAudit {
     * audit() exactly when some unrelated relation is already broken.
     */
   def auditPruned(cp: CompiledProject, runner: Runner): DataFrame =
-    audit(cp, runner.hubProvider(graft.analyze.Pruner.closure(cp, neededRules(cp))))
+    audit(cp, runner.hubs(graft.analyze.Pruner.closure(cp, neededRules(cp))))
 
   /** Rule-typed attributes each relation binds, per source — the pruning
     * roots for [[auditPruned]] (raw attributes are free; Pruner.closure

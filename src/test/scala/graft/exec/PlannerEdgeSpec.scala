@@ -24,6 +24,12 @@ class PlannerEdgeSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.stop()
 
+  // Runners.parquetDir reads through the active session: start it first
+  private def sampleReader: SourceDef => DataFrame = {
+    SparkSession.setActiveSession(spark)
+    Runners.parquetDir("/root/testdata/sf0.001")
+  }
+
   private def run(p: Project, tables: Map[String, DataFrame]): Runner = {
     val cp = new Compiler(p).compile()
     new Runner(cp, s => tables(s.sourceTable))
@@ -178,7 +184,7 @@ class PlannerEdgeSpec extends AnyFunSuite with BeforeAndAfterAll {
     // has 7 lookup joins (part, supplier, nation, region, …) that Catalyst
     // cannot eliminate — the compiler must not plan them (VERDICT r1 #3).
     val cp = new Compiler(graft.SampleProject.project).compile()
-    val runner = new Runner(cp, Runners.parquetDir("/root/testdata/sf0.001"))
+    val runner = new Runner(cp, sampleReader)
     val df = runner.output("feature_customer")
     val joins = df.queryExecution.optimizedPlan.collect {
       case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
@@ -188,7 +194,7 @@ class PlannerEdgeSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("hubSelect prunes unused aggregate paths and lookups") {
     val cp = new Compiler(graft.SampleProject.project).compile()
-    val runner = new Runner(cp, Runners.parquetDir("/root/testdata/sf0.001"))
+    val runner = new Runner(cp, sampleReader)
     // full customer hub: orders-aggregate join (shared path), nation lookup;
     // selecting only c_custkey + nation_name must drop the aggregate join
     val df = runner.hubSelect("tpch_customer", "c_custkey", "nation_name")
@@ -273,19 +279,92 @@ class PlannerEdgeSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("pruned lazy outputs equal materialized full-hub outputs") {
     // the Pruner must be semantics-preserving: for every sample output the
-    // lazy (pruned) plan and the materialized (full hub, reference S3)
-    // plan produce identical rows
+    // lazy (pruned) plan and the materialized plan produce identical rows.
+    // Every materialized frame (the fact hub and all outputs) is built
+    // before any is collected, so a later write replacing a target an
+    // earlier frame reads would surface as NULLs or vanished files.
     val cp = new Compiler(graft.SampleProject.project).compile()
-    val lazyRunner = new Runner(cp, Runners.parquetDir("/root/testdata/sf0.001"))
-    val tmp = java.nio.file.Files.createTempDirectory("graftmatout").toString
-    val matRunner = new Runner(cp, Runners.parquetDir("/root/testdata/sf0.001"),
-      materializeDir = Some(tmp))
-    cp.outputs.foreach { co =>
-      val a = lazyRunner.output(co.output.name)
-      val b = matRunner.output(co.output.name)
-      assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0,
-        s"output ${co.output.name}: pruned plan diverges from materialized plan")
+    val reader = sampleReader
+    val fact = "tpch_lineitem"
+    val names = s"hub $fact" +: cp.outputs.map(_.output.name)
+    def frames(r: Runner) = r.hub(fact) +: cp.outputs.map(co => r.output(co.output.name))
+    val expected = frames(new Runner(cp, reader))
+    Seq("materializeDir", "materializeTables").foreach { mode =>
+      val tmp = java.nio.file.Files.createTempDirectory("graftmatout").toString
+      val matRunner =
+        if (mode == "materializeDir") new Runner(cp, reader, materializeDir = Some(tmp))
+        else new Runner(cp, reader, materializeTables = true)
+      val got = frames(matRunner)
+      names.zip(expected.zip(got)).foreach { case (what, (a, b)) =>
+        assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0,
+          s"$mode, $what: pruned plan diverges from materialized plan")
+      }
     }
+  }
+
+  test("concurrent output and hub callers write each materialized target once") {
+    import java.util.concurrent.{Callable, ConcurrentHashMap, CountDownLatch, Executors}
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val cp = new Compiler(graft.SampleProject.project).compile()
+    val reader = sampleReader
+    val calls: Seq[(String, Runner => DataFrame)] = Seq(
+      "output feature_customer" -> (_.output("feature_customer")),
+      "output party_summary" -> (_.output("party_summary")),
+      "hub tpch_lineitem" -> (_.hub("tpch_lineitem")))
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    val lazyRunner = new Runner(cp, reader)
+    val expected = calls.map { case (what, call) => what -> rows(call(lazyRunner)) }.toMap
+
+    // one write = one root SQL execution running jobs under the target's
+    // job description (a write's AQE stages and its read-back run more)
+    val prefix = "hub materialize: "
+    val writes = new ConcurrentHashMap[String, java.util.Set[String]]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).foreach { p =>
+          val desc = Option(p.getProperty("spark.job.description")).getOrElse("")
+          val exec = Option(p.getProperty("spark.sql.execution.root.id"))
+            .orElse(Option(p.getProperty("spark.sql.execution.id")))
+          if (desc.startsWith(prefix)) exec.foreach { id =>
+            writes.computeIfAbsent(desc.stripPrefix(prefix),
+              _ => ConcurrentHashMap.newKeySet[String]()).add(id)
+          }
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    val tmp = java.nio.file.Files.createTempDirectory("graftconc").toString
+    val runner = new Runner(cp, reader, materializeDir = Some(tmp))
+    val pool = Executors.newFixedThreadPool(4)
+    val start = new CountDownLatch(1)
+    val results = try {
+      val futures = (0 until 4).map { t =>
+        // each thread makes every call, starting at a different one
+        val order = calls.drop(t % calls.size) ++ calls.take(t % calls.size)
+        pool.submit(new Callable[Seq[(String, DataFrame)]] {
+          def call(): Seq[(String, DataFrame)] = {
+            start.await()
+            order.map { case (what, c) => what -> c(runner) }
+          }
+        })
+      }
+      start.countDown()
+      futures.flatMap(_.get())
+    } finally {
+      pool.shutdown()
+      org.apache.spark.ListenerAccess.drain(sc)
+      sc.removeSparkListener(listener)
+    }
+    results.foreach { case (what, df) =>
+      assert(rows(df) == expected(what), s"$what: materialized differs from lazy")
+    }
+
+    import scala.jdk.CollectionConverters._
+    val counts = writes.asScala.map { case (t, ids) => t -> ids.size }.toMap
+    assert(counts.contains("enriched_tpch_lineitem"), s"full fact hub not written: $counts")
+    assert(counts.keys.exists(_.startsWith("enriched_tpch_lineitem__")),
+      s"pruned fact hub not written to its own target: $counts")
+    assert(counts.values.forall(_ == 1), s"a target was written more than once: $counts")
   }
 
   test("co-bucketed table hubs join with zero shuffle") {
