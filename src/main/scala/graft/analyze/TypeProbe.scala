@@ -3,6 +3,8 @@ package graft.analyze
 import graft.core._
 import graft.parse._
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.catalyst.expressions.SubqueryExpression
 import org.apache.spark.sql.types._
 import java.util.Locale
 import scala.collection.mutable
@@ -31,20 +33,25 @@ import scala.util.control.NonFatal
   *    ("NULL values detected! ...") and continues; `failOnNullResult=true`
   *    escalates the warning to a CompileError (strict mode)
   *
-  * Dependency waves (importProject.py:87-108 re-tests as types resolve) are
-  * implicit here: rules are probed in evaluation order and sources in
-  * topological order, so a rule's dependencies are always typed before it.
-  * The check runs in two passes:
-  *  1. typing — every probe query is analyzed, never executed, in that
-  *     order (then relations, then filters); each rule's type is recorded
-  *     as it resolves, so dependents' exemplars see it;
-  *  2. NULL check — the typed probes execute together in a few shared
-  *     queries (see `nullFlags`), one `head()` each.
-  * If either pass fails anywhere, the state is cleared and the
-  * per-expression path (`checkSequentially`: one executed probe per
-  * expression, in the same order) runs instead, so the first error and
-  * its message are exactly what that path reports. Both passes give the
-  * same types and the same warnings in the same order as that path.
+  * Dependency waves (importProject.py:87-108 re-tests as types resolve):
+  * a rule joins a wave once every rule its parameters read is typed, and
+  * a relation or output filter once the rules it reads are. The check
+  * runs wave by wave: the wave's probes are fused into a few shared
+  * queries (see `probeWave`), which run at the same time on a small
+  * [[graft.core.Pool]]; each query's schema types all of its members and
+  * its `head()` gives their NULL flags. A wave's rule types are recorded
+  * before the next wave is built. `datatypes` is a local relation (an
+  * inline `VALUES` table), so Catalyst folds every scalar probe on the
+  * driver and it launches no Spark job. The warnings are raised
+  * afterwards in probe order: sources in topological order, rules in
+  * evaluation order, then relations, then output filters.
+  *
+  * If any query fails, or a relation or filter is not boolean, the state
+  * is cleared and the per-expression path (`checkSequentially`: one
+  * executed probe per expression, in probe order) runs instead, so the
+  * first error and its message are exactly what that path reports.
+  * Without a failure both paths give the same types and the same
+  * warnings in the same order.
   *
   * ANSI note: the reference probes on Spark 3.5 with ANSI off, where a
   * malformed cast returns NULL (→ warning). This engine runs Spark 4 with
@@ -60,10 +67,6 @@ final class TypeProbe(spark: SparkSession, failOnNullResult: Boolean = false) {
   /** Probed rule types per (source, rule) — decimal-normalized. */
   private val ruleTypes = mutable.Map.empty[(String, String), DataType]
   private val warnings = mutable.ListBuffer.empty[String]
-  /** Typed probes whose NULL check is still to run, in probe order, with
-    * the subject their warning would name.
-    */
-  private val unchecked = mutable.ArrayBuffer.empty[(String, ProbeParts)]
 
   /** Probe the whole project; returns reference-parity warnings, throws
     * CompileError on failures.
@@ -78,52 +81,104 @@ final class TypeProbe(spark: SparkSession, failOnNullResult: Boolean = false) {
     */
   def checkWithTypes(cp: CompiledProject): (Map[(String, String), DataType], Seq[String]) = {
     ensureDatatypesView(spark)
-    val nulls =
-      try {
-        walk(cp, p => Right((spark.sql(p.sql).schema.fields.head.dataType, None)))
-        Some(nullFlags(unchecked.map(_._2).toIndexedSeq))
-      } catch { case NonFatal(_) => None }
+    val nulls = try Some(probeInWaves(cp)) catch { case NonFatal(_) => None }
     nulls match {
       case Some(flags) =>
-        unchecked.map(_._1).zip(flags).foreach { case (subject, isNull) =>
-          if (isNull) warn(subject)
-        }
+        flags.foreach { case (subject, isNull) => if (isNull) warn(subject) }
         (ruleTypes.toMap, warnings.toList)
       case None => checkSequentially(cp)
     }
   }
 
-  /** The per-expression path: each expression's probe executes on its
-    * own, and each error and warning is raised where the walk meets it.
+  /** The per-expression path, and the fused path's fallback: each
+    * expression's probe executes on its own, in probe order, and each
+    * error and warning is raised where the walk meets it.
     */
   private[analyze] def checkSequentially(
       cp: CompiledProject): (Map[(String, String), DataType], Seq[String]) = {
     ensureDatatypesView(spark)
-    ruleTypes.clear(); warnings.clear(); unchecked.clear()
-    walk(cp, p => runProbe(p.sql).map(cols => (cols.head._1, Some(cols.head._2))))
+    ruleTypes.clear(); warnings.clear()
+    probes(cp).foreach { p =>
+      runProbe(p.parts().sql) match {
+        case Left(err) => throw p.invalid(err)
+        case Right(cols) =>
+          settle(p, cols.head._1)
+          if (cols.head._2) warn(p.subject)
+      }
+    }
     (ruleTypes.toMap, warnings.toList)
   }
 
-  /** Probe every rule (sources in topological order, rules in evaluation
-    * order), then every relation, then every output filter. `probe` gives
-    * an expression's result type and, when it executed the expression,
-    * whether the result was NULL; `None` defers the NULL check to
-    * `unchecked`.
+  /** The fused path: probes every wave, recording rule types, and returns
+    * each probe's warning subject and NULL flag in probe order. Throws on
+    * any failure.
     */
-  private def walk(cp: CompiledProject, probe: Prober): Unit = {
-    cp.sources.foreach { cs =>
-      cs.rules.foreach(cr => probeRule(cp, cs.source, cr, probe))
+  private def probeInWaves(cp: CompiledProject): Seq[(String, Boolean)] = {
+    val all = probes(cp).toIndexedSeq
+    val flags = Array.ofDim[Boolean](all.size)
+    var pending: IndexedSeq[Int] = all.indices
+    while (pending.nonEmpty) {
+      val (wave, later) = pending.partition(i => all(i).reads.forall(ruleTypes.contains))
+      if (wave.isEmpty) throw CompileError("probe dependencies never resolve")
+      wave.zip(probeWave(wave.map(all(_).parts()))).foreach { case (i, (dt, isNull)) =>
+        settle(all(i), dt)
+        flags(i) = isNull
+      }
+      pending = later
     }
-    cp.relations.values.foreach(probeRelation(cp, _, probe))
-    cp.outputs.foreach { co =>
-      co.channels.foreach(ch => ch.filter.foreach(probeFilter(cp, co, ch, _, probe)))
-    }
+    all.map(_.subject).zip(flags)
   }
 
-  private def paramType(cp: CompiledProject, sourceOfThis: String, rp: ResolvedParam): DataType = {
-    val source = if (rp.path.isEmpty) sourceOfThis else rp.targetSource
-    attrType(cp, source, rp.ref)
+  /** Every probe in probe order: sources in topological order with rules
+    * in evaluation order, then relations, then output filters.
+    */
+  private def probes(cp: CompiledProject): Seq[Probe] = {
+    def reads(sourceOfThis: String, params: Seq[ResolvedParam]) =
+      params.filter(_.isRule).map(rp => (paramSource(sourceOfThis, rp), rp.ref.attribute)).toSet
+    val rules = for (cs <- cp.sources; cr <- cs.rules) yield {
+      val s = cs.source.name
+      Probe(s"rule '${cr.name}' of source '$s'", reads(s, cr.params), Some((s, cr.name)),
+        () => probeParts(cr.expr, i => paramType(cp, s, cr.params(i)), cr.rule.castDatatype),
+        err => CompileError(
+          s"""Invalid rule expressions: [{"rule_name": "${cr.name}", """ +
+            s""""source_name": "$s", "error": "$err"}]"""))
+    }
+    val relations = cp.relations.values.map { rel =>
+      val ps = rel.expr.params
+      def side(i: Int) =
+        if (rel.sides(i) == "This") rel.relation.sourceName else rel.relation.relatedName
+      Probe(s"relation '${rel.relation.name}'",
+        ps.indices.filter(rel.isRule).map(i => (side(i), ps(i).attribute)).toSet, None,
+        () => probeParts(rel.expr, i => attrType(cp, side(i), ps(i)), None),
+        err => CompileError(
+          s"""Invalid relation expressions: [{"name": "${rel.relation.name}", "error": "$err"}]"""))
+    }
+    val filters = for (co <- cp.outputs; ch <- co.channels; f <- ch.filter) yield {
+      val src = ch.channel.sourceName
+      Probe(s"filter of output '${co.output.name}' (channel '$src')", reads(src, f.params), None,
+        () => probeParts(f.expr, i => paramType(cp, src, f.params(i)), None),
+        err => CompileError(
+          s"""Invalid output filter expressions: [{"source_name": "$src", """ +
+            s""""output_name": "${co.output.name}", "error": "$err"}]"""))
+    }
+    rules ++ relations ++ filters
   }
+
+  /** Take a probe's result type: a rule's is recorded for its dependents;
+    * a relation or filter must be boolean.
+    */
+  private def settle(p: Probe, dt: DataType): Unit = p.rule match {
+    case Some(key) => ruleTypes(key) = CoreTypes.normalize(dt)
+    case None =>
+      if (dt != BooleanType)
+        throw p.invalid(s"data_type ${CoreTypes.typeName(dt)} is not boolean")
+  }
+
+  private def paramSource(sourceOfThis: String, rp: ResolvedParam): String =
+    if (rp.path.isEmpty) sourceOfThis else rp.targetSource
+
+  private def paramType(cp: CompiledProject, sourceOfThis: String, rp: ResolvedParam): DataType =
+    attrType(cp, paramSource(sourceOfThis, rp), rp.ref)
 
   private def attrType(cp: CompiledProject, sourceName: String, ref: ParamRef): DataType = {
     val s = cp.project.source(sourceName)
@@ -150,65 +205,6 @@ final class TypeProbe(spark: SparkSession, failOnNullResult: Boolean = false) {
       }
     }
 
-  private def probeRule(
-      cp: CompiledProject, s: SourceDef, cr: CompiledRule, probe: Prober): Unit = {
-    val parts = probeParts(cr.expr, i => paramType(cp, s.name, cr.params(i)),
-      cr.rule.castDatatype)
-    probe(parts) match {
-      case Left(err) =>
-        throw CompileError(
-          s"""Invalid rule expressions: [{"rule_name": "${cr.name}", """ +
-            s""""source_name": "${s.name}", "error": "$err"}]""")
-      case Right((dt, isNull)) =>
-        noteNull(s"rule '${cr.name}' of source '${s.name}'", parts, isNull)
-        ruleTypes((s.name, cr.name)) = CoreTypes.normalize(dt)
-    }
-  }
-
-  private def probeRelation(cp: CompiledProject, rel: CompiledRelation, probe: Prober): Unit = {
-    val parts = probeParts(rel.expr, { i =>
-      val side = if (rel.sides(i) == "This") rel.relation.sourceName
-                 else rel.relation.relatedName
-      attrType(cp, side, rel.expr.params(i))
-    }, None)
-    probeBoolean(parts, probe, s"relation '${rel.relation.name}'") { err =>
-      CompileError(
-        s"""Invalid relation expressions: [{"name": "${rel.relation.name}", "error": "$err"}]""")
-    }
-  }
-
-  private def probeFilter(
-      cp: CompiledProject, co: CompiledOutput, ch: CompiledChannel, f: CompiledFilter,
-      probe: Prober): Unit = {
-    val src = ch.channel.sourceName
-    val parts = probeParts(f.expr, i => paramType(cp, src, f.params(i)), None)
-    probeBoolean(parts, probe, s"filter of output '${co.output.name}' (channel '$src')") { err =>
-      CompileError(
-        s"""Invalid output filter expressions: [{"source_name": "$src", """ +
-          s""""output_name": "${co.output.name}", "error": "$err"}]""")
-    }
-  }
-
-  /** Relations and filters must probe as boolean; anything else, or a probe
-    * error, is the caller's `invalid` error.
-    */
-  private def probeBoolean(parts: ProbeParts, probe: Prober, subject: String)(
-      invalid: String => CompileError): Unit = {
-    val outcome = probe(parts)
-    outcome match {
-      case Right((BooleanType, isNull)) => noteNull(subject, parts, isNull)
-      case _ =>
-        throw invalid(outcome.left.toOption.getOrElse(
-          s"data_type ${outcome.toOption.map(o => CoreTypes.typeName(o._1)).getOrElse("?")} is not boolean"))
-    }
-  }
-
-  private def noteNull(subject: String, parts: ProbeParts, isNull: Option[Boolean]): Unit =
-    isNull match {
-      case Some(wasNull) => if (wasNull) warn(subject)
-      case None          => unchecked += subject -> parts
-    }
-
   private def warn(what: String): Unit = {
     val msg = s"$what: $NullWarning"
     warnings += msg
@@ -216,19 +212,21 @@ final class TypeProbe(spark: SparkSession, failOnNullResult: Boolean = false) {
       throw CompileError(s"NULL probe result (strict mode): $msg")
   }
 
-  /** Whether each probe's result is NULL on the row its own query's
-    * `head()` reads. Probes with parameters and no window share queries:
-    * scalar bodies with scalar bodies, aggregate bodies with aggregate
-    * bodies, each query over the union of its members' `ct` entries, so
-    * two probes share one only when every alias they both bind has the
-    * same exemplar (aliases compared lower-cased, as Spark resolves
-    * column names). Aliases are never renamed — struct-building bodies
-    * take their field names from them. A window body runs alone (row
-    * order after a `Window` depends on its spec), and so does a
-    * parameter-less one (a `count(*)` body counts the rows of `FROM ct`).
+  /** Each probe's result type and whether it is NULL on the row its
+    * query's `head()` reads, from a few shared queries that run at the
+    * same time. Probes with parameters share queries: scalar bodies with
+    * scalar bodies, aggregate bodies with aggregate bodies, each query over
+    * the union of its members' `ct` entries, so two probes share one only
+    * when every alias they both bind has the same exemplar (aliases
+    * compared lower-cased, as Spark resolves column names). Aliases are
+    * never renamed — struct-building bodies take their field names from
+    * them. A probe runs alone when its body has a window (row order after
+    * a `Window` depends on its spec), no parameters (a `count(*)` body
+    * counts the rows of `FROM ct`) or a name that is none of its own
+    * aliases (in a shared query it could bind another member's column).
     * Throws if any query fails.
     */
-  private def nullFlags(probes: IndexedSeq[ProbeParts]): IndexedSeq[Boolean] = {
+  private def probeWave(wave: IndexedSeq[ProbeParts]): IndexedSeq[(DataType, Boolean)] = {
     final class Group(val aggregate: Boolean) {
       val entries = mutable.LinkedHashMap.empty[String, String]
       val members = mutable.ArrayBuffer.empty[Int]
@@ -236,13 +234,11 @@ final class TypeProbe(spark: SparkSession, failOnNullResult: Boolean = false) {
         p.aggregate == aggregate &&
           p.entries.forall { case (a, e) => entries.get(a.toLowerCase(Locale.ROOT)).forall(_ == e) }
     }
-    def firstRowNulls(sql: String): Seq[Boolean] =
-      runProbe(sql).fold(err => throw CompileError(err), _.map(_._2))
-    val flags = Array.ofDim[Boolean](probes.size)
+    val queries = mutable.ArrayBuffer.empty[(Seq[Int], String)]
     val groups = mutable.ArrayBuffer.empty[Group]
-    probes.indices.foreach { i =>
-      val p = probes(i)
-      if (p.entries.isEmpty || p.window) flags(i) = firstRowNulls(p.sql).head
+    wave.indices.foreach { i =>
+      val p = wave(i)
+      if (p.entries.isEmpty || p.window || readsForeignNames(p)) queries += Seq(i) -> p.sql
       else {
         val g = groups.find(_.admits(p)).getOrElse {
           val g = new Group(p.aggregate); groups += g; g
@@ -252,12 +248,32 @@ final class TypeProbe(spark: SparkSession, failOnNullResult: Boolean = false) {
       }
     }
     groups.foreach { g =>
-      val bodies = g.members.zipWithIndex.map { case (i, k) => s"${probes(i).body} AS c$k" }
-      val sql = s"WITH ct AS (SELECT ${g.entries.values.mkString(", ")} FROM datatypes) " +
-        s"SELECT ${bodies.mkString(", ")} FROM ct"
-      g.members.zip(firstRowNulls(sql)).foreach { case (i, isNull) => flags(i) = isNull }
+      val bodies = g.members.zipWithIndex.map { case (i, k) => s"${wave(i).body} AS c$k" }
+      queries += g.members.toSeq -> (s"WITH ct AS (SELECT ${g.entries.values.mkString(", ")} " +
+        s"FROM datatypes) SELECT ${bodies.mkString(", ")} FROM ct")
     }
-    flags.toIndexedSeq
+    val results = Pool.all("graft-probe", queries.toSeq.map { case (_, sql) =>
+      () => runProbe(sql).fold(err => throw CompileError(err), identity)
+    })
+    val out = Array.ofDim[(DataType, Boolean)](wave.size)
+    queries.zip(results).foreach { case ((members, _), cols) =>
+      members.zip(cols).foreach { case (i, c) => out(i) = c }
+    }
+    out.toIndexedSeq
+  }
+
+  /** Whether a probe body names a column that is none of its own aliases
+    * (or hides names in a subquery) — Spark's parser tells, since lambda
+    * variables parse as their own kind of name.
+    */
+  private def readsForeignNames(p: ProbeParts): Boolean = {
+    val own = p.entries.map(_._1.toLowerCase(Locale.ROOT)).toSet
+    try spark.sessionState.sqlParser.parseExpression(p.body).find {
+      case a: UnresolvedAttribute => !own(a.nameParts.head.toLowerCase(Locale.ROOT))
+      case _: SubqueryExpression  => true
+      case _                      => false
+    }.isDefined
+    catch { case NonFatal(_) => true }
   }
 
   /** Execute one probe query and read its first row: Left(error) |
@@ -286,27 +302,27 @@ object TypeProbe {
 
   private val ViewName = "datatypes"
 
-  /** Two-row frame with one non-null column per canonical scalar type
+  /** Two-row local relation with one column per canonical scalar type
     * (clone of the reference probe view's shape — miniSparky.py:32-36;
-    * values are our own, only the types matter).
+    * values are our own, only the types matter). Only `date` and
+    * `timestamp` are nullable, as the casts make them. An inline `VALUES`
+    * table, not a `UNION ALL` of two selects: Catalyst folds every scalar
+    * probe over it on the driver (`ConvertToLocalRelation`), so such a
+    * probe launches no Spark job.
     */
   def ensureDatatypesView(spark: SparkSession): Unit =
     spark.sql(
-      """SELECT CAST(-12.34 AS DECIMAL(10,2)) `decimal`,
-        |       CAST('graft probe row one' AS STRING) `string`,
-        |       CAST(7 AS INT) `int`,
-        |       CAST(4.25 AS FLOAT) `float`,
-        |       CAST(8.5 AS DOUBLE) `double`,
-        |       CAST('2021-06-15' AS DATE) `date`,
-        |       CAST('2021-06-15T12:30:00' AS TIMESTAMP) `timestamp`,
-        |       true `boolean`,
-        |       CAST(1234567890123 AS BIGINT) `long`
-        |UNION ALL
-        |SELECT CAST(-8150.99 AS DECIMAL(10,2)), CAST('row two' AS STRING),
-        |       CAST(131 AS INT), CAST(41.9 AS FLOAT), CAST(87.6 AS DOUBLE),
-        |       CAST('2024-02-29' AS DATE),
-        |       CAST('2024-02-29T23:19:17' AS TIMESTAMP),
-        |       true, CAST(99999999991 AS BIGINT)
+      """SELECT * FROM VALUES
+        |  (CAST(-12.34 AS DECIMAL(10,2)), CAST('graft probe row one' AS STRING),
+        |   CAST(7 AS INT), CAST(4.25 AS FLOAT), CAST(8.5 AS DOUBLE),
+        |   CAST('2021-06-15' AS DATE), CAST('2021-06-15T12:30:00' AS TIMESTAMP),
+        |   true, CAST(1234567890123 AS BIGINT)),
+        |  (CAST(-8150.99 AS DECIMAL(10,2)), CAST('row two' AS STRING),
+        |   CAST(131 AS INT), CAST(41.9 AS FLOAT), CAST(87.6 AS DOUBLE),
+        |   CAST('2024-02-29' AS DATE), CAST('2024-02-29T23:19:17' AS TIMESTAMP),
+        |   true, CAST(99999999991 AS BIGINT))
+        |  AS t(`decimal`, `string`, `int`, `float`, `double`, `date`, `timestamp`,
+        |       `boolean`, `long`)
         |""".stripMargin).createOrReplaceTempView(ViewName)
 
   /** Constant exemplar expression for a parameter type
@@ -325,9 +341,21 @@ object TypeProbe {
     case other          => "`" + CoreTypes.typeName(other) + "`"
   }
 
-  /** One probe query, split so the NULL pass can share a query between
-    * probes: the `ct` entries (alias → `<exemplar> AS <alias>`, empty when
-    * the expression has no parameters) and the select body.
+  /** One probed expression. `reads` are the rules whose types its
+    * exemplars need, `rule` the rule it types (`None` for a relation or
+    * filter, which must be boolean), `invalid` its "Invalid ...
+    * expressions" error; `parts` builds its probe once `reads` are typed.
+    */
+  private final case class Probe(
+      subject: String,
+      reads: Set[(String, String)],
+      rule: Option[(String, String)],
+      parts: () => ProbeParts,
+      invalid: String => CompileError)
+
+  /** One probe query, split so a wave can share a query between probes:
+    * the `ct` entries (alias → `<exemplar> AS <alias>`, empty when the
+    * expression has no parameters) and the select body.
     */
   private[analyze] final case class ProbeParts(
       entries: Seq[(String, String)], body: String, aggregate: Boolean, window: Boolean) {
@@ -336,11 +364,6 @@ object TypeProbe {
       else s"WITH ct AS (SELECT ${entries.map(_._2).mkString(", ")} FROM datatypes) " +
         s"SELECT $body as col1 FROM ct"
   }
-
-  /** Result type of one probe, and whether it was NULL when the probe ran;
-    * `None` when only its type was taken.
-    */
-  private type Prober = ProbeParts => Either[String, (DataType, Option[Boolean])]
 
   /** Build the probe query for one parsed expression
     * (reference: u_build_datatype_test_expr.sql:26-74).

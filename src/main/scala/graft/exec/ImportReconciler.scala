@@ -23,7 +23,8 @@ import org.apache.spark.sql.SparkSession
   *    deleted, mirroring `impc_execute`'s early RETURNs);
   *  - what endures between imports — and therefore what reconciliation
   *    must cascade-delete — is the PHYSICAL workspace: materialized hub
-  *    parquet dirs, hub catalog tables, and output targets written by
+  *    parquet dirs and hub catalog tables (the full `hubName` and every
+  *    pruned `<hubName>__<16 hex>` target), and output targets written by
   *    `Runner.run`. A source or output removed (or renamed) in the new
   *    project leaves orphaned artifacts that a re-run would never
   *    overwrite; this pass removes exactly those.
@@ -138,6 +139,21 @@ object ImportReconciler {
         .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
         .forEach(p => java.nio.file.Files.deleteIfExists(p))
 
+  /** Tables of the current database: those in the catalog and, for a
+    * fresh JVM whose in-memory catalog does not know them, the directories
+    * under the database's location.
+    */
+  private def tableNames(spark: SparkSession): Seq[String] = {
+    val catalog = spark.sessionState.catalog
+    val db = catalog.getCurrentDatabase
+    val location = new org.apache.hadoop.fs.Path(catalog.getDatabaseMetadata(db).locationUri)
+    val fs = location.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val onDisk =
+      if (fs.exists(location)) fs.listStatus(location).filter(_.isDirectory).map(_.getPath.getName)
+      else Array.empty[String]
+    (catalog.listTables(db).filter(_.database.isDefined).map(_.table) ++ onDisk).distinct
+  }
+
   /** Reconcile the workspace at `outDir` against `project`: cascade-delete
     * the physical artifacts of every source/output present in the LAST
     * import but absent (by name) from this one, and return the next log
@@ -168,9 +184,15 @@ object ImportReconciler {
 
     staleSources.foreach { case (_, hubName) =>
       // hub parquet dir (materializeDir mode) and/or hub catalog table
-      // (materializeTables mode) — u_delete_cascade's 'source' branch
+      // (materializeTables mode) — u_delete_cascade's 'source' branch —
+      // plus the pruned targets materialized output()/hubSelect calls wrote
       deleteDir(java.nio.file.Paths.get(outDir, hubName))
       Runner.dropTableAndOrphanLocation(spark, hubName)
+      val pruned = java.util.regex.Pattern.quote(hubName) + "__[0-9a-f]{16}"
+      Option(new java.io.File(outDir).list()).toSeq.flatten.filter(_.matches(pruned))
+        .foreach(n => deleteDir(java.nio.file.Paths.get(outDir, n)))
+      tableNames(spark).filter(_.matches("(?i)" + pruned))
+        .foreach(Runner.dropTableAndOrphanLocation(spark, _))
     }
     staleOutputs.foreach { case (_, (target, tag)) =>
       // u_delete_cascade's 'output' branch, per sink type

@@ -112,13 +112,19 @@ final class Runner(
   private val locks = new java.util.concurrent.ConcurrentHashMap[Key, Object]()
 
   /** The hub provider: each source planned (and, in materialized mode,
-    * written) with only its rules in `needed`; dependencies resolve through
-    * the same provider.
+    * written) with only its rules in `needed` — in materialized mode also
+    * every source's [[layoutRules]], closed over again; dependencies
+    * resolve through the same provider.
     */
   def hubs(needed: Map[String, Set[String]]): String => DataFrame = {
+    val planned =
+      if (!materialized) needed
+      else Pruner.closure(cp, (needed.keySet ++ layoutRules.keySet).map { s =>
+        s -> (needed.getOrElse(s, Set.empty) ++ layoutRules.getOrElse(s, Set.empty))
+      }.toMap)
     lazy val get: String => DataFrame = name => {
       val cs = cp.compiledSource(name)
-      val keep = needed.getOrElse(name, Set.empty)
+      val keep = planned.getOrElse(name, Set.empty)
       val rules = cs.rules.filter(r => keep.contains(r.name))
       val key: Key = (name, rules.map(_.name).sorted)
       Option(memo.get(key)).getOrElse {
@@ -135,6 +141,17 @@ final class Runner(
     }
     get
   }
+
+  private def materialized: Boolean = materializeDir.isDefined || materializeTables
+
+  /** Columns a materialized hub is written by — its source's partition
+    * columns, and in table mode its bucket columns. Those that are rules
+    * join every pruned rule set, or the write would miss them.
+    */
+  private lazy val layoutRules: Map[String, Set[String]] = cp.sources.map { cs =>
+    val s = cs.source
+    s.name -> (s.hubPartitionBy ++ (if (materializeTables) s.hubBucketBy else Nil)).toSet
+  }.toMap
 
   // SHA-1, not hashCode: a rule set names the same target in every JVM
   private def target(cs: CompiledSource, rules: Seq[String]): String =
@@ -198,7 +215,7 @@ final class Runner(
     * and a straggling write tail leaves the cluster idle while the next
     * independent hub waits (guide §2.6). Group the requested hubs'
     * transitive closure into dependency levels and submit each level's
-    * writes from a small thread pool — Spark schedules concurrent jobs
+    * writes through [[graft.core.Pool]] — Spark schedules concurrent jobs
     * FIFO, so the next hub's tasks back-fill executors freed by the
     * current hub's tail. Results are identical: levels run in topological
     * order, so every dependency is memoized before any dependent plans,
@@ -208,7 +225,7 @@ final class Runner(
     */
   private def prebuildHubs(
       names: Seq[String], build: String => DataFrame): Unit =
-    if (materializeDir.isDefined || materializeTables) {
+    if (materialized) {
       val need = mutable.LinkedHashSet.empty[String]
       def visit(n: String): Unit = if (!need.contains(n)) {
         cp.compiledSource(n).dependsOn.foreach(visit); need += n
@@ -222,16 +239,7 @@ final class Runner(
       need.toSeq.groupBy(depth).toSeq.sortBy(_._1).foreach { case (_, lvl) =>
         // build(n) is idempotent and per-key locked, so an already-built
         // name is a cheap no-op; names within a level are distinct
-        if (lvl.size <= 1) lvl.foreach(build)
-        else {
-          val pool = java.util.concurrent.Executors.newFixedThreadPool(
-            math.min(lvl.size, 4))
-          try {
-            lvl.map(n => pool.submit(new java.util.concurrent.Callable[Unit] {
-              def call(): Unit = { build(n); () }
-            })).foreach(_.get())
-          } finally pool.shutdown()
-        }
+        Pool.all("graft-hub-build", lvl.map(n => () => { build(n); () }))
       }
     }
 

@@ -114,6 +114,37 @@ class ImportReconcilerSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!Files.exists(loc), "orphaned warehouse directory removed")
   }
 
+  test("a removed source's pruned hub targets are deleted with it") {
+    val full = SampleProject.project
+    val cp = new Compiler(full).compile()
+    val shrunk = full.copy(
+      sources = full.sources.filterNot(_.name == "tpch_lineitem"),
+      relations = full.relations.filterNot(r =>
+        Seq(r.sourceName, r.relatedName).contains("tpch_lineitem")),
+      outputs = Nil)
+    val pruned = "enriched_tpch_lineitem__[0-9a-f]{16}"
+    def tables = spark.catalog.listTables().collect().map(_.name).toSeq
+    Seq("materializeDir", "materializeTables").foreach { mode =>
+      val outDir = Files.createTempDirectory("graft_imp_pruned").toString
+      ImportReconciler.reconcileAndCommit(spark, full, outDir)
+      val runner =
+        if (mode == "materializeDir")
+          new Runner(cp, Runners.parquetDir(sfDir), materializeDir = Some(outDir))
+        else new Runner(cp, Runners.parquetDir(sfDir), materializeTables = true)
+      cp.outputs.foreach(co => runner.output(co.output.name))
+      // a name that only starts like a pruned target is another object's
+      Files.createDirectories(Paths.get(outDir, "enriched_tpch_lineitem__keep"))
+      def written = (if (mode == "materializeDir") new java.io.File(outDir).list().toSeq
+                     else tables).filter(_.matches(pruned))
+      assert(written.nonEmpty, s"$mode: no pruned lineitem target was written")
+
+      val r = ImportReconciler.reconcileAndCommit(spark, shrunk, outDir)
+      assert(r.deletedSources == Seq("tpch_lineitem"))
+      assert(written.isEmpty, s"$mode: pruned targets left behind: $written")
+      assert(exists(outDir, "enriched_tpch_lineitem__keep"), s"$mode: unrelated dir removed")
+    }
+  }
+
   test("log commits only after the run: a failed run leaves no phantom version") {
     val outDir = Files.createTempDirectory("graft_imp_commit").toString
     val p1 = ImportReconciler.reconcile(spark, SampleProject.project, outDir)

@@ -261,6 +261,28 @@ class PlannerEdgeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(pruned.count() == 1)
   }
 
+  test("materialized output keeps a partition rule column it does not map") {
+    import spark.implicits._
+    val t = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v")
+    // bucketing applies in table mode only
+    val p = Project(
+      sources = Seq(SourceDef("s", "s_part_rule",
+        Seq(RawAttr("id", LongType), RawAttr("v", StringType)),
+        rules = Seq(RuleDef("par", "[This].id % 2"), RuleDef("bkt", "[This].id % 3")),
+        hubPartitionBy = Seq("par"), hubBucketBy = Seq("bkt"), hubBuckets = 2)),
+      outputs = Seq(OutputDef("o", Seq(OutputCol("id", LongType)),
+        Seq(Channel("s", Seq(Mapping.parse("id id")))))))
+    val cp = new Compiler(p).compile()
+    Seq("materializeDir", "materializeTables").foreach { mode =>
+      val tmp = java.nio.file.Files.createTempDirectory("graftpartrule").toString
+      val runner =
+        if (mode == "materializeDir") new Runner(cp, _ => t, materializeDir = Some(tmp))
+        else new Runner(cp, _ => t, materializeTables = true)
+      val ids = runner.output("o").collect().map(_.getLong(0)).sorted.toSeq
+      assert(ids == Seq(1L, 2L, 3L), s"$mode: $ids")
+    }
+  }
+
   test("non-boolean relation expression surfaces as a relation-named error") {
     import spark.implicits._
     val a = Seq((1L, 2L)).toDF("id", "bid")
