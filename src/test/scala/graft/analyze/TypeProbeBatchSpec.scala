@@ -4,7 +4,7 @@ import graft.core._
 import java.util.concurrent.{Callable, CountDownLatch, Executors}
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.ListenerAccess
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.types._
@@ -36,6 +36,21 @@ class TypeProbeBatchSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def probedExprs(cp: CompiledProject): Int =
     cp.sources.map(_.rules.size).sum + cp.relations.size +
       cp.outputs.map(_.channels.count(_.filter.isDefined)).sum
+
+  /** Spark jobs started while `f` runs. */
+  private def jobsDuring[T](f: => T): (Int, T) = {
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    ListenerAccess.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val out = f
+      ListenerAccess.drain(spark.sparkContext)
+      (jobs.get, out)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 
   /** Root SQL executions started while `f` runs: one per executed query,
     * whether or not it launches a Spark job (a probe over the local
@@ -156,6 +171,14 @@ class TypeProbeBatchSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(types(("a", "st")).isInstanceOf[StructType])
     assert(types(("a", "st_id")) == LongType)
     assert(types(("b", "dbl")) == DoubleType)
+  }
+
+  test("sample project probes in far fewer jobs than expressions") {
+    val cp = new Compiler(graft.SampleProject.project).compile()
+    val exprs = probedExprs(cp)
+    val (jobs, _) = jobsDuring(TypeProbe.checkWithTypes(spark, cp))
+    assert(exprs >= 30, s"sample project has only $exprs probes")
+    assert(jobs * 3 <= exprs, s"$jobs probe jobs for $exprs expressions")
   }
 
   test("sample project probes in under a third as many queries as expressions") {
