@@ -30,25 +30,12 @@ object Bench {
       (System.nanoTime() - t0) / 1e9
     }
 
-    def exec(n: String): Unit =
-      SparkEntry.queries(n)(spark, sfDir).write.format("noop").mode("overwrite").save()
-
-    // Inter-query hygiene (r16, measurement fix — see OPTIMIZATION_r16.md):
-    // several operators materialize shared intermediates with LAZY
-    // localCheckpoints whose blocks are ContextCleaner-owned; the cleaner
-    // only acts on GC (periodicGC default: 30 min — longer than this whole
-    // bench), so blocks from ~600 query executions accumulated and taxed
-    // later passes (measured: warmup −23% while measured passes +8% on the
-    // same binary). Every exec recomputes from parquet by round rules, so
-    // LOCAL-CHECKPOINT blocks from the PREVIOUS exec are garbage — drop
-    // them between queries, OUTSIDE the timed region. Only locally
-    // checkpointed RDDs: the one deliberate cross-query cache (the
-    // memoized IVF assignment, a DataFrame persist) must survive, and
-    // nothing re-reads a dead exec's checkpoint blocks.
-    def dropLeftoverBlocks(): Unit =
-      spark.sparkContext.getPersistentRDDs.values
-        .filter(_.isCheckpointed)
-        .foreach(_.unpersist(blocking = false))
+    // One scope per exec: the blocks a query pins or caches are freed as
+    // its scope exits, outside the timed region, so ~600 executions'
+    // worth never accumulates to tax later passes (ContextCleaner acts
+    // only on GC). The memoized IVF assignment is no scope's and survives.
+    def exec(n: String): Double = graft.core.Materialize.scope(time(
+      SparkEntry.queries(n)(spark, sfDir).write.format("noop").mode("overwrite").save()))
 
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3").toInt.max(1)
     // Optional subset (comma-separated) for targeted scale spot-benches
@@ -67,10 +54,8 @@ object Bench {
     val errors = scala.collection.mutable.ListBuffer.empty[String]
     // pass 0: warmup (codegen, file-index, broadcast caches)
     val warmup = names.map { n =>
-      val t = n -> (try time(exec(n))
+      n -> (try exec(n)
       catch { case e: Throwable => errors += s"$n: ${e.getMessage}"; -1.0 })
-      dropLeftoverBlocks()
-      t
     }.toMap
     // passes 1..N measured; report min — noise only ever adds time.
     // Pass-major order (all queries, then repeat) so a transient system
@@ -78,9 +63,8 @@ object Bench {
     val samples = scala.collection.mutable.Map.empty[String, List[Double]]
       .withDefaultValue(Nil)
     for (p <- 1 to passes; n <- names if warmup(n) >= 0) {
-      val t = try time(exec(n))
+      val t = try exec(n)
       catch { case e: Throwable => errors += s"$n (pass $p): ${e.getMessage}"; -1.0 }
-      dropLeftoverBlocks()
       if (t >= 0) samples(n) = t :: samples(n)
     }
     val results = names.map { n =>

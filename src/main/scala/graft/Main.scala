@@ -132,8 +132,9 @@ object Main {
       val spark = session()
       val cp = new Compiler(YamlLoader.load(projectDir)).compile()
       val runner = new Runner(cp, Runners.parquetDir(dataDir))
-      val result = graft.exec.RelationAudit.audit(cp, runner.hub)
-        .localCheckpoint() // audit twice-consumed (print + gate): run once
+      // audit twice-consumed (print + gate): run once
+      val result = graft.core.Materialize.pin(
+        graft.exec.RelationAudit.audit(cp, runner.hub), eager = true)
       result.show(truncate = false)
       val bad = graft.exec.RelationAudit.hasViolations(result)
       spark.stop()

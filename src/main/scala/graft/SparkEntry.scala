@@ -126,26 +126,12 @@ object SparkEntry {
       }
       sqls.map(_._1).groupBy(depth).toSeq.sortBy(_._1).foreach { case (_, lvl) =>
         val (eager, lazyHubs) = lvl.partition(consumed)
-        if (eager.size <= 1)
-          eager.foreach { name =>
-            s.sql(bySource(name)).localCheckpoint()
-              .createOrReplaceTempView("hub_" + name)
-          }
-        else {
-          // parse+register serially (cheap, needs dep views), checkpoint
-          // concurrently (the expensive blocking jobs)
-          val dfs = eager.map(name => name -> s.sql(bySource(name)))
-          val pool = java.util.concurrent.Executors.newFixedThreadPool(
-            math.min(dfs.size, 4))
-          try {
-            dfs.map { case (name, df) =>
-              pool.submit(new java.util.concurrent.Callable[Unit] {
-                def call(): Unit = df.localCheckpoint()
-                  .createOrReplaceTempView("hub_" + name)
-              })
-            }.foreach(_.get())
-          } finally pool.shutdown()
-        }
+        // parse+register serially (cheap, needs dep views), checkpoint
+        // concurrently (the expensive blocking jobs)
+        val dfs = eager.map(name => name -> s.sql(bySource(name)))
+        graft.core.Pool.all("graft-sql-hub", dfs.map { case (name, df) => () =>
+          graft.core.Materialize.pin(df, eager = true).createOrReplaceTempView("hub_" + name)
+        })
         lazyHubs.foreach { name =>
           s.sql(bySource(name)).createOrReplaceTempView("hub_" + name)
         }
@@ -694,11 +680,11 @@ object SparkEntry {
     "q_semantic_dedup" -> ((s, dir) =>
       Dedup.semanticDedupProbed(ivfIndex(s, dir), probes = 12, threshold = 0.9)),
     // composed cleaning recipe: dedup + quality floor + language filter
-    "q_clean_corpus" -> ((s, dir) => CorpusPipeline.clean(docsParPinned(s, dir))),
+    "q_clean_corpus" -> ((s, dir) => CorpusPipeline.clean(docsPar(s, dir, pinned = true))),
     // near-dup-aware cleaning: only near-dup-component canonicals survive
     // (MinHash closure; oracle = WITH RECURSIVE over the exact pairs,
     // valid because the pair sets are value-equal — see q_minhash_pairs)
-    "q_clean_neardup" -> ((s, dir) => CorpusPipeline.cleanNearDup(docsParPinned(s, dir))),
+    "q_clean_neardup" -> ((s, dir) => CorpusPipeline.cleanNearDup(docsPar(s, dir, pinned = true))),
     // FULL curation chain in one row: Gopher+C4 gates on the planted
     // page (gates read the rendered page; dedup/selection read the raw
     // body — the standard crawl split), exact-dup canonical, MinHash
@@ -706,7 +692,7 @@ object SparkEntry {
     // pins every stage: any drift changes the selected set or its keys.
     "q_curate_corpus" -> ((s, dir) =>
       CorpusPipeline.curate(
-        docsParPinned(s, dir).withColumn("__page", expr(c4Page)),
+        docsPar(s, dir, pinned = true).withColumn("__page", expr(c4Page)),
         col("lang") === "en", k = 100, gateTextCol = "__page")),
     "q_ngram_jaccard" -> ((s, dir) =>
       Dedup.ngramJaccardPairs(docs(s, dir), threshold = 0.5)),
@@ -878,7 +864,7 @@ object SparkEntry {
     // NOTHING at the threshold for this row to stay hash-green
     "q_jaccard_prefix" -> ((s, dir) =>
       Dedup.jaccardPrefixPairs(docs(s, dir), threshold = 0.7,
-        verifyPar = docsFloorPar(s, dir))),
+        verifyPar = floorPar(s, dir))),
     // referential-integrity audit over every star-schema edge; orphan
     // columns are zero on a consistent warehouse (that's the assertion),
     // unreferenced_parent_keys is the non-trivial coverage signal
@@ -1567,7 +1553,8 @@ object SparkEntry {
     * process-lifetime BY DESIGN — the driver harness (Verify/Bench) runs
     * a bounded query set and exits, and one cached assignment per dataset
     * dir is the point of the memoization. A long-lived service embedding
-    * this pattern should evict with `remove(dir).close()`.
+    * this pattern should evict with `remove(dir).close()`. A bare persist,
+    * not `Materialize.cache`, so no query's scope frees it.
     */
   private val ivfIndexes =
     new java.util.concurrent.ConcurrentHashMap[String, graft.operators.Similarity.IvfIndex]()
@@ -1664,51 +1651,38 @@ object SparkEntry {
     * profile scoring) but COSTS 0.3-0.5 s on light or aggregation-bound
     * queries (the 1-partition map side pre-collapses groups maximally
     * before the exchange; a repartition forfeits that and adds a stage).
-    * The partition-count probe is memoized per dataset dir — `df.rdd`
+    * The width is memoized per dataset dir and core count — `df.rdd`
     * materializes a physical plan, too heavy to re-run per pass.
     */
-  private val scanParts =
-    new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-  private def docsPar(s: SparkSession, dir: String): DataFrame =
-    tablePar(s, dir, "documents")
-  /** [[docsPar]] for an arbitrary fixture table (memo key dir/table). */
-  private def tablePar(s: SparkSession, dir: String, table: String): DataFrame = {
-    val df = s.read.parquet(s"$dir/$table.parquet")
-    val cores = s.sparkContext.defaultParallelism
-    val parts = scanParts.computeIfAbsent(s"$dir/$table",
-      _ => df.rdd.getNumPartitions)
-    if (parts >= cores) df else df.repartition(cores)
-  }
-  /** [[docsPar]] plus a lazy-localCheckpoint PIN of the repartitioned raw
-    * rows — for the gate-FILTER chains only (curate/clean): the optimizer
-    * pushes Filters (and with them the whole projection feeding the
-    * filter columns) through a bare Repartition, which sank
-    * q_curate_corpus's entire page-synthesis+gate wave back into the
-    * 1-task scan stage — measured as two 1.2 s single-task jobs (the
-    * subtree has two consumers). Nothing pushes into an RDD scan, so the
-    * heavy per-row work runs ABOVE the floor, parallel, computed once.
-    * NOT used by the pure-projection floor queries: the pin's checkpoint
-    * job costs ~0.1-0.25 s and they have no filter to sink. Blocks are
-    * dropped by the Bench/Verify inter-query hygiene.
+  private val floorWidths =
+    new java.util.concurrent.ConcurrentHashMap[(String, Int), Integer]()
+  /** The floor as a width: the session core count when the documents
+    * fixture has fewer physical partitions than that, else 0. Operators
+    * that take a parallelism knob instead of a repartitioned input (the
+    * jaccardPrefixPairs verify spread) read it directly.
     */
-  private def docsParPinned(s: SparkSession, dir: String): DataFrame = {
-    val df = docs(s, dir)
-    val par = docsFloorPar(s, dir)
-    if (par == 0) df else df.repartition(par).localCheckpoint(false)
-  }
-  /** The scan-floor CONDITION as a width: the session core count when the
-    * documents fixture carries fewer physical partitions than cores (the
-    * single-row-group case [[tablePar]] documents), else 0 — for operators
-    * that take a parallelism KNOB instead of a repartitioned input (the
-    * jaccardPrefixPairs verify spread). Memo key shared with tablePar —
-    * a separate `dir`-keyed entry duplicated the physical-plan
-    * materialization of the very same file (ADVICE r16).
-    */
-  private def docsFloorPar(s: SparkSession, dir: String): Int = {
+  private def floorPar(s: SparkSession, dir: String): Int = {
     val cores = s.sparkContext.defaultParallelism
-    val parts = scanParts.computeIfAbsent(s"$dir/documents",
-      _ => docs(s, dir).rdd.getNumPartitions)
-    if (parts >= cores) 0 else cores
+    floorWidths.computeIfAbsent((dir, cores),
+      _ => if (docs(s, dir).rdd.getNumPartitions >= cores) 0 else cores)
+  }
+  /** The documents fixture spread to [[floorPar]]. `pinned` also pins the
+    * spread rows (lazily) — for the gate-FILTER chains only
+    * (curate/clean): the optimizer pushes Filters (and with them the
+    * whole projection feeding the filter columns) through a bare
+    * Repartition, which sank q_curate_corpus's entire
+    * page-synthesis+gate wave back into the 1-task scan stage — measured
+    * as two 1.2 s single-task jobs (the subtree has two consumers).
+    * Nothing pushes into an RDD scan, so the heavy per-row work runs
+    * ABOVE the floor, parallel, computed once. Not for the
+    * pure-projection floor queries: the pin's checkpoint job costs
+    * ~0.1-0.25 s and they have no filter to sink.
+    */
+  private def docsPar(s: SparkSession, dir: String, pinned: Boolean = false): DataFrame = {
+    val par = floorPar(s, dir)
+    if (par == 0) docs(s, dir)
+    else if (pinned) graft.core.Materialize.pin(docs(s, dir).repartition(par))
+    else docs(s, dir).repartition(par)
   }
   private def docs(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(s"$dir/documents.parquet")

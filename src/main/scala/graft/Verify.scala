@@ -23,19 +23,12 @@ object Verify {
         // parallel; one task then writes the single compare-friendly
         // file (the hash compare sorts rows, so the shuffle's order
         // nondeterminism is immaterial).
-        try fn(spark, sfDir).repartition(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
+        try graft.core.Materialize.scope {
+          fn(spark, sfDir).repartition(1).write.mode("overwrite")
+            .parquet(s"$outDir/$name")
+        } catch { case e: Throwable =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
         }
-        // r16 inter-query hygiene (Bench.dropLeftoverBlocks rationale):
-        // operators' lazy localCheckpoint blocks are dead once the query's
-        // parquet is written; at the sf3/sf10 gates letting 157 queries'
-        // worth accumulate is real memory pressure. The memoized IVF
-        // assignment (a DataFrame persist) is deliberately NOT matched.
-        spark.sparkContext.getPersistentRDDs.values
-          .filter(_.isCheckpointed)
-          .foreach(_.unpersist(blocking = false))
       }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -308,10 +308,12 @@ object TypeProbe {
     * `timestamp` are nullable, as the casts make them. An inline `VALUES`
     * table, not a `UNION ALL` of two selects: Catalyst folds every scalar
     * probe over it on the driver (`ConvertToLocalRelation`), so such a
-    * probe launches no Spark job.
+    * probe launches no Spark job. Registered only when the session does
+    * not already hold a view with this exact plan: each registration is a
+    * command execution of its own, and every probe pass calls this.
     */
-  def ensureDatatypesView(spark: SparkSession): Unit =
-    spark.sql(
+  def ensureDatatypesView(spark: SparkSession): Unit = {
+    val view = spark.sql(
       """SELECT * FROM VALUES
         |  (CAST(-12.34 AS DECIMAL(10,2)), CAST('graft probe row one' AS STRING),
         |   CAST(7 AS INT), CAST(4.25 AS FLOAT), CAST(8.5 AS DOUBLE),
@@ -323,7 +325,11 @@ object TypeProbe {
         |   true, CAST(99999999991 AS BIGINT))
         |  AS t(`decimal`, `string`, `int`, `float`, `double`, `date`, `timestamp`,
         |       `boolean`, `long`)
-        |""".stripMargin).createOrReplaceTempView(ViewName)
+        |""".stripMargin)
+    val held = spark.sessionState.catalog.getRawTempView(ViewName).flatMap(_.plan)
+    if (!held.exists(_.sameResult(view.queryExecution.analyzed)))
+      view.createOrReplaceTempView(ViewName)
+  }
 
   /** Constant exemplar expression for a parameter type
     * (reference: u_datatype_test_expression.sql:33-67 — struct/array

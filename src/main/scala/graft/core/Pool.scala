@@ -10,7 +10,8 @@ import scala.collection.mutable
   * The pool lives for one call. Its threads are created inside the call,
   * so they inherit the caller's Spark local properties (job description,
   * job group) the way any child thread does, and every one of them has
-  * exited when the call returns, whether it succeeded or threw.
+  * exited when the call returns, whether it succeeded or threw. Each
+  * task runs inside the caller's [[Materialize.scope]], if any.
   */
 object Pool {
 
@@ -36,7 +37,9 @@ object Pool {
           }
         })
       try {
-        val futures = tasks.map(t => pool.submit(new Callable[T] { def call(): T = t() }))
+        val scope = Materialize.held
+        val futures = tasks.map(t =>
+          pool.submit(new Callable[T] { def call(): T = Materialize.within(scope)(t()) }))
         futures.map { f =>
           try f.get()
           catch { case e: ExecutionException if e.getCause != null => throw e.getCause }

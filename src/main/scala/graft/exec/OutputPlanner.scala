@@ -281,8 +281,10 @@ final class Runner(
     *                single column to be string-castable; avro requires the
     *                spark-avro module on the classpath)
     *  - `virtual` → temp view
+    *
+    * Everything the run pins or caches is freed when it returns.
     */
-  def run(outDir: String): Unit = {
+  def run(outDir: String): Unit = Materialize.scope {
     buildAllHubs()
     cp.outputs.foreach { co =>
       val df = new OutputPlanner(cp, hub).plan(co)

@@ -291,10 +291,12 @@ final class SourcePlanner(
         val allCols = df.columns.toSeq.map(c => col(q(c)))
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(allCols: _*).orderBy(lit(1))
-        // persisted: `tagged` feeds both the match aggregation and the
-        // rejoin — without it the tag window (a full shuffle) plans twice
-        val tagged = df.withColumn(
-          rid, struct(xxhash64(allCols: _*), row_number().over(w))).persist()
+        // cached: `tagged` feeds both the match aggregation and the
+        // rejoin — without it the tag window (a full shuffle) plans twice.
+        // A cache, not a pin: Runner memoizes hub frames beyond any scope,
+        // and a released cache only recomputes.
+        val tagged = Materialize.cache(df.withColumn(
+          rid, struct(xxhash64(allCols: _*), row_number().over(w))))
         val cond = renderRelation(lastHop, currentBind, attr => q(pfx + attr))
         val aggCols = specs.map(sp => expr(sp.render(a => q(pfx + a))).as(sp.col))
         val matches = tagged

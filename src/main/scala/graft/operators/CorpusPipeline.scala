@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Materialize
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -142,8 +143,8 @@ object CorpusPipeline {
     // eager k-row terminal: one localCheckpoint action consumes the
     // persisted survivor relation's last lazy readers (canonical join +
     // DSIR), then the survivor cache is released before returning
-    val selected = Selection.dsirSample(canon, targetExpr, k, textCol)
-      .localCheckpoint()
+    val selected = Materialize.pin(
+      Selection.dsirSample(canon, targetExpr, k, textCol), eager = true)
     exact.unpersist()
     selected
   }

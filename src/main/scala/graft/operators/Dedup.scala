@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Materialize
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -142,7 +143,7 @@ object Dedup {
     // two consumers (hot-shingle aggregate + index probe) under
     // different exchanges — materialize the exploded shingle relation
     // once ([[minhashPairs]] discipline)
-    val sh = shingleRows(docs, textCol, n).localCheckpoint(false)
+    val sh = Materialize.pin(shingleRows(docs, textCol, n))
     val hot = sh.groupBy("shingle").agg(count(lit(1)).as("__f"))
       .filter(col("__f") > maxShingleFreq)
     val headHot = hot.filter(col("__f") >= headMinFreq)
@@ -246,8 +247,7 @@ object Dedup {
     // sh fans out to the df aggregate + the index join; byDocBase to the
     // prefix index + both verify sides — materialize each once
     // ([[minhashPairs]] discipline)
-    val sh = shingleRows(docs, textCol, n) // doc_id, n_sh, shingle
-      .localCheckpoint(false)
+    val sh = Materialize.pin(shingleRows(docs, textCol, n)) // doc_id, n_sh, shingle
     val df = sh.groupBy("shingle").agg(count(lit(1)).as("__df"))
     val byDocBase = sh.join(df, "shingle")
       .groupBy("doc_id")
@@ -267,7 +267,7 @@ object Dedup {
     // array_intersect verification pipeline. Two measured non-fixes: a
     // round-robin repartition AFTER the attach joins is sunk below by
     // Catalyst (Project/Filter push through bare Repartition — the r16
-    // docsParPinned lesson), and a round-robin spread of byDoc breaks the
+    // pinned-docsPar lesson), and a round-robin spread of byDoc breaks the
     // candidate join's broadcast (its build side loses the size estimate
     // → a 1-task sort-merge stage, 2.9× slower). KEYED repartitions at
     // the two exchanges' own keys pin their width without adding any
@@ -378,11 +378,10 @@ object Dedup {
     // differently-keyed exchange — AQE's stage cache cannot dedupe them,
     // so bare it is computed 3-4x per run (measured: 4 identical
     // shingle-stage jobs inside q_curate_corpus). Materialize it ONCE
-    // (lazy local checkpoint: executor blocks, ContextCleaner-released,
-    // spills to disk at scale) — the guide §8 "fingerprint once, decide
-    // on the proxy" discipline.
-    val sh = shingleBands(docs, textCol, n, numHashes, bands)
-      .localCheckpoint(false)
+    // (lazy pin: executor blocks, freed by the enclosing scope or else
+    // ContextCleaner, spills to disk at scale) — the guide §8
+    // "fingerprint once, decide on the proxy" discipline.
+    val sh = Materialize.pin(shingleBands(docs, textCol, n, numHashes, bands))
     val br = capBandBuckets(bandRowsOf(sh, "doc_id"), maxBandFreq)
     // Band join carries ids only; shingle arrays rejoin for exact-Jaccard
     // verification of the (much smaller) candidate set.
@@ -418,10 +417,8 @@ object Dedup {
     require(numHashes % bands == 0, "numHashes must divide into bands")
     // both signature relations fan out (band rows + verify side) —
     // materialize once each, as in [[minhashPairs]]
-    val shC = shingleBands(corpus, textCol, n, numHashes, bands)
-      .localCheckpoint(false)
-    val shB = shingleBands(batch, textCol, n, numHashes, bands)
-      .localCheckpoint(false)
+    val shC = Materialize.pin(shingleBands(corpus, textCol, n, numHashes, bands))
+    val shB = Materialize.pin(shingleBands(batch, textCol, n, numHashes, bands))
     // the cap applies per side (each window counts within its own frame):
     // candidates per bucket are bounded by maxBandFreq² instead of
     // |batch bucket| × |corpus bucket|
@@ -607,7 +604,7 @@ object Dedup {
     */
   def simhashPairs(
       docs: DataFrame, textCol: String = "text", maxHamming: Int = 8): DataFrame = {
-    val sh = simhash(docs, textCol).localCheckpoint(false)
+    val sh = Materialize.pin(simhash(docs, textCol))
     // one representative per distinct signature; the join back to sh is
     // co-partitioned on simhash with the aggregation's own exchange
     val rep = sh.groupBy(col("simhash")).agg(min(col("doc_id")).as("__rep"))
@@ -650,7 +647,7 @@ object Dedup {
       n: Int = 3): DataFrame = {
     // both pair sides probe the same shingle-set relation — materialize
     // it once ([[minhashPairs]] discipline)
-    val sets = shingleSets(docs, textCol, n).localCheckpoint(false)
+    val sets = Materialize.pin(shingleSets(docs, textCol, n))
     pairs.select("doc_a", "doc_b")
       .join(sets.select(col("doc_id").as("doc_a"), col("__sh").as("sh_a")),
         Seq("doc_a"), "left")
@@ -886,9 +883,6 @@ object Dedup {
       vertices: DataFrame, pairs: DataFrame, maxIterations: Int = 20,
       checkpointDir: Option[String] = None, checkpointEvery: Int = 1): DataFrame = {
     require(checkpointEvery >= 1, "checkpointEvery must be positive")
-    checkpointDir.foreach { d =>
-      Checkpoints.ensureCheckpointDir(vertices.sparkSession.sparkContext, d)
-    }
     // knob parity with pageRank: with a reliable dir, pay the checkpoint
     // write only every `checkpointEvery` rounds. Off-rounds PERSIST
     // (memory+disk) instead of going bare: unlike pageRank's single
@@ -915,28 +909,11 @@ object Dedup {
     // The RELIABLE branch stays EAGER: a lazy reliable checkpoint
     // recomputes the RDD in the separate checkpoint-write job (it is not
     // persisted), so laziness there would double the round's work.
-    def truncate(df: DataFrame, round: Int): DataFrame =
-      if (checkpointDir.isDefined) {
-        if (round % checkpointEvery == 0) df.checkpoint() else df.persist()
-      } else df.localCheckpoint(false)
     def isPersisted(round: Int): Boolean =
       checkpointDir.isDefined && round % checkpointEvery != 0
-    // Round-block release for the LAZY branch (r17, guide §5): round k's
-    // local-checkpoint blocks are dead the moment round k+1's count
-    // materializes (nothing re-reads them — `labels` is rebound to the new
-    // round), but ContextCleaner only frees them on GC, so a
-    // long-converging graph held every round's labels simultaneously.
-    // The blocks ARE the truncated lineage, so this only runs after the
-    // superseding round is materialized — exactly when recomputation can
-    // no longer be asked for. The handle comes off the checkpointed
-    // Dataset's LogicalRDD (the persist lives on the RDD, not in the
-    // CacheManager, so Dataset.unpersist cannot reach it).
-    def releaseLocalBlocks(df: DataFrame): Unit =
-      if (checkpointDir.isEmpty) df.queryExecution.logical match {
-        case r: org.apache.spark.sql.execution.LogicalRDD =>
-          r.rdd.unpersist(blocking = false)
-        case _ => ()
-      }
+    def truncate(df: DataFrame, round: Int): DataFrame =
+      if (isPersisted(round)) df.persist()
+      else Materialize.pin(df, eager = checkpointDir.isDefined, reliableDir = checkpointDir)
     val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
       .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
       .persist()
@@ -950,7 +927,6 @@ object Dedup {
     var iter = 0
     while (!converged && iter < maxIterations) {
       val prev = cur
-      val prevRound = labelsRound
       val neighborMin = edges
         .join(labels.select(col("id").as("dst"), col("component_id").as("__nl")), "dst")
         .groupBy(col("src").as("id"))
@@ -962,8 +938,11 @@ object Dedup {
             .as("component_id"),
           col("component_id").as("__prev")), iter + 1)
       val changed = next.filter(col("component_id") =!= col("__prev")).count()
-      if (isPersisted(prevRound)) prev.unpersist()
-      releaseLocalBlocks(prev)
+      // round k's blocks are dead once round k+1's count has stored its
+      // own (nothing re-reads them: `labels` is rebound to the new round),
+      // but ContextCleaner frees them only on GC, so a long-converging
+      // graph would hold every round's labels at once
+      Materialize.release(prev)
       cur = next
       labels = next.select("id", "component_id")
       labelsRound = iter + 1
@@ -972,7 +951,7 @@ object Dedup {
     }
     edges.unpersist()
     if (isPersisted(labelsRound)) {
-      val terminal = labels.checkpoint()
+      val terminal = Materialize.pin(labels, eager = true, reliableDir = checkpointDir)
       cur.unpersist()
       labels = terminal
     }
@@ -1362,23 +1341,22 @@ object Dedup {
     val dupH = posH.groupBy("__h").agg(count(lit(1)).as("__c"))
       .filter(col("__c") > 1).select("__h")
     val candPos = posH.join(dupH, Seq("__h"), "left_semi")
-    // PERSISTED: candGram has two consumers (the confirm aggregation and
+    // CACHED: candGram has two consumers (the confirm aggregation and
     // the semi-join probe side) whose subtrees cannot share an exchange
     // (agg payload vs raw rows); bare, the whole candidate chain — the
     // docs-text rejoin AND, transitively, two more corpus gram-explode
     // passes — would execute twice. The relation is survivor-sized
     // (duplicated-hash positions only, ∝ dup density, never the corpus),
-    // so caching it is bounded; the blocks are released by Spark's
-    // ContextCleaner once the returned plan is materialized and dropped.
+    // so caching it is bounded. ContextCleaner never frees a CacheManager
+    // entry: the enclosing Materialize.scope does, or else the caller.
     // The remaining double-scan (posH feeding dupH's agg + the probe) is
     // the same accepted hot-set shape as lineDedup/winnowPairs: a
     // scan-bound codegen pass recomputed once beats caching O(corpus
     // chars) rows.
-    val candGram = candPos
+    val candGram = Materialize.cache(candPos
       .join(docs.select(col("doc_id"), col(textCol).as("__text")), Seq("doc_id"))
       .select(col("doc_id"), col("__i"),
-        expr(s"substring(__text, CAST(__i AS INT), $minLen)").as("__gram"))
-      .persist()
+        expr(s"substring(__text, CAST(__i AS INT), $minLen)").as("__gram")))
     val dupGrams = candGram.groupBy("__gram").agg(count(lit(1)).as("__c"))
       .filter(col("__c") > 1).select("__gram")
     val dupPos = candGram.join(dupGrams, Seq("__gram"), "left_semi")
@@ -1452,12 +1430,11 @@ object Dedup {
     // both candidate-join sides read the same sign-projection relation
     // (tables × nBits dot products per vector) — materialize it once
     // (the minhashPairs r16 discipline)
-    val bandRows = Similarity.withSignBuckets(
+    val bandRows = Materialize.pin(Similarity.withSignBuckets(
         embeddings, vecCol, idCol, dim, nBits, tables, seed)
       .withColumn("__n", expr(s"vec_norm(`$vecCol`)"))
       .select(col(idCol), col(vecCol), col("__n"),
-        posexplode(col("__buckets")).as(Seq("__t", "__bucket")))
-      .localCheckpoint(false)
+        posexplode(col("__buckets")).as(Seq("__t", "__bucket"))))
     val bSide = bandRows.select(col(idCol).as("__bid"), col(vecCol).as("__bv"),
       col("__n").as("__bn"), col("__t"), col("__bucket"))
     val aSide =

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Materialize
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -50,11 +51,8 @@ object Graph {
       checkpointDir: Option[String] = None, checkpointEvery: Int = 2): DataFrame = {
     require(iterations >= 1, "at least one iteration")
     require(checkpointEvery >= 1, "checkpointEvery must be positive")
-    checkpointDir.foreach { d =>
-      // the dir is SparkContext-global — see components' scaladoc for the
-      // shared-dir and cleanCheckpoints operational notes
-      Checkpoints.ensureCheckpointDir(nodes.sparkSession.sparkContext, d)
-    }
+    // the dir is SparkContext-global — see components' scaladoc for the
+    // shared-dir and cleanCheckpoints operational notes
     val dir = edges.select(col("id_a").as("src"), col("id_b").as("dst"))
       .unionAll(edges.select(col("id_b").as("src"), col("id_a").as("dst")))
     val deg = dir.groupBy("src").agg(count(lit(1)).as("__deg"))
@@ -71,7 +69,7 @@ object Graph {
           expr("150000L + ((85 * coalesce(__in, 0L)) DIV 100)")
             .as("rank_micro"))
       if (checkpointDir.isDefined && i % checkpointEvery == 0 && i < iterations)
-        rank = rank.checkpoint()
+        rank = Materialize.pin(rank, eager = true, reliableDir = checkpointDir)
     }
     rank
   }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Materialize
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.encoders.RowEncoder
 import org.apache.spark.sql.functions._
@@ -627,7 +628,7 @@ object Multimodal {
     // two consumers (rep aggregate + class join) under different
     // exchanges would re-run the whole decode+dHash pass — materialize
     // it once (the Dedup.minhashPairs r16 discipline)
-    val sh = dHash64(media, idCol, bytesCol).localCheckpoint(false)
+    val sh = Materialize.pin(dHash64(media, idCol, bytesCol))
     // signature-identical collapse (the Dedup.simhashPairs discipline):
     // k byte-identical images — logos, icons, ubiquitous in crawls —
     // share all 4 bands; only ONE representative per distinct dHash

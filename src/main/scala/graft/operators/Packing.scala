@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Materialize
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.encoders.RowEncoder
 import org.apache.spark.sql.functions._
@@ -205,8 +206,6 @@ object Packing {
     require(shardSize > 0, s"shardSize must be positive, got $shardSize")
     val spark = docs.sparkSession
     import spark.implicits._
-    checkpointDir.foreach(d =>
-      Checkpoints.ensureCheckpointDir(spark.sparkContext, d))
     val parts = math.max(1, spark.sessionState.conf.numShufflePartitions)
     val keyed = docs.select(
         col(idCol).cast("long").as("doc_id"),
@@ -234,8 +233,7 @@ object Packing {
       // pin the offsets-consistent result: a downstream replan must not
       // recompute pass 2 against a re-ranged pass-1 (same contract as
       // tokenBudgetSelect)
-      if (checkpointDir.isDefined) planned.checkpoint()
-      else planned.localCheckpoint(true)
+      Materialize.pin(planned, eager = true, reliableDir = checkpointDir)
     } finally keyed.unpersist()
   }
 

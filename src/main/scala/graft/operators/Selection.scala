@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Materialize
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -267,8 +268,6 @@ object Selection {
       idCol: String = "doc_id", checkpointDir: Option[String] = None): DataFrame = {
     require(budget >= 0, s"budget must be non-negative, got $budget")
     val spark = docs.sparkSession
-    checkpointDir.foreach(d =>
-      graft.operators.Checkpoints.ensureCheckpointDir(spark.sparkContext, d))
     import spark.implicits._
     val parts = math.max(1, spark.sessionState.conf.numShufflePartitions)
     val keyed = docs.select(
@@ -295,8 +294,7 @@ object Selection {
         else it.map { case (id, s, t, _) => cum += t; (id, s, t, cum) }
           .takeWhile(_._4 <= budget) // cum is monotone (tokens >= 0)
       }.toDF("doc_id", "score", "n_tokens", "cum_tokens")
-      if (checkpointDir.isDefined) kept.checkpoint()
-      else kept.localCheckpoint(true)
+      Materialize.pin(kept, eager = true, reliableDir = checkpointDir)
     } finally keyed.unpersist()
   }
 

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Materialize
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -1119,7 +1120,14 @@ object TextAnalysis {
       discount: Double = 0.75, headMin: Long = 100000L): DataFrame = {
     require(discount > 0.0 && discount < 1.0, "discount must be in (0,1)")
     val d = s"CAST($discount AS DOUBLE)"
-    val perDoc = docs
+    // materialized once (r17): the type-table consumer and the routed
+    // probe used to share this exchange via AQE's stage cache, but a
+    // checkpointed consumer materializes through its own job and the
+    // probe then re-ran the whole corpus explode stage (profiled: two
+    // identical 0.5 s single-scan jobs per execution). The blocks are
+    // the same (doc, trigram, tf) bytes the exchange already spills to
+    // disk — this just pins ONE corpus pass for all consumers.
+    val perDoc = Materialize.pin(docs
       .filter(col("doc_id").isNotNull)
       .select(col("doc_id"), targetExpr.as("__tgt"),
         expr(s"""concat(array('<s>', '<s>'),
@@ -1131,15 +1139,7 @@ object TextAnalysis {
             |  concat_ws(' ', element_at(__pd, i), element_at(__pd, i + 1),
             |    element_at(__pd, i + 2)))""".stripMargin)).as("token"))
       .groupBy(col("doc_id"), col("__tgt"), col("token"))
-      .agg(count(lit(1)).as("tf_doc"))
-      // materialized once (r17): the type-table consumer and the routed
-      // probe used to share this exchange via AQE's stage cache, but a
-      // checkpointed consumer materializes through its own job and the
-      // probe then re-ran the whole corpus explode stage (profiled: two
-      // identical 0.5 s single-scan jobs per execution). The blocks are
-      // the same (doc, trigram, tf) bytes the exchange already spills to
-      // disk — this just pins ONE corpus pass for all consumers.
-      .localCheckpoint(false)
+      .agg(count(lit(1)).as("tf_doc")))
     // trigram TYPE table over the SCORED corpus: target counts (0 for
     // types the target never saw — they back off) + routing frequency.
     // No filter on __tgt before the agg: the CASE keeps the (doc,
@@ -1155,10 +1155,9 @@ object TextAnalysis {
     // bounded, never corpus-bounded) computes them once. The key
     // projections (__ctx/__tail/__w2/__w3) are derived ABOVE the
     // checkpoint so the stored rows stay narrow.
-    val types = perDoc.groupBy("token").agg(
+    val types = Materialize.pin(perDoc.groupBy("token").agg(
         sum(when(col("__tgt"), col("tf_doc")).otherwise(lit(0L))).as("__c3t"),
-        sum(col("tf_doc")).as("__tf_all"))
-      .localCheckpoint(false)
+        sum(col("tf_doc")).as("__tf_all")))
       .withColumn("__ctx", expr("substring_index(token, ' ', 2)"))
       .withColumn("__tail", expr("substring_index(token, ' ', -2)"))
       .withColumn("__w2", expr("substring_index(substring_index(token, ' ', -2), ' ', 1)"))
@@ -1179,7 +1178,13 @@ object TextAnalysis {
     val w2Stats = midStats.join(folStats, Seq("__w2")) // identical key sets
     val totals = tailStats.agg(count(lit(1)).as("__n1p_all"))
       .crossJoin(unig.agg(count(lit(1)).as("__v1")))
-    val scoredTypes = types
+    // the fitted MODEL, materialized (r17): routedJoin instantiates its
+    // key table TWICE (head filter + tail filter), which re-ran the
+    // whole five-way model join per branch; the checkpointed rows are
+    // the narrow (token, freq, logprob-micro) triple — the train-once /
+    // probe-many discipline of [[graft.operators.Similarity.ivfFit]],
+    // scoped to this query's execution.
+    val scoredTypes = Materialize.pin(types
       .join(ctxStats, Seq("__ctx"), "left")
       .join(tailStats, Seq("__tail"), "left")
       .join(w2Stats, Seq("__w2"), "left")
@@ -1203,14 +1208,7 @@ object TextAnalysis {
            |END""".stripMargin))
       // the ONLY ln in the operator — once per trigram type, micro-quantized
       .select(col("token"), col("__tf_all"),
-        expr("CAST(round(1e6 * ln(__p3)) AS DECIMAL(38,0))").as("__lp_micro"))
-      // the fitted MODEL, materialized (r17): routedJoin instantiates its
-      // key table TWICE (head filter + tail filter), which re-ran the
-      // whole five-way model join per branch; the checkpointed rows are
-      // the narrow (token, freq, logprob-micro) triple — the train-once /
-      // probe-many discipline of [[graft.operators.Similarity.ivfFit]],
-      // scoped to this query's execution.
-      .localCheckpoint(false)
+        expr("CAST(round(1e6 * ln(__p3)) AS DECIMAL(38,0))").as("__lp_micro")))
     routedJoin(perDoc, scoredTypes, "token", "__tf_all", headMin)
       .groupBy("doc_id")
       .agg(

@@ -1047,7 +1047,7 @@ object Events {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    val out = spark.table(name).localCheckpoint()
+    val out = graft.core.Materialize.pin(spark.table(name), eager = true)
     spark.catalog.dropTempView(name)
     scala.util.Try { // best-effort checkpoint cleanup
       java.nio.file.Files.walk(ckDir)

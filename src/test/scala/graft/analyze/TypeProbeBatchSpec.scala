@@ -56,11 +56,15 @@ class TypeProbeBatchSpec extends AnyFunSuite with BeforeAndAfterAll {
     * whether or not it launches a Spark job (a probe over the local
     * `datatypes` relation runs on the driver and launches none).
     */
-  private def queriesDuring[T](f: => T): (Int, T) = {
+  private def queriesDuring[T](f: => T): (Int, T) = executionsDuring(_ => true)(f)
+
+  /** Root SQL executions matching `p` started while `f` runs. */
+  private def executionsDuring[T](p: SparkListenerSQLExecutionStart => Boolean)(f: => T): (Int, T) = {
     val queries = new AtomicInteger
     val listener = new SparkListener {
       override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-        case s: SparkListenerSQLExecutionStart if s.rootExecutionId.forall(_ == s.executionId) =>
+        case s: SparkListenerSQLExecutionStart
+            if s.rootExecutionId.forall(_ == s.executionId) && p(s) =>
           queries.incrementAndGet()
         case _ =>
       }
@@ -209,6 +213,19 @@ class TypeProbeBatchSpec extends AnyFunSuite with BeforeAndAfterAll {
       Row(new java.math.BigDecimal("-8150.99"), "row two", 131, 41.9f, 87.6,
         java.sql.Date.valueOf("2024-02-29"), java.sql.Timestamp.valueOf("2024-02-29 23:19:17"),
         true, 99999999991L)))
+  }
+
+  test("a second probe on the same session creates no datatypes view") {
+    val cp = new Compiler(graft.SampleProject.project).compile()
+    def viewsCreated(): Int = executionsDuring(
+      _.physicalPlanDescription.contains("CreateViewCommand"))(batched(cp))._1
+    spark.catalog.dropTempView("datatypes")
+    assert(viewsCreated() == 1)
+    assert(viewsCreated() == 0)
+    // a view replaced under the same name is not this one
+    spark.range(1).createOrReplaceTempView("datatypes")
+    assert(viewsCreated() == 1)
+    assert(batched(cp) == sequential(cp))
   }
 
   test("two threads probing different projects on one session get their sequential results") {

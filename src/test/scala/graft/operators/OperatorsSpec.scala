@@ -604,16 +604,16 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // a space in the path: java.net.URI rejects it, hadoop Path must not
     val dirA = s"$base/ck a"
     val sibling = s"$base/ck a2" // shares the prefix — the contains() trap
-    Checkpoints.ensureCheckpointDir(sc, dirA)
+    graft.core.Materialize.ensureCheckpointDir(sc, dirA)
     val first = sc.getCheckpointDir
     assert(first.nonEmpty)
     // same plain path again: getCheckpointDir is QUALIFIED (file:/...),
     // so a string/URI compare would re-set here and mint a new UUID dir
-    Checkpoints.ensureCheckpointDir(sc, dirA)
+    graft.core.Materialize.ensureCheckpointDir(sc, dirA)
     assert(sc.getCheckpointDir == first,
       "second ensure with the same dir must be a no-op (set-once contract)")
     // a sibling sharing the prefix MUST re-set (the old substring trap)
-    Checkpoints.ensureCheckpointDir(sc, sibling)
+    graft.core.Materialize.ensureCheckpointDir(sc, sibling)
     assert(sc.getCheckpointDir != first,
       "a different (sibling) dir must re-point the checkpoint dir")
   }
