@@ -86,7 +86,7 @@ object SparkEntry {
     "q_lineitem_enriched_sql" -> ((s, dir) => {
       Seq("region", "nation", "customer", "supplier", "part", "orders", "lineitem")
         .foreach { t =>
-          s.read.parquet(s"$dir/$t.parquet").createOrReplaceTempView(t)
+          graft.core.Parquet.read(s, s"$dir/$t.parquet").createOrReplaceTempView(t)
         }
       val em = new graft.exec.SqlEmitter(compiled)
       val sqls = compiled.sources.map(cs =>
@@ -182,7 +182,7 @@ object SparkEntry {
     // four quantiles are projected to scalar columns (not an ARRAY) so
     // the driver's pandas-based rows-only check can sort the output.
     "q_quantile_sketch" -> ((s, dir) =>
-      s.read.parquet(s"$dir/lineitem.parquet")
+      graft.core.Parquet.read(s, s"$dir/lineitem.parquet")
         .withColumn("price_cents",
           expr("CAST(round(l_extendedprice * 100) AS LONG)"))
         .groupBy("l_returnflag")
@@ -197,7 +197,7 @@ object SparkEntry {
     // bound is 1/accuracy = 1e-4, two orders inside the gate; monotone
     // rank→value makes the exact ±0.01 values a sound envelope)
     "q_quantile_bounds" -> ((s, dir) =>
-      s.read.parquet(s"$dir/lineitem.parquet")
+      graft.core.Parquet.read(s, s"$dir/lineitem.parquet")
         .withColumn("price_cents",
           expr("CAST(round(l_extendedprice * 100) AS LONG)"))
         .groupBy("l_returnflag")
@@ -398,7 +398,7 @@ object SparkEntry {
     // overflows BIGINT past ~sf0.1); r stays a lockstep-derived double.
     "q_grouped_corr" -> ((s, dir) =>
       Stats.groupedCorrelation(
-        s.read.parquet(s"$dir/lineitem.parquet"),
+        graft.core.Parquet.read(s, s"$dir/lineitem.parquet"),
         Seq("l_returnflag"),
         "CAST(round(l_quantity * 100) AS LONG)",
         "CAST(round(l_extendedprice * 100) AS LONG)").selectExpr(
@@ -813,7 +813,7 @@ object SparkEntry {
             "timestamp_seconds(1704067200 + 864000) AS ts")
         graft.streaming.Events.stageChunkedStream(cdcWaves(d) :+ sentinel)
       })
-      val schema = s.read.parquet(staged).schema
+      val schema = graft.core.Parquet.schema(s, staged)
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(staged)
       val winners = graft.streaming.Events.runAvailableNow(s,
@@ -847,7 +847,7 @@ object SparkEntry {
         graft.streaming.Events.stageChunkedStream(
           Seq(waves(1), waves(0), waves(3), waves(2), sentinel))
       })
-      val schema = s.read.parquet(staged).schema
+      val schema = graft.core.Parquet.schema(s, staged)
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(staged)
       val frames = graft.streaming.Events.runAvailableNow(s,
@@ -869,7 +869,7 @@ object SparkEntry {
     // columns are zero on a consistent warehouse (that's the assertion),
     // unreferenced_parent_keys is the non-trivial coverage signal
     "q_ri_audit" -> ((s, dir) => {
-      def t(n: String) = s.read.parquet(s"$dir/$n.parquet")
+      def t(n: String) = graft.core.Parquet.read(s, s"$dir/$n.parquet")
       Integrity.audit(Seq(
         (t("orders"), "o_custkey", t("customer"), "c_custkey",
           "orders->customer"),
@@ -886,7 +886,7 @@ object SparkEntry {
     // every declared key, a composite key, and — deliberately — a
     // NON-unique column (events.user_id) so the dup columns are live
     "q_pk_audit" -> ((s, dir) => {
-      def t(n: String) = s.read.parquet(s"$dir/$n.parquet")
+      def t(n: String) = graft.core.Parquet.read(s, s"$dir/$n.parquet")
       Integrity.pkAuditAll(Seq(
         (t("orders"), Seq("o_orderkey"), "orders(o_orderkey)"),
         (t("customer"), Seq("c_custkey"), "customer(c_custkey)"),
@@ -900,7 +900,7 @@ object SparkEntry {
     // frequency-histogram Gini/p99/top-share numbers that pick between
     // plain hash join, AQE skew split, salting, and hot-set caps
     "q_skew_audit" -> ((s, dir) => {
-      def t(n: String) = s.read.parquet(s"$dir/$n.parquet")
+      def t(n: String) = graft.core.Parquet.read(s, s"$dir/$n.parquet")
       Integrity.skewAuditAll(Seq(
         (events(s, dir), Seq("user_id"), "events(user_id)"),
         (t("lineitem"), Seq("l_orderkey"), "lineitem(l_orderkey)"),
@@ -920,7 +920,7 @@ object SparkEntry {
     // path, rsd-gated in ProfileSpec); int/string columns only so
     // min/max strings render identically cross-engine
     "q_profile" -> ((s, dir) => {
-      def t(n: String) = s.read.parquet(s"$dir/$n.parquet")
+      def t(n: String) = graft.core.Parquet.read(s, s"$dir/$n.parquet")
       Stats.profile(t("orders"),
         Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority"),
         "orders")
@@ -1685,9 +1685,9 @@ object SparkEntry {
     else docs(s, dir).repartition(par)
   }
   private def docs(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
+    graft.core.Parquet.read(s, s"$dir/documents.parquet")
   private def embeds(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/embeddings.parquet")
+    graft.core.Parquet.read(s, s"$dir/embeddings.parquet")
   private def events(s: SparkSession, dir: String): DataFrame =
     graft.streaming.Events.readEvents(s, s"$dir/events.parquet")
 

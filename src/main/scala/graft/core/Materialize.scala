@@ -48,16 +48,44 @@ object Materialize {
   /** Cuts `df`'s lineage: a local checkpoint, or with `reliableDir` a
     * reliable checkpoint written under that directory (set on the
     * SparkContext once, see [[ensureCheckpointDir]]). Lazy pins store
-    * their blocks during the first action that reads them.
+    * their blocks during the first action that reads them. The pin's RDDs
+    * are labelled with the line that called `pin` (see [[asCaller]]).
     */
   def pin(df: DataFrame, eager: Boolean = false,
-      reliableDir: Option[String] = None): DataFrame =
+      reliableDir: Option[String] = None): DataFrame = {
+    val sc = df.sparkSession.sparkContext
     register(reliableDir match {
       case Some(dir) =>
-        ensureCheckpointDir(df.sparkSession.sparkContext, dir)
-        df.checkpoint(eager)
-      case None => df.localCheckpoint(eager)
+        ensureCheckpointDir(sc, dir)
+        asCaller(sc, "checkpoint")(df.checkpoint(eager))
+      case None => asCaller(sc, "localCheckpoint")(df.localCheckpoint(eager))
     })
+  }
+
+  private val CallSiteShort = "callSite.short"
+  private val CallSiteLong = "callSite.long"
+
+  /** Runs `body` with Spark's call site set to `what at <file>:<line>` of
+    * the first stack frame outside this object, then restores the
+    * previous call site. Spark would name this file instead (the first
+    * frame outside its own packages), so every pin in a plan dump, the UI
+    * or a job listener would read `localCheckpoint at Materialize.scala`.
+    */
+  private def asCaller[T](sc: SparkContext, what: String)(body: => T): T = {
+    val self = getClass.getName.stripSuffix("$")
+    val frames = new Throwable().getStackTrace.toSeq.dropWhile { f =>
+      f.getClassName == self || f.getClassName.startsWith(self + "$")
+    }
+    frames.headOption match {
+      case None => body
+      case Some(f) =>
+        val saved = Seq(CallSiteShort, CallSiteLong).map(k => k -> sc.getLocalProperty(k))
+        sc.setLocalProperty(CallSiteShort, s"$what at ${f.getFileName}:${f.getLineNumber}")
+        sc.setLocalProperty(CallSiteLong, frames.take(20).mkString("\n"))
+        try body
+        finally saved.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+    }
+  }
 
   /** Persists `df` (memory and disk) for several readers, keeping its plan
     * so a reader after the release recomputes instead of failing.

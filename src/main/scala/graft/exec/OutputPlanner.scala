@@ -347,15 +347,18 @@ object Runner {
 }
 
 object Runners {
-  /** Reader for a directory of `<table>.parquet` files (the test fixtures).
+  /** Reader for a directory of `<table>.parquet` files (the test fixtures),
+    * through [[graft.core.Parquet.read]]: each table's schema is inferred
+    * once, so a source read costs no schema-merge job after the first.
     * Nanosecond-precision parquet timestamps (events.parquet) are readable
     * only as LONG via the legacy conf; declared timestamp attrs still cast
     * correctly because the fixture's TIMESTAMP(NANOS) column is simply not
-    * declared by any source that uses this reader.
+    * declared by any source that uses this reader. Reads on the active
+    * session, and leaves `spark.sql.legacy.parquet.nanosAsLong` set on it.
     */
   def parquetDir(dir: String): SourceDef => DataFrame = s => {
     val spark = org.apache.spark.sql.SparkSession.active
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.read.parquet(s"$dir/${s.sourceTable}.parquet")
+    Parquet.read(spark, s"$dir/${s.sourceTable}.parquet")
   }
 }

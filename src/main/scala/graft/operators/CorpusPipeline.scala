@@ -129,24 +129,23 @@ object CorpusPipeline {
       .filter(col("gopher_keep") && col("c4_keep"))
       .select(rawCols: _*)
       .withColumn("__h", Dedup.dupHash(textCol))
-    val exact = Dedup.withDupStats(gated, headMinDupes)
+    val exact = Materialize.cache(Dedup.withDupStats(gated, headMinDupes)
       .filter(col("doc_id") === col("canonical_id"))
-      .select(rawCols: _*)
-      .persist()
-    val pairs = Dedup.minhashPairs(exact, textCol, threshold = jaccardThreshold)
-      .select(col("doc_a").as("id_a"), col("doc_b").as("id_b"))
-    val comps = Dedup.components(exact.select(col("doc_id").as("id")), pairs)
-    val canon = exact.join(
-      comps.filter(col("id") === col("component_id"))
-        .select(col("id").as("doc_id")),
-      "doc_id")
-    // eager k-row terminal: one localCheckpoint action consumes the
-    // persisted survivor relation's last lazy readers (canonical join +
-    // DSIR), then the survivor cache is released before returning
-    val selected = Materialize.pin(
-      Selection.dsirSample(canon, targetExpr, k, textCol), eager = true)
-    exact.unpersist()
-    selected
+      .select(rawCols: _*))
+    try {
+      val pairs = Dedup.minhashPairs(exact, textCol, threshold = jaccardThreshold)
+        .select(col("doc_a").as("id_a"), col("doc_b").as("id_b"))
+      val comps = Dedup.components(exact.select(col("doc_id").as("id")), pairs)
+      val canon = exact.join(
+        comps.filter(col("id") === col("component_id"))
+          .select(col("id").as("doc_id")),
+        "doc_id")
+      // eager k-row terminal: one localCheckpoint action consumes the
+      // persisted survivor relation's last lazy readers (canonical join +
+      // DSIR), then the survivor cache is released before returning
+      Materialize.pin(
+        Selection.dsirSample(canon, targetExpr, k, textCol), eager = true)
+    } finally Materialize.release(exact)
   }
 
   /** Snapshot diff: classify every document id across two corpus

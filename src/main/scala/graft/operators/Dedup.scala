@@ -912,47 +912,48 @@ object Dedup {
     def isPersisted(round: Int): Boolean =
       checkpointDir.isDefined && round % checkpointEvery != 0
     def truncate(df: DataFrame, round: Int): DataFrame =
-      if (isPersisted(round)) df.persist()
+      if (isPersisted(round)) Materialize.cache(df)
       else Materialize.pin(df, eager = checkpointDir.isDefined, reliableDir = checkpointDir)
-    val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .persist()
+    val edges = Materialize.cache(
+      pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
+        .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst"))))
     // round 0 has no count of its own; its lazy truncation materializes
     // inside round 1's count job
     var cur = truncate(edges.select(col("src").as("id")).distinct()
       .select(col("id"), col("id").as("component_id")), 0)
     var labels = cur
     var labelsRound = 0
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIterations) {
-      val prev = cur
-      val neighborMin = edges
-        .join(labels.select(col("id").as("dst"), col("component_id").as("__nl")), "dst")
-        .groupBy(col("src").as("id"))
-        .agg(min("__nl").as("__nmin"))
-      val next = truncate(labels
-        .join(neighborMin, Seq("id"), "left")
-        .select(col("id"),
-          least(col("component_id"), coalesce(col("__nmin"), col("component_id")))
-            .as("component_id"),
-          col("component_id").as("__prev")), iter + 1)
-      val changed = next.filter(col("component_id") =!= col("__prev")).count()
-      // round k's blocks are dead once round k+1's count has stored its
-      // own (nothing re-reads them: `labels` is rebound to the new round),
-      // but ContextCleaner frees them only on GC, so a long-converging
-      // graph would hold every round's labels at once
-      Materialize.release(prev)
-      cur = next
-      labels = next.select("id", "component_id")
-      labelsRound = iter + 1
-      converged = changed == 0
-      iter += 1
-    }
-    edges.unpersist()
+    try {
+      var converged = false
+      var iter = 0
+      while (!converged && iter < maxIterations) {
+        val prev = cur
+        val neighborMin = edges
+          .join(labels.select(col("id").as("dst"), col("component_id").as("__nl")), "dst")
+          .groupBy(col("src").as("id"))
+          .agg(min("__nl").as("__nmin"))
+        val next = truncate(labels
+          .join(neighborMin, Seq("id"), "left")
+          .select(col("id"),
+            least(col("component_id"), coalesce(col("__nmin"), col("component_id")))
+              .as("component_id"),
+            col("component_id").as("__prev")), iter + 1)
+        val changed = next.filter(col("component_id") =!= col("__prev")).count()
+        // round k's blocks are dead once round k+1's count has stored its
+        // own (nothing re-reads them: `labels` is rebound to the new round),
+        // but ContextCleaner frees them only on GC, so a long-converging
+        // graph would hold every round's labels at once
+        Materialize.release(prev)
+        cur = next
+        labels = next.select("id", "component_id")
+        labelsRound = iter + 1
+        converged = changed == 0
+        iter += 1
+      }
+    } finally Materialize.release(edges)
     if (isPersisted(labelsRound)) {
       val terminal = Materialize.pin(labels, eager = true, reliableDir = checkpointDir)
-      cur.unpersist()
+      Materialize.release(cur)
       labels = terminal
     }
     vertices.join(labels, Seq("id"), "left")

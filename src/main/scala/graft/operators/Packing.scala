@@ -207,14 +207,13 @@ object Packing {
     val spark = docs.sparkSession
     import spark.implicits._
     val parts = math.max(1, spark.sessionState.conf.numShufflePartitions)
-    val keyed = docs.select(
+    val cached = Materialize.cache(docs.select(
         col(idCol).cast("long").as("doc_id"),
         md5(concat(lit("sh"), col(idCol).cast("string"))).as("shuffle_key"))
       .repartitionByRange(parts, col("shuffle_key").asc, col("doc_id").asc)
-      .sortWithinPartitions(col("shuffle_key").asc, col("doc_id").asc)
-      .as[(Long, String)]
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .sortWithinPartitions(col("shuffle_key").asc, col("doc_id").asc))
     try {
+      val keyed = cached.as[(Long, String)]
       val counts = keyed.mapPartitions { it =>
         var n = 0L; it.foreach(_ => n += 1L)
         Iterator.single((org.apache.spark.TaskContext.getPartitionId(), n))
@@ -234,7 +233,7 @@ object Packing {
       // recompute pass 2 against a re-ranged pass-1 (same contract as
       // tokenBudgetSelect)
       Materialize.pin(planned, eager = true, reliableDir = checkpointDir)
-    } finally keyed.unpersist()
+    } finally Materialize.release(cached)
   }
 
   def packingStats(packed: DataFrame, capacity: Int): DataFrame =

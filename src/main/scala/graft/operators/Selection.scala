@@ -270,16 +270,15 @@ object Selection {
     val spark = docs.sparkSession
     import spark.implicits._
     val parts = math.max(1, spark.sessionState.conf.numShufflePartitions)
-    val keyed = docs.select(
+    val cached = Materialize.cache(docs.select(
         col(idCol).cast("long").as("doc_id"),
         col(scoreCol).cast("long").as("score"),
         col(tokenCol).cast("long").as("n_tokens"),
         md5(concat(lit("tb"), col(idCol).cast("string"))).as("__tie"))
       .repartitionByRange(parts, col("score").desc, col("__tie").asc)
-      .sortWithinPartitions(col("score").desc, col("__tie").asc)
-      .as[(Long, Long, Long, String)]
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .sortWithinPartitions(col("score").desc, col("__tie").asc))
     try {
+      val keyed = cached.as[(Long, Long, Long, String)]
       val sums = keyed.mapPartitions { it =>
         var s = 0L; it.foreach(s += _._3)
         Iterator.single((org.apache.spark.TaskContext.getPartitionId(), s))
@@ -295,7 +294,7 @@ object Selection {
           .takeWhile(_._4 <= budget) // cum is monotone (tokens >= 0)
       }.toDF("doc_id", "score", "n_tokens", "cum_tokens")
       Materialize.pin(kept, eager = true, reliableDir = checkpointDir)
-    } finally keyed.unpersist()
+    } finally Materialize.release(cached)
   }
 
   def dsirSample(

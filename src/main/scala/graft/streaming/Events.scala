@@ -1029,32 +1029,84 @@ object Events {
     * the end); `false` (append) for flatMapGroupsWithState, where rows
     * emit on session close/timeout.
     *
-    * The memory-sink table and its checkpoint dir are dropped before
-    * returning (the result is localCheckpointed off the sink first):
-    * repeated invocations — a bench loop runs every driver query at least
-    * twice — would otherwise pin each run's full result set in driver
-    * memory forever.
+    * The checkpoint goes to a private local temp dir, written without
+    * Hadoop's shell-outs for the whole run (see
+    * [[withLocalCheckpointManager]]); the session's
+    * `spark.sql.streaming.checkpointFileManagerClass` reads as before once
+    * the call returns. The memory-sink table and the checkpoint dir are
+    * dropped before returning, also when the run fails (the result is
+    * pinned off the sink first): repeated invocations — a bench loop runs
+    * every query at least twice — would otherwise keep each run's full
+    * result set in memory.
     */
   def runAvailableNow(
       spark: SparkSession, df: DataFrame, complete: Boolean): DataFrame = {
     val name = s"graft_stream_run_${runCounter.incrementAndGet()}"
     val ckDir = java.nio.file.Files.createTempDirectory("graft_stream_ck")
-    val q = df.writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode(if (complete) OutputMode.Complete() else OutputMode.Append())
-      .option("checkpointLocation", ckDir.toString)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val out = graft.core.Materialize.pin(spark.table(name), eager = true)
-    spark.catalog.dropTempView(name)
-    scala.util.Try { // best-effort checkpoint cleanup
-      java.nio.file.Files.walk(ckDir)
-        .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(p => java.nio.file.Files.deleteIfExists(p))
+    try {
+      withLocalCheckpointManager(spark) {
+        df.writeStream
+          .format("memory")
+          .queryName(name)
+          .outputMode(if (complete) OutputMode.Complete() else OutputMode.Append())
+          .option("checkpointLocation", ckDir.toString)
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .start()
+          .awaitTermination()
+      }
+      graft.core.Materialize.pin(spark.table(name), eager = true)
+    } finally {
+      spark.catalog.dropTempView(name)
+      scala.util.Try { // best-effort checkpoint cleanup
+        java.nio.file.Files.walk(ckDir)
+          .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+          .forEach(p => java.nio.file.Files.deleteIfExists(p))
+      }
     }
-    out
+  }
+
+  private val checkpointManagerKey = "spark.sql.streaming.checkpointFileManagerClass"
+
+  /** Runs in flight per session, with the conf value the first one found. */
+  private val checkpointManagerUsers =
+    new java.util.IdentityHashMap[SparkSession, (Int, Option[String])]
+
+  /** Runs `body` with the session's streaming checkpoints written through
+    * [[LocalCheckpointFileManager]], Spark's plain-FileSystem manager
+    * creating local files and dirs without permission calls. The default
+    * FileContext manager asks for permissions on every create and mkdir
+    * and resolves links on every rename; on a host without native Hadoop
+    * libraries each of those forks `chmod` or `readlink`, about a third of
+    * a small bounded run's wall time. On a local dir the plain manager's
+    * rename is as atomic as FileContext's. It must stay set from
+    * `start()` to the end of the run, because the stream thread creates
+    * its logs and state stores after `start()` returns.
+    *
+    * Overlapping calls on one session share the setting: the first to
+    * enter saves the caller's value (or its absence) and sets the manager,
+    * and the last to leave restores it. A stream another thread starts on
+    * the session meanwhile gets the manager too; off the local file
+    * system it is Spark's plain FileSystem manager.
+    */
+  private[streaming] def withLocalCheckpointManager[A](spark: SparkSession)(body: => A): A = {
+    checkpointManagerUsers.synchronized {
+      val (n, saved) = Option(checkpointManagerUsers.get(spark))
+        .getOrElse((0, spark.conf.getOption(checkpointManagerKey)))
+      if (n == 0) spark.conf.set(checkpointManagerKey, classOf[LocalCheckpointFileManager].getName)
+      checkpointManagerUsers.put(spark, (n + 1, saved))
+    }
+    try body
+    finally checkpointManagerUsers.synchronized {
+      val (n, saved) = checkpointManagerUsers.get(spark)
+      if (n > 1) checkpointManagerUsers.put(spark, (n - 1, saved))
+      else {
+        checkpointManagerUsers.remove(spark)
+        saved match {
+          case Some(v) => spark.conf.set(checkpointManagerKey, v)
+          case None => spark.conf.unset(checkpointManagerKey)
+        }
+      }
+    }
   }
 
   /** Stage a bounded events parquet file into a fresh directory for
@@ -1115,7 +1167,7 @@ object Events {
       // flag — the shape the driver fixtures regenerated to mid-round-8);
       // the sentinel must carry the SAME representation so the staged
       // directory reads under one schema
-      val raw = spark.read.parquet(eventsParquet)
+      val raw = graft.core.Parquet.read(spark, eventsParquet)
       val maxRow = raw.agg(max("ts")).head()
       require(!maxRow.isNullAt(0), s"cannot stage a close sentinel for an " +
         s"empty events source: $eventsParquet")
@@ -1173,11 +1225,14 @@ object Events {
     */
   def readEvents(spark: SparkSession, path: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    normalizeTs(spark.read.parquet(path), path)
+    normalizeTs(graft.core.Parquet.read(spark, path), path)
   }
 
   /** readStream over a parquet file/directory with the events schema.
-    * Same session-conf contract as [[readEvents]].
+    * Same session-conf contract as [[readEvents]]. The schema comes from
+    * [[graft.core.Parquet.schema]], so a staged directory read again
+    * unchanged (the memoized stagings in `SparkEntry`) costs no schema
+    * inference job.
     *
     * `maxFilesPerTrigger` defaults high explicitly: the close-sentinel
     * staging scheme ([[stageStreamDir]]) requires the real events file and
@@ -1192,7 +1247,7 @@ object Events {
   def readEventsStream(spark: SparkSession, path: String,
       maxFilesPerTrigger: Int = 1000000): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(path).schema
+    val schema = graft.core.Parquet.schema(spark, path)
     normalizeTs(spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
       .parquet(path), path)

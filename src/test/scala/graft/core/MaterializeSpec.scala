@@ -3,6 +3,7 @@ package graft.core
 import graft.SparkEntry
 import java.util.concurrent.{Callable, CountDownLatch, Executors, TimeUnit}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
@@ -111,6 +112,19 @@ class MaterializeSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(gotB == expectB)
     } finally pool.shutdown()
     assert((held -- before).isEmpty)
+  }
+
+  test("a pin names its caller as the call site, then restores the previous one") {
+    val sc = spark.sparkContext
+    sc.setCallSite("outer call site")
+    try {
+      val p = Materialize.pin(spark.range(10).toDF("id"))
+      val rdd = p.queryExecution.logical match { case r: LogicalRDD => r.rdd }
+      assert(rdd.toString.contains("localCheckpoint at MaterializeSpec.scala:"), rdd.toString)
+      assert(sc.getLocalProperty("callSite.short") == "outer call site")
+      assert(sc.getLocalProperty("callSite.long") == null)
+      Materialize.release(p)
+    } finally sc.clearCallSite()
   }
 
   test("a pin made outside any scope is left in place") {

@@ -7,6 +7,8 @@ import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import java.nio.file.Files
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import scala.jdk.CollectionConverters._
 
 class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -29,6 +31,90 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     Files.copy(java.nio.file.Paths.get(s"$sfDir/events.parquet"),
       d.resolve("events.parquet"))
     d.toString
+  }
+
+  private val managerKey = "spark.sql.streaming.checkpointFileManagerClass"
+  private val localManager = classOf[LocalCheckpointFileManager].getName
+
+  /** Runs `body` once with the checkpoint-manager conf unset and once with
+    * a caller's own value, restoring the session's value afterwards.
+    */
+  private def forEachCallerValue(body: Option[String] => Unit): Unit = {
+    val saved = spark.conf.getOption(managerKey)
+    try Seq(None, Some("caller.OwnManager")).foreach { v =>
+      v.fold(spark.conf.unset(managerKey))(spark.conf.set(managerKey, _))
+      body(v)
+    } finally saved.fold(spark.conf.unset(managerKey))(spark.conf.set(managerKey, _))
+  }
+
+  test("the checkpoint-manager scope sets the local manager, then restores the caller's value") {
+    forEachCallerValue { v =>
+      val inside = Events.withLocalCheckpointManager(spark)(spark.conf.getOption(managerKey))
+      assert(inside.contains(localManager))
+      assert(spark.conf.getOption(managerKey) == v)
+      intercept[IllegalStateException](Events.withLocalCheckpointManager(spark) {
+        throw new IllegalStateException("boom")
+      })
+      assert(spark.conf.getOption(managerKey) == v, "a failed body left the conf changed")
+    }
+  }
+
+  test("the local checkpoint manager writes, renames and reads files with no .crc side files") {
+    import org.apache.hadoop.fs.Path
+    val dir = Files.createTempDirectory("graft_ckmgr")
+    val m = new LocalCheckpointFileManager(new Path(dir.toString), spark.sparkContext.hadoopConfiguration)
+    val sub = new Path(s"$dir/offsets/nested")
+    m.mkdirs(sub)
+    assert(m.exists(sub))
+    val file = new Path(sub, "0")
+    val out = m.createAtomic(file, overwriteIfPossible = false)
+    out.write("v1\n".getBytes("UTF-8"))
+    out.close()
+    val in = m.open(file)
+    val text = try new String(in.readAllBytes(), "UTF-8") finally in.close()
+    assert(text == "v1\n")
+    val names = Files.walk(dir).iterator().asScala.map(_.getFileName.toString).toSeq
+    assert(names.contains("0"))
+    assert(!names.exists(_.endsWith(".crc")), s"side files written: $names")
+    assert(!names.exists(_.startsWith(".0.")), s"temp file left behind: $names")
+  }
+
+  test("overlapping checkpoint-manager scopes (A in, B in, A out, B out) leave the session as found") {
+    forEachCallerValue { v =>
+      val aIn, bIn, aOut = new CountDownLatch(1)
+      def await(l: CountDownLatch): Unit = assert(l.await(1, TimeUnit.MINUTES))
+      val seen = graft.core.Pool.all("ckpt-scope-test", Seq(
+        () => {
+          Events.withLocalCheckpointManager(spark) { aIn.countDown(); await(bIn) }
+          aOut.countDown()
+          Option.empty[String]
+        },
+        () => {
+          await(aIn)
+          Events.withLocalCheckpointManager(spark) {
+            bIn.countDown(); await(aOut)
+            // A has left, B has not: the manager must still be set
+            spark.conf.getOption(managerKey)
+          }
+        }))
+      assert(seen(1).contains(localManager), s"A's exit reset the conf under B: ${seen(1)}")
+      assert(spark.conf.getOption(managerKey) == v)
+    }
+  }
+
+  Seq(
+    "q_events_hourly_stream" -> "q_events_hourly",
+    "q_funnel_stream" -> "q_funnel",
+    "q_event_transitions_stream" -> "q_event_transitions").foreach { case (stream, batch) =>
+    test(s"$stream equals $batch and leaves the checkpoint-manager conf as it was") {
+      val before = spark.conf.getOption(managerKey)
+      val got = graft.SparkEntry.queries(stream)(spark, sfDir)
+      assert(spark.conf.getOption(managerKey) == before)
+      val want = graft.SparkEntry.queries(batch)(spark, sfDir).select(got.columns.map(col).toSeq: _*)
+      val (g, w) = (got.collect().toSeq, want.collect().toSeq)
+      assert(g.nonEmpty)
+      assert(g.map(_.toString).sorted == w.map(_.toString).sorted)
+    }
   }
 
   test("fixture-schema canary: events.ts is a supported shape and normalizes to TIMESTAMP") {
