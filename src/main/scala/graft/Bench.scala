@@ -1,6 +1,6 @@
 package graft
 
-/** Benchmark main: runs every SparkEntry query once to warm the
+/** Benchmark main: runs every registered query once to warm the
   * JVM/codegen, then `measuredPasses` (default 3) measured passes, and
   * prints ONE JSON line with the per-query MIN across measured passes.
   *
@@ -20,6 +20,12 @@ package graft
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    // Optional subset (comma-separated) for targeted scale spot-benches
+    // (the SCALE.md exponent table's >=5x follow-ups); unset → full suite.
+    // An unknown name fails the run before any query executes.
+    val selected = graft.queries.Queries.select(sys.env.get("SPARK_GRAFT_BENCH_ONLY"))
+    val build = selected.map(q => q.name -> q.build).toMap
+    val names = selected.map(_.name)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = Sessions.local(cpus)
     spark.sparkContext.setLogLevel("ERROR")
@@ -35,22 +41,9 @@ object Bench {
     // worth never accumulates to tax later passes (ContextCleaner acts
     // only on GC). The memoized IVF assignment is no scope's and survives.
     def exec(n: String): Double = graft.core.Materialize.scope(time(
-      SparkEntry.queries(n)(spark, sfDir).write.format("noop").mode("overwrite").save()))
+      build(n)(spark, sfDir).write.format("noop").mode("overwrite").save()))
 
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3").toInt.max(1)
-    // Optional subset (comma-separated) for targeted scale spot-benches
-    // (the SCALE.md exponent table's >=5x follow-ups); unset → full suite.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    // fail LOUDLY on unknown names: a typo'd subset would otherwise bench
-    // nothing and print a clean-looking 0-second artifact
-    only.foreach { o =>
-      val unknown = o -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_BENCH_ONLY names not in SparkEntry.queries: ${unknown.toSeq.sorted.mkString(", ")}")
-    }
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.forall(_.contains(n)))
     val errors = scala.collection.mutable.ListBuffer.empty[String]
     // pass 0: warmup (codegen, file-index, broadcast caches)
     val warmup = names.map { n =>

@@ -14,17 +14,14 @@ object Plans {
     val sfDir = args(0)
     val outDir = args(1)
     val tag = args(2)
+    val selected = graft.queries.Queries.select(args.lift(3))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = Sessions.local(cpus)
     spark.sparkContext.setLogLevel("ERROR")
-    val names =
-      if (args.length > 3) args(3).split(",").map(_.trim).filter(_.nonEmpty).toSeq
-      else SparkEntry.queries.keys.toSeq.sorted
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    names.foreach { n =>
-      val fn = SparkEntry.queries.getOrElse(n,
-        sys.error(s"unknown query $n — not in SparkEntry.queries"))
-      val df = fn(spark, sfDir)
+    selected.foreach { q =>
+      val n = q.name
+      val df = q.build(spark, sfDir)
       // queryExecution.explainString gives the same text explain() prints
       val txt = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)

@@ -13,10 +13,10 @@ object ProfileQuery {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val name = args(1)
+    val fn = graft.queries.Queries.select(Some(name)).head.build
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = Sessions.local(cpus)
     spark.sparkContext.setLogLevel("ERROR")
-    val fn = SparkEntry.queries(name)
 
     def exec(): Unit =
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()

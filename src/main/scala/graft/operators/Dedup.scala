@@ -238,7 +238,7 @@ object Dedup {
         * post-coalesce partitions carrying ~6 MB at sf0.1 — 3.4 s of the
         * query; guide §2.5's blind spot). Callers pass the session core
         * count ONLY when the input's physical partitioning is below it
-        * (the [[graft.SparkEntry]] scan-floor condition) — on a real
+        * (the [[graft.queries.Fixtures.floorPar]] condition) — on a real
         * multi-split corpus the verify stage carries real bytes, AQE sizes
         * it correctly, and the knob stays 0 (plan untouched).
         */

@@ -393,11 +393,6 @@ object Multimodal {
     (n, checksum, meta)
   }
 
-  /** Renamed to [[decodeBytes]] (no longer a stub); kept for source compat. */
-  @deprecated("use decodeBytes — the decode is a real header parser now", "r4")
-  def decodeBytesStub(bytes: Array[Byte]): (Int, Long, (String, Int, Int, Int)) =
-    decodeBytes(bytes)
-
   /** Decode a binary column partition-wise (no shuffle, no Python): the
     * Scala analog of a pandas-UDF `mapInPandas` decode stage.
     */

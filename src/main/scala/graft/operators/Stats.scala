@@ -119,7 +119,7 @@ object Stats {
       // identical association order on both engines: each exact DECIMAL
       // casts to the same nearest double, then the same IEEE ops in the
       // same order give the same bits — keep this expression in lockstep
-      // with the oracle SQL (SparkEntry.q_grouped_corr)
+      // with the oracle SQL (q_grouped_corr in graft.queries.StatsQueries)
       .withColumn("corr",
         expr("""round(
             (CAST(n AS DOUBLE) * CAST(sum_xy AS DOUBLE)
@@ -267,8 +267,8 @@ object Stats {
     val totals = joined.agg(
       sum("n_a").as("__tot_a"), sum("n_b").as("__tot_b"))
     joined.crossJoin(broadcast(totals))
-      // lockstep with the oracle SQL (SparkEntry.q_drift): same casts,
-      // same association order, same rounding
+      // lockstep with the oracle SQL (q_drift in graft.queries.StatsQueries):
+      // same casts, same association order, same rounding
       .withColumn("chi2_term", expr("""round(
           pow(CAST(n_a AS DOUBLE) - (CAST(n_a + n_b AS DOUBLE)
             * CAST(__tot_a AS DOUBLE)

@@ -22,59 +22,26 @@ object TextAnalysis {
   val profiles: Seq[(String, Seq[String])] =
     graft.functions.StopwordProfiles.table
 
-  /** DuckDB mirror of [[withLangPred]]'s per-profile token-hit scores:
-    * `len(list_filter(tk, …)) AS s_<lang>` lines, one per profile —
-    * machine-generated from the SAME table as the engine expression so
-    * the oracle IN-lists cannot drift (`tk` must be the lowercased
-    * non-empty whitespace-token list in scope).
-    */
-  def langScoresDuck: String =
-    profiles.map { case (l, words) =>
-      s"len(list_filter(tk, t -> t IN (${words.map(sqlStr).mkString(",")}))) AS s_$l"
-    }.mkString(",\n              ")
-
-  /** DuckDB mirror of [[withLangPred]]'s argmax CASE (zh codepoint
-    * short-cut, zero-score → 'unknown', table-order tie-break) over the
-    * [[langScoresDuck]] columns.
-    */
-  def langPredCaseDuck: String = {
-    val g = s"greatest(${profiles.map("s_" + _._1).mkString(", ")})"
-    val whens = profiles.map { case (l, _) =>
-      s"WHEN s_$l = $g THEN '$l'"
-    }.mkString("\n               ")
-    s"""CASE WHEN regexp_matches(text, '[\\x{4e00}-\\x{9fff}]') THEN 'zh'
-               WHEN $g = 0 THEN 'unknown'
-               $whens END"""
-  }
-
-  /** DuckDB mirror of [[qualityExpr]]'s all-profile stopword union —
-    * the distinct union in table order, comma-joined quoted literals.
-    */
-  def allStopDuck: String =
-    profiles.flatMap(_._2).distinct.map(sqlStr).mkString(",")
-
   /** The languages the corpus-cleaning recipes recognize by default:
     * every profiled language plus the zh codepoint short-cut.
     */
   def defaultKeepLangs: Seq[String] = profiles.map(_._1) :+ "zh"
 
-  /** [[defaultKeepLangs]] as a DuckDB IN-list. */
-  def keepLangsDuck: String = defaultKeepLangs.map(sqlStr).mkString(",")
-
   /** SQL single-quoted string literal with '' escaping — shadows
     * functions.lit on String args by design (use `flit` for a Column
     * literal). Quote-safe in both Spark SQL and DuckDB, so query terms
     * containing a single quote cannot break or alter the expression.
+    * The one quoting helper: the query families' oracle SQL uses it too.
     */
-  private def sqlStr(s: String): String = "'" + s.replace("'", "''") + "'"
+  def sqlStr(s: String): String = "'" + s.replace("'", "''") + "'"
 
   /** Java's `\s` whitespace class written out explicitly:
     * `[ \t\n\x0B\f\r]`. Java regex `\s` includes U+000B (vertical tab)
     * but DuckDB's RE2 `\s` does not — every cross-engine tokenization
     * pins this exact class on BOTH sides so text containing U+000B
     * cannot diverge the hash gates (engine behavior is byte-identical
-    * to the former `\s`). Oracle mirrors live in SparkEntry's
-    * q_fingerprint / q_dedup_exact / q_clean_corpus / q_curate_corpus /
+    * to the former `\s`). Oracle mirrors live in the graft.queries
+    * families' q_fingerprint / q_dedup_exact / q_clean_corpus / q_curate_corpus /
     * q_domain_stats / q_fineweb_rules SQL.
     */
   /** [[wsClass]]'s members UNBRACKETED — the form safe to interpolate
@@ -1752,27 +1719,6 @@ object TextAnalysis {
       .groupBy("piece").agg(sum("__wf").as("n"))
   }
 
-  /** DuckDB equivalent of [[bpePieceCounts]], generated from the SAME
-    * merge table (the [[bpeOracleSql]] discipline).
-    */
-  def bpePieceOracleSql(
-      merges: Seq[(String, String)] = defaultBpeMerges): String = {
-    val applied = merges.foldLeft(
-      "' ' || array_to_string(string_split(w, ''), ' ') || ' '") {
-      case (acc, (from, to)) => s"replace($acc, ' $from ', ' $to ')"
-    }
-    s"""WITH ws AS (
-        SELECT list_filter(string_split_regex(lower(trim(text)), ' +'),
-          w -> regexp_full_match(w, '[a-z]+')) AS w
-        FROM documents),
-      w1 AS (SELECT unnest(w) AS w FROM ws),
-      wf AS (SELECT w, count(*) AS wf FROM w1 GROUP BY 1),
-      pc AS (
-        SELECT unnest(string_split(trim($applied), ' ')) AS piece, wf
-        FROM wf)
-      SELECT piece, CAST(sum(wf) AS BIGINT) AS n FROM pc GROUP BY 1"""
-  }
-
   /** One BPE TRAINING step — the discovery dual of [[bpeTokenCounts]]'s
     * apply: spell every alphabetic word into symbols, apply the merges
     * learned SO FAR (`merges` — empty for step zero), count adjacent
@@ -1814,90 +1760,6 @@ object TextAnalysis {
       .limit(topN)
   }
 
-  /** DuckDB equivalent of [[bpeMergeCandidates]], generated from the
-    * SAME merge table (the [[bpeOracleSql]] discipline).
-    */
-  def bpeMergeOracleSql(
-      merges: Seq[(String, String)] = Nil, topN: Int = 20): String = {
-    val applied = merges.foldLeft(
-      "' ' || array_to_string(string_split(w, ''), ' ') || ' '") {
-      case (acc, (from, to)) => s"replace($acc, ' $from ', ' $to ')"
-    }
-    s"""WITH ws AS (
-        SELECT list_filter(string_split_regex(lower(trim(text)), ' +'),
-          w -> regexp_full_match(w, '[a-z]+')) AS w
-        FROM documents),
-      w1 AS (SELECT unnest(w) AS w FROM ws),
-      wf AS (SELECT w, count(*) AS wf FROM w1 GROUP BY 1),
-      sym AS (SELECT wf, string_split(trim($applied), ' ') AS s FROM wf),
-      pr AS (
-        SELECT unnest(list_transform(range(1, len(s)),
-          i -> s[i] || ' ' || s[i+1])) AS pair, wf
-        FROM sym WHERE len(s) >= 2),
-      pc AS (SELECT pair, CAST(sum(wf) AS BIGINT) AS n FROM pr GROUP BY 1)
-      SELECT pair, n FROM pc ORDER BY n DESC, pair ASC LIMIT $topN"""
-  }
-
-  /** [[bpeOracleSql]] STAGED for large tables: DuckDB's binder rejects
-    * expressions past 128 recursion depth, so one nested replace chain
-    * caps the oracle near 120 rules — far below a real tokenizer. This
-    * form unnests words to rows and applies the chain in `stageSize`-rule
-    * CTE layers (depth per layer < 128, layers unbounded), re-aggregating
-    * token counts per document — byte-identical semantics to the single
-    * chain, any table size. Used by q_bpe_tokens_large (150 rules).
-    */
-  def bpeOracleSqlStaged(
-      merges: Seq[(String, String)], stageSize: Int = 50): String = {
-    require(stageSize >= 1 && stageSize <= 100,
-      "stageSize must stay below the DuckDB binder depth")
-    val stages = merges.grouped(stageSize).toSeq
-    val ctes = stages.zipWithIndex.map { case (g, i) =>
-      val applied = g.foldLeft("s") {
-        case (acc, (from, to)) => s"replace($acc, ' $from ', ' $to ')"
-      }
-      s"s${i + 1} AS (SELECT doc_id, $applied AS s FROM s$i)"
-    }
-    val last = s"s${stages.length}"
-    s"""WITH ws AS (
-        SELECT doc_id,
-          list_filter(string_split_regex(lower(trim(text)), ' +'),
-            w -> regexp_full_match(w, '[a-z]+')) AS w
-        FROM documents),
-      wx AS (SELECT doc_id, unnest(w) AS w FROM ws),
-      s0 AS (
-        SELECT doc_id,
-          ' ' || array_to_string(string_split(w, ''), ' ') || ' ' AS s
-        FROM wx),
-      ${ctes.mkString(",\n      ")},
-      cnt AS (
-        SELECT doc_id, CAST(sum(len(string_split(trim(s), ' '))) AS BIGINT)
-          AS nb
-        FROM $last GROUP BY 1)
-      SELECT ws.doc_id, CAST(len(ws.w) AS BIGINT) AS n_alpha_words,
-        CAST(coalesce(cnt.nb, 0) AS BIGINT) AS n_bpe_tokens
-      FROM ws LEFT JOIN cnt USING (doc_id)"""
-  }
-
-  /** DuckDB equivalent of [[bpeTokenCounts]], generated from the SAME
-    * merge table so the two expression chains cannot diverge.
-    */
-  def bpeOracleSql(merges: Seq[(String, String)] = defaultBpeMerges): String = {
-    val applied = merges.foldLeft(
-      "' ' || array_to_string(string_split(w, ''), ' ') || ' '") {
-      case (acc, (from, to)) => s"replace($acc, ' $from ', ' $to ')"
-    }
-    s"""WITH ws AS (
-        SELECT doc_id,
-          list_filter(string_split_regex(lower(trim(text)), ' +'),
-            w -> regexp_full_match(w, '[a-z]+')) AS w
-        FROM documents)
-      SELECT doc_id, CAST(len(w) AS BIGINT) AS n_alpha_words,
-        CAST(coalesce(list_sum(list_transform(w,
-          w -> len(string_split(trim($applied), ' ')))), 0) AS BIGINT)
-          AS n_bpe_tokens
-      FROM ws"""
-  }
-
   /** The GPT-2 pre-tokenization pattern (Radford et al. 2019) pinned
     * cross-engine: contractions, optionally space-prefixed letter /
     * digit / punctuation runs, whitespace runs — over lower-cased text
@@ -1922,11 +1784,6 @@ object TextAnalysis {
       "| ?\\p{L}+| ?\\p{N}+" +
       s"| ?[^\\p{L}\\p{N}\\x01$wsChars]+" +
       s"|[$wsChars]+"
-
-  /** [[gpt2SplitPattern]] for a DuckDB string literal: quotes doubled,
-    * backslashes pass through untouched (DuckDB consumes no escapes).
-    */
-  val gpt2SplitPatternDuck: String = gpt2SplitPattern.replace("'", "''")
 
   /** [[gpt2SplitPattern]] for a Spark SQL string literal: backslashes
     * doubled FIRST (the [[wsClassSql]] discipline — Spark's parser
@@ -1999,18 +1856,6 @@ object TextAnalysis {
         "chr(39), 's')").as("text"))
   }
 
-  /** DuckDB mirror of [[syntheticTextMultiFromDocs]] — a source
-    * relation for [[bpeGpt2OracleSqlStaged]], generated from the SAME
-    * [[graft.functions.StopwordProfiles]] table.
-    */
-  def gpt2MultiDocsrcSql: String = {
-    import graft.functions.StopwordProfiles.{langs, sentence}
-    val sentList = langs.map(l => sqlStr(sentence(l))).mkString(",")
-    s"SELECT doc_id, coalesce(text, '') || ' ' || " +
-      s"list_value($sentList)[CAST(doc_id % 10 AS INT) + 1] || " +
-      s"' $gpt2MultiPlant  ' || chr(39) || 's' AS text FROM documents"
-  }
-
   def bpeTokenCountsGpt2(
       docs: DataFrame,
       merges: Seq[(String, String)] = largeBpeMerges,
@@ -2024,57 +1869,6 @@ object TextAnalysis {
         expr(s"CAST(aggregate(__ts, 0, (a, t) -> a + (CASE WHEN " +
           s"t rlike '^ ?\\\\p{L}+$$' THEN size(bpe_encode(ltrim(t), '$table')) " +
           "ELSE 1 END)) AS BIGINT)").as("n_bpe_tokens_gpt2"))
-  }
-
-  /** DuckDB mirror of [[bpeTokenCountsGpt2]]: the SAME sentinel
-    * pre-pass and split pattern (RE2 side), letter runs priced through
-    * the staged replace-chain layers ([[bpeOracleSqlStaged]] binder
-    * discipline), everything else at one token.
-    */
-  def bpeGpt2OracleSqlStaged(
-      merges: Seq[(String, String)] = largeBpeMerges,
-      stageSize: Int = 50,
-      docsrcSql: String = "SELECT doc_id, text FROM documents"): String = {
-    require(stageSize >= 1 && stageSize <= 100,
-      "stageSize must stay below the DuckDB binder depth")
-    val stages = merges.grouped(stageSize).toSeq
-    val ctes = stages.zipWithIndex.map { case (g, i) =>
-      val applied = g.foldLeft("s") {
-        case (acc, (from, to)) => s"replace($acc, ' $from ', ' $to ')"
-      }
-      s"s${i + 1} AS (SELECT doc_id, $applied AS s FROM s$i)"
-    }
-    val last = s"s${stages.length}"
-    s"""WITH docsrc AS ($docsrcSql),
-      pre AS (
-        SELECT doc_id,
-          regexp_replace(replace(lower(coalesce(text, '')), chr(1), ''),
-            '$gpt2PreRegex', '\\1' || chr(1) || '\\2\\3', 'g') AS p
-        FROM docsrc),
-      tok AS (
-        SELECT doc_id, regexp_extract_all(p, '$gpt2SplitPatternDuck') AS ts
-        FROM pre),
-      base AS (
-        SELECT doc_id, CAST(len(ts) AS BIGINT) AS n_pretokens,
-          CAST(len(list_filter(ts,
-            t -> NOT regexp_full_match(t, ' ?\\p{L}+'))) AS BIGINT) AS n_other
-        FROM tok),
-      wx AS (
-        SELECT doc_id, ltrim(t, ' ') AS w
-        FROM (SELECT doc_id, unnest(ts) AS t FROM tok)
-        WHERE regexp_full_match(t, ' ?\\p{L}+')),
-      s0 AS (
-        SELECT doc_id,
-          ' ' || array_to_string(string_split(w, ''), ' ') || ' ' AS s
-        FROM wx),
-      ${ctes.mkString(",\n      ")},
-      cnt AS (
-        SELECT doc_id, CAST(sum(len(string_split(trim(s), ' '))) AS BIGINT)
-          AS nb
-        FROM $last GROUP BY 1)
-      SELECT b.doc_id, b.n_pretokens,
-        CAST(b.n_other + coalesce(cnt.nb, 0) AS BIGINT) AS n_bpe_tokens_gpt2
-      FROM base b LEFT JOIN cnt USING (doc_id)"""
   }
 
   /** HTML → text extraction ([[graft.functions.HtmlExtractImpl]] — the
@@ -2232,74 +2026,5 @@ object TextAnalysis {
            |    concat('<p>', ${esc("l")}, '</p>')), ''),
            |  '<div class="footer">&copy; 2031 example site</div></body></html>')"""
           .stripMargin).as("html"))
-  }
-
-  /** DuckDB oracle for q_html_extract_multi — generated from the SAME
-    * [[graft.functions.StopwordProfiles]] table as the engine kernel
-    * (plant literals + per-line arithmetic with the stop count
-    * dispatched by the same doc_id%10 CASE; no HTML parser, same
-    * no-drift guarantee as [[bpeOracleSql]]).
-    */
-  def htmlMultiOracleSql: String = {
-    import graft.functions.StopwordProfiles.{table, langs, sentence}
-    val langList = langs.map(sqlStr).mkString(",")
-    val sentList = langs.map(l => sqlStr(sentence(l))).mkString(",")
-    val stopsCase = table.zipWithIndex.map { case ((_, words), i) =>
-      s"WHEN $i THEN CAST(len(list_filter(ws, x -> lower(x) IN " +
-        s"(${words.map(sqlStr).mkString(",")}))) AS BIGINT)"
-    }.mkString("\n          ")
-    s"""WITH raw AS (
-        SELECT doc_id,
-          CAST(doc_id % 10 AS INT) AS pm,
-          list_value($langList)[CAST(doc_id % 10 AS INT) + 1] AS lang,
-          list_value($sentList)[CAST(doc_id % 10 AS INT) + 1] AS s_keep,
-          list_value($sentList)[CASE WHEN doc_id % 10 = 0 THEN 2 ELSE 1 END] AS s_x,
-          coalesce(text, '') AS text
-        FROM documents),
-      lx AS (SELECT doc_id, string_split(text, chr(10)) AS ls FROM raw),
-      l AS (
-        SELECT doc_id, u.i - 1 AS i,
-          trim(ls[u.i], ' ' || chr(9) || chr(11) || chr(12) || chr(13)) AS t
-        FROM lx, unnest(generate_series(1, len(ls))) AS u(i)),
-      lc AS (
-        SELECT l.doc_id, l.i, l.t, r.pm,
-          CAST(length(l.t) AS BIGINT) AS nc,
-          list_filter(regexp_split_to_array(l.t, '[ \\t\\n\\x0B\\f\\r]+'),
-            x -> x != '') AS ws
-        FROM l JOIN raw r USING (doc_id) WHERE l.t != ''),
-      lk AS (
-        SELECT doc_id, i, t, nc,
-          CAST(len(ws) AS BIGINT) AS words,
-          CASE pm
-          $stopsCase
-          END AS stops
-        FROM lc),
-      lk2 AS (
-        SELECT doc_id, i, t, nc,
-          (nc >= 25 AND (stops * 1000 >= 100 * words OR nc >= 200)) AS keep
-        FROM lk),
-      agg AS (
-        SELECT doc_id,
-          CAST(count(*) AS BIGINT) AS nb,
-          CAST(sum(nc) AS BIGINT) AS line_chars,
-          CAST(sum(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT) AS nk,
-          CAST(coalesce(sum(CASE WHEN keep THEN nc END), 0) AS BIGINT)
-            AS kept_chars,
-          coalesce(string_agg(CASE WHEN keep THEN t END, chr(10) ORDER BY i),
-            '') AS kept_text
-        FROM lk2 GROUP BY 1)
-      SELECT r.doc_id, r.lang,
-        CASE WHEN coalesce(a.kept_text, '') = '' THEN r.s_keep
-             ELSE r.s_keep || chr(10) || a.kept_text END AS text_extracted,
-        CAST(5 + coalesce(a.nb, 0) AS INTEGER) AS n_blocks,
-        CAST(1 + coalesce(a.nk, 0) AS INTEGER) AS n_kept,
-        CAST(length('d' || CAST(r.doc_id AS VARCHAR))
-          + length('home page link about the team pages contact and support desk')
-          + length(r.s_keep) + length(r.s_x)
-          + length('&copy; 2031 example site')
-          + coalesce(a.line_chars, 0) AS BIGINT) AS chars_raw,
-        CAST(length(r.s_keep) + coalesce(a.kept_chars, 0) AS BIGINT) AS chars_kept,
-        CAST(50 AS BIGINT) AS link_chars
-      FROM raw r LEFT JOIN agg a USING (doc_id)"""
   }
 }

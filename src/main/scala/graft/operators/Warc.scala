@@ -42,19 +42,19 @@ object Warc {
   // (the plant-contract discipline: the engine parses real bytes, the
   // oracle recomputes expected outputs from the generation contract).
 
-  private[operators] val p1a = "<html><head><title>d"
-  private[operators] val p1b = "</title></head><body>"
-  private[operators] val linkTexts =
+  private[graft] val p1a = "<html><head><title>d"
+  private[graft] val p1b = "</title></head><body>"
+  private[graft] val linkTexts =
     Seq("home page link", "about the team pages", "contact and support desk")
-  private[operators] val navHtml =
+  private[graft] val navHtml =
     "<div class=\"nav\"><a href=\"/a\">" + linkTexts(0) +
       "</a> <a href=\"/about\">" + linkTexts(1) +
       "</a> <a href=\"/contact\">" + linkTexts(2) + "</a></div>"
-  private[operators] val navText = linkTexts.mkString(" ")
-  private[operators] val footerText = "&copy; 2031 example site"
-  private[operators] val footerHtml =
+  private[graft] val navText = linkTexts.mkString(" ")
+  private[graft] val footerText = "&copy; 2031 example site"
+  private[graft] val footerHtml =
     "<div class=\"footer\">" + footerText + "</div></body></html>"
-  private[operators] def enSentence: String =
+  private[graft] def enSentence: String =
     graft.functions.StopwordProfiles.sentence("en")
 
   private def esc(s: String): String =
@@ -66,7 +66,7 @@ object Warc {
     * (entity-escaped; kept by the standard length+stopword rules), the
     * short footer (drops: length).
     */
-  private[operators] def pageHtml(id: Long, text: String): String = {
+  private[graft] def pageHtml(id: Long, text: String): String = {
     val sb = new java.lang.StringBuilder()
     sb.append(p1a).append(id).append(p1b).append(navHtml)
     sb.append("<p>").append(enSentence).append("</p>")
@@ -376,103 +376,5 @@ object Warc {
         col("__hx.chars_kept").as("chars_kept"),
         col("__hx.link_chars").as("link_chars"))
   }
-
-  // ------------------------------------------------------------- oracle
-
-  /** DuckDB oracle for q_warc_extract, GENERATED from the same page
-    * literals and [[graft.functions.StopwordProfiles]] en row as the
-    * fixture (plant-contract discipline — the oracle recomputes every
-    * field from doc_id arithmetic and the raw text, no WARC/HTML
-    * parsing). Line extraction arithmetic mirrors the proven
-    * q_html_extract_multi oracle.
-    */
-  def warcOracleSql: String = {
-    val enS = enSentence
-    val enList = graft.functions.StopwordProfiles.table.head._2
-      .map(w => "'" + w + "'").mkString(",")
-    // payload char length: fixed page chrome + title digits + per-line
-    // <p></p> wrapper and entity-escape growth
-    val fixedPayload = p1a.length + p1b.length + navHtml.length +
-      7 + enS.length + footerHtml.length
-    val charsRawFixed = 1 + navText.length + enS.length + footerText.length
-    // link_chars counts NON-WHITESPACE chars inside anchors
-    val linkChars = linkTexts.map(_.count(c => !c.isWhitespace)).sum
-    val g = "d.doc_id % 11 = 4"
-    s"""WITH lx AS (
-        SELECT doc_id, string_split(coalesce(text, ''), chr(10)) AS ls
-        FROM documents),
-      l AS (
-        SELECT doc_id, u.i AS i, ls[u.i] AS raw
-        FROM lx, unnest(generate_series(1, len(ls))) AS u(i)),
-      lt AS (
-        SELECT doc_id, i, raw,
-          trim(raw, ' ' || chr(9) || chr(11) || chr(12) || chr(13)) AS t
-        FROM l),
-      pay AS (
-        SELECT doc_id,
-          CAST($fixedPayload + length(CAST(doc_id AS VARCHAR))
-            + sum(7 + length(raw)
-              + 4 * (length(raw) - length(replace(raw, '&', '')))
-              + 3 * (length(raw) - length(replace(raw, '<', '')))
-              + 3 * (length(raw) - length(replace(raw, '>', ''))))
-            AS BIGINT) AS payload_chars
-        FROM lt GROUP BY doc_id),
-      lc AS (
-        SELECT doc_id, i, t, CAST(length(t) AS BIGINT) AS nc,
-          list_filter(regexp_split_to_array(t, '[ \\t\\n\\x0B\\f\\r]+'),
-            x -> x != '') AS ws
-        FROM lt WHERE t != ''),
-      lk AS (
-        SELECT doc_id, i, t, nc, CAST(len(ws) AS BIGINT) AS words,
-          CAST(len(list_filter(ws, x -> lower(x) IN ($enList)))
-            AS BIGINT) AS stops
-        FROM lc),
-      lk2 AS (
-        SELECT doc_id, i, t, nc,
-          (nc >= 25 AND (stops * 1000 >= 100 * words OR nc >= 200)) AS keep
-        FROM lk),
-      agg AS (
-        SELECT doc_id,
-          CAST(count(*) AS BIGINT) AS nb,
-          CAST(sum(nc) AS BIGINT) AS line_chars,
-          CAST(sum(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT) AS nk,
-          CAST(coalesce(sum(CASE WHEN keep THEN nc END), 0) AS BIGINT)
-            AS kept_chars,
-          coalesce(string_agg(CASE WHEN keep THEN t END, chr(10) ORDER BY i),
-            '') AS kept_text
-        FROM lk2 GROUP BY 1)
-      SELECT d.doc_id,
-        CAST(CASE WHEN $g THEN 0 ELSE 4 END AS INTEGER) AS n_records,
-        CAST(CASE WHEN $g THEN 0 ELSE 1 END AS INTEGER) AS n_responses,
-        CAST(CASE WHEN $g THEN 0 ELSE 1 END AS INTEGER) AS n_requests,
-        CAST(CASE WHEN $g THEN 0 WHEN d.doc_id % 5 = 0 THEN 1 ELSE 0 END
-          AS INTEGER) AS n_truncated,
-        CAST(CASE WHEN $g THEN 0 WHEN d.doc_id % 3 = 0 THEN 1 ELSE 0 END
-          AS INTEGER) AS n_gzip,
-        CAST(CASE WHEN $g THEN NULL WHEN d.doc_id % 7 = 1 THEN 404
-          ELSE 200 END AS INTEGER) AS http_status,
-        CASE WHEN $g THEN NULL ELSE 'text/html; charset=utf-8' END
-          AS content_type,
-        CASE WHEN $g THEN NULL
-          ELSE 'http://example.com/doc/' || CAST(d.doc_id AS VARCHAR) END
-          AS target_uri,
-        CASE WHEN $g THEN NULL ELSE p.payload_chars END AS payload_chars,
-        CASE WHEN $g THEN NULL
-          WHEN coalesce(a.kept_text, '') = '' THEN '$enS'
-          ELSE '$enS' || chr(10) || a.kept_text END AS text_extracted,
-        CAST(CASE WHEN $g THEN NULL ELSE 4 + coalesce(a.nb, 0) END
-          AS INTEGER) AS n_blocks,
-        CAST(CASE WHEN $g THEN NULL ELSE 1 + coalesce(a.nk, 0) END
-          AS INTEGER) AS n_kept,
-        CAST(CASE WHEN $g THEN NULL
-          ELSE $charsRawFixed + length(CAST(d.doc_id AS VARCHAR))
-            + coalesce(a.line_chars, 0) END AS BIGINT) AS chars_raw,
-        CAST(CASE WHEN $g THEN NULL
-          ELSE ${enS.length} + coalesce(a.kept_chars, 0) END AS BIGINT)
-          AS chars_kept,
-        CAST(CASE WHEN $g THEN NULL ELSE $linkChars END AS BIGINT)
-          AS link_chars
-      FROM documents d LEFT JOIN pay p USING (doc_id)
-        LEFT JOIN agg a USING (doc_id)"""
-  }
 }
+

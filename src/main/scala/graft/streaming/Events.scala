@@ -716,18 +716,38 @@ object Events {
     val dir = java.nio.file.Files.createTempDirectory("graft_chunk_src")
     val base = System.currentTimeMillis()
     chunks.zipWithIndex.foreach { case (df, i) =>
-      val tmp = java.nio.file.Files.createTempDirectory(s"graft_chunk$i").resolve("out")
-      df.coalesce(1).write.parquet(tmp.toString)
-      val part = Option(new java.io.File(tmp.toString).listFiles()).get
-        .find(_.getName.endsWith(".parquet"))
-        .getOrElse(sys.error(s"no part file written under $tmp"))
       val dest = dir.resolve(f"chunk_$i%02d.parquet")
-      java.nio.file.Files.copy(part.toPath, dest)
+      writeOneFile(df, s"graft_chunk$i", dest)
       require(dest.toFile.setLastModified(base + i * 2000L),
         s"cannot sequence modification time of $dest")
     }
     dir.toString
   }
+
+  /** Writes `df` as ONE parquet file at `dest`, through a temp write dir
+    * named after `prefix` that is deleted before returning, also when the
+    * write fails.
+    */
+  private def writeOneFile(df: DataFrame, prefix: String,
+      dest: java.nio.file.Path): Unit = {
+    val tmp = java.nio.file.Files.createTempDirectory(prefix)
+    try {
+      val out = tmp.resolve("out")
+      df.coalesce(1).write.parquet(out.toString)
+      val part = Option(out.toFile.listFiles()).getOrElse(Array.empty[java.io.File])
+        .find(_.getName.endsWith(".parquet"))
+        .getOrElse(sys.error(s"no part file written under $out"))
+      java.nio.file.Files.copy(part.toPath, dest)
+    } finally deleteTree(tmp)
+  }
+
+  /** Best-effort recursive delete of a temp dir this module made. */
+  private def deleteTree(dir: java.nio.file.Path): Unit =
+    scala.util.Try {
+      java.nio.file.Files.walk(dir)
+        .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+        .forEach(p => java.nio.file.Files.deleteIfExists(p))
+    }
 
   /** Streaming form of [[graft.operators.Features.rollingEventFeatures]]:
     * per-event trailing-window count/sum plus previous-event lag/gap,
@@ -1057,11 +1077,7 @@ object Events {
       graft.core.Materialize.pin(spark.table(name), eager = true)
     } finally {
       spark.catalog.dropTempView(name)
-      scala.util.Try { // best-effort checkpoint cleanup
-        java.nio.file.Files.walk(ckDir)
-          .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(p => java.nio.file.Files.deleteIfExists(p))
-      }
+      deleteTree(ckDir)
     }
   }
 
@@ -1188,13 +1204,7 @@ object Events {
           lit("__close").as("event_type"),
           lit(0.0).as("value"),
           lit(null).cast("string").as("props"))
-      val tmpOut = java.nio.file.Files.createTempDirectory("graft_sentinel")
-        .resolve("out").toString
-      sentinels.coalesce(1).write.parquet(tmpOut)
-      val part = new java.io.File(tmpOut).listFiles()
-        .find(_.getName.endsWith(".parquet"))
-        .getOrElse(sys.error("sentinel parquet not written"))
-      java.nio.file.Files.copy(part.toPath, dir.resolve("zz_sentinel.parquet"))
+      writeOneFile(sentinels, "graft_sentinel", dir.resolve("zz_sentinel.parquet"))
     }
     dir.toString
   }
@@ -1231,7 +1241,7 @@ object Events {
   /** readStream over a parquet file/directory with the events schema.
     * Same session-conf contract as [[readEvents]]. The schema comes from
     * [[graft.core.Parquet.schema]], so a staged directory read again
-    * unchanged (the memoized stagings in `SparkEntry`) costs no schema
+    * unchanged (the memoized stagings in `graft.queries.Fixtures`) costs no schema
     * inference job.
     *
     * `maxFilesPerTrigger` defaults high explicitly: the close-sentinel

@@ -145,7 +145,7 @@ class TypeProbeBatchSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("batched probe matches the per-expression path on the sample, YAML and mixed projects") {
     Seq(
       "sample" -> new Compiler(graft.SampleProject.project).compile(),
-      "runtime YAML" -> graft.SparkEntry.yamlCompiled,
+      "runtime YAML" -> graft.queries.Fixtures.yamlCompiled,
       "mixed" -> compiled(mixed),
       "deep chain" -> compiled(deepChain)).foreach { case (name, cp) =>
       val expected = sequential(cp)

@@ -4,7 +4,7 @@ import graft.analyze.Compiler
 import org.apache.spark.sql.SparkSession
 
 /** Sub-JVM probe for the Spark InlineCTE miscompile that forces the
-  * localCheckpoint workaround in SparkEntry q_lineitem_enriched_sql.
+  * localCheckpoint workaround in q_lineitem_enriched_sql (graft.queries.HubQueries).
   *
   * The miscompile (PLAN_VALIDATION_FAILED_RULE_IN_BATCH: InlineCTE
   * "resolved became unresolved" on deeply nested CTE+lateral view trees)
@@ -19,7 +19,7 @@ import org.apache.spark.sql.SparkSession
   *
   *   2 = documented miscompile (workaround still needed)
   *   0 = nested form compiles AND matches the planner (Spark fixed it —
-  *       drop the workaround in SparkEntry q_lineitem_enriched_sql)
+  *       drop the workaround in HubQueries q_lineitem_enriched_sql)
   *   3 = nested form runs but DIVERGES from the planner (worst case)
   *   1 = unrecognized error (investigate)
   *

@@ -122,7 +122,7 @@ class SqlEmitterSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("InlineCTE canary: sub-JVM probe of the nested hub SQL (SparkEntry localCheckpoint workaround)") {
-    // The InlineCTE miscompile that forces SparkEntry
+    // The InlineCTE miscompile that forces HubQueries
     // q_lineitem_enriched_sql to localCheckpoint() each hub view only
     // reproduces in a PRISTINE JVM (the Verify/Bench path): after any
     // unrelated plan has executed in the same JVM — as in this shared

@@ -73,9 +73,9 @@ object BpeEncodePropSpec extends Properties("functions.BpeEncode") {
     * past the hash-gated q_bpe_tokens_large) runs through bpe_encode and
     * matches a plain-Scala replace-chain reference word for word. The
     * DuckDB oracle is excluded at this size BY COST, not parseability —
-    * bpeOracleSqlStaged parses any table, but 200 staged CTE layers over
-    * the corpus is an oracle-runtime budget the driver gate doesn't buy;
-    * the semantics are pinned here instead.
+    * graft.queries.TokenQueries.bpeOracleSqlStaged parses any table, but
+    * 200 staged CTE layers over the corpus is an oracle-runtime budget the
+    * driver gate doesn't buy; the semantics are pinned here instead.
     */
   property("10k-rule table: bpe_encode matches the plain-Scala chain") = {
     import spark.implicits._

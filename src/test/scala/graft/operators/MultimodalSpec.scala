@@ -8,7 +8,7 @@ import org.scalatest.BeforeAndAfterAll
 /** Multimodal decode: real container-format header parsing (PNG/APNG,
   * JPEG, GIF, WAV — tiny real byte fixtures built from the published
   * layouts), the `F!` fixture contract, rolling checksum, frame sampling
-  * bounds. The decode oracle in SparkEntry covers the SQL-derivable
+  * bounds. The decode oracle in graft.queries.MediaQueries covers the SQL-derivable
   * features; the real-format branches and the checksum are pinned here.
   */
 class MultimodalSpec extends AnyFunSuite with BeforeAndAfterAll {

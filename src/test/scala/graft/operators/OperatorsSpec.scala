@@ -1245,9 +1245,9 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // fail here instead
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val vocab = TextAnalysis.vocabulary(docs)
-      .filter(col("token").isin(graft.SparkEntry.fuzzyBases: _*))
+      .filter(col("token").isin(graft.queries.TokenQueries.fuzzyBases: _*))
       .collect().map(r => r.getAs[String]("token") -> r.getAs[Long]("tf")).toMap
-    graft.SparkEntry.fuzzyBases.foreach { w =>
+    graft.queries.TokenQueries.fuzzyBases.foreach { w =>
       assert(vocab.getOrElse(w, 0L) >= 10L,
         s"base '$w' has freq ${vocab.getOrElse(w, 0L)} < canonMin at sf0.001")
     }

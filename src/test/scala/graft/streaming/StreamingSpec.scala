@@ -1177,4 +1177,28 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(perDoc.filter(col("n") > 4).count() == 0)
     assert(frames.filter(expr("frame_index >= meta.n_frames")).count() == 0)
   }
+
+  /** Names in the temp dir that start with a match of `prefix`. */
+  private def tmpEntries(prefix: String): Set[String] = {
+    val re = prefix.r
+    Option(new java.io.File(System.getProperty("java.io.tmpdir")).list())
+      .getOrElse(Array.empty[String])
+      .filter(n => re.findPrefixOf(n).isDefined).toSet
+  }
+
+  test("sentinel and chunked staging delete their temp write dirs") {
+    val writeDirs = "graft_sentinel|graft_chunk[0-9]"
+    val before = tmpEntries(writeDirs)
+    Events.stageStreamDir(spark, s"$sfDir/events.parquet", closeSentinel = true)
+    Events.stageChunkedStream(Seq(events.limit(5), events.limit(3)))
+    assert(tmpEntries(writeDirs) == before)
+  }
+
+  test("q_stream_dedup stages its doubled source once per dataset") {
+    val query = graft.SparkEntry.queries("q_stream_dedup")
+    query(spark, sfDir).count()
+    val staged = tmpEntries("graft_stream_src")
+    query(spark, sfDir).count()
+    assert(tmpEntries("graft_stream_src") == staged)
+  }
 }

@@ -1,8 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-/** Single-query bench probe: re-measures ONE SparkEntry query in the
+/** Single-query bench probe: re-measures ONE registered query in the
   * exact Bench session config (local[32], AQE on, noop sink), printing
   * every pass instead of the min — the tool for adjudicating whether a
   * suspicious BENCH cell is a plan regression or a cold-pass/GC artifact
@@ -16,16 +14,12 @@ object BenchOne {
     val name = args(0)
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val passes = if (args.length > 2) args(2).toInt else 3
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val query = graft.queries.Queries.select(Some(name)).head
+    val spark = graft.Sessions.local("32")
     spark.sparkContext.setLogLevel("ERROR")
     def once(): Double = {
       val t0 = System.nanoTime()
-      graft.SparkEntry.queries(name)(spark, dir)
+      query.build(spark, dir)
         .write.format("noop").mode("overwrite").save()
       (System.nanoTime() - t0) / 1e9
     }
