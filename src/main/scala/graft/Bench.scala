@@ -87,18 +87,15 @@ object Bench {
     val ok = results.filter(_._2 >= 0)
     val total = ok.map(_._2).sum
     val warm = warmup.values.filter(_ >= 0).sum
-    val err = errors.map(e => "\"" + e.replace("\"", "'").replace("\n", " ") + "\"")
-      .mkString("[", ",", "]")
+    val err = errors.map(Verify.jsonString(_)).mkString("[", ",", "]")
     // errors for the SHORT line: bounded so a cascade of long exception
     // messages cannot push the line back over the tail window
-    val errShort = errors.take(3)
-      .map(e => "\"" + e.replace("\"", "'").replace("\n", " ").take(120) + "\"")
-      .mkString("[", ",", "]")
+    val errShort = errors.take(3).map(e => Verify.jsonString(e.take(120))).mkString("[", ",", "]")
     val mtimes = Provenance.fixtureMtimesJson(sfDir)
     val line = s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":$qs,""" +
       s""""passes":$passes,""" +
       s""""warmup_total":${f3(warm)},"n_queries":${results.size},"errors":$err,""" +
-      s""""fixture_mtimes":$mtimes,"sf":"$sfDir"}"""
+      s""""fixture_mtimes":$mtimes,"sf":${Verify.jsonString(sfDir)}}"""
     // Full-precision artifact (with per-query pass counts) ALWAYS lands in
     // a file — a file survives independent of console buffering.
     val outPath = java.nio.file.Paths.get(
@@ -108,13 +105,13 @@ object Bench {
       results.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}") +
       s""","passes":$passes,"pass_counts":$nPasses,""" +
       s""""warmup_total":$warm,"n_queries":${results.size},"errors":$err,""" +
-      s""""fixture_mtimes":$mtimes,"sf":"$sfDir"}"""
+      s""""fixture_mtimes":$mtimes,"sf":${Verify.jsonString(sfDir)}}"""
     // a failed write must not cost the console lines: log it, and the
     // short line names no file
     val queriesFile =
       try {
         java.nio.file.Files.writeString(outPath, full + "\n")
-        "\"" + outPath.toString.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+        Verify.jsonString(outPath.toString)
       } catch {
         case e: java.io.IOException =>
           System.err.println(s"Bench: could not write $outPath: $e")
@@ -123,7 +120,7 @@ object Bench {
     val shortLine = s"""{"metric":"total","value":${f3(total)},"unit":"sec",""" +
       s""""n_queries":${results.size},"passes":$passes,""" +
       s""""warmup_total":${f3(warm)},"n_errors":${errors.size},"errors":$errShort,""" +
-      s""""queries_file":$queriesFile,"sf":"$sfDir"}"""
+      s""""queries_file":$queriesFile,"sf":${Verify.jsonString(sfDir)}}"""
     println(line)
     println(shortLine)
     spark.stop()

@@ -61,7 +61,7 @@ object ProfileQuery {
     val t0 = System.nanoTime()
     exec()
     val wall = (System.nanoTime() - t0) / 1e9
-    Thread.sleep(500) // let the listener bus drain (private API in 4.x)
+    org.apache.spark.ListenerAccess.drain(spark.sparkContext)
     println(f"QUERY $name wall=$wall%.3f s jobs=${jobs.size}")
     jobs.foreach { case (id, j) =>
       val dur = (j.end - j.start) / 1e3

@@ -19,7 +19,7 @@ object Provenance {
     val fmt = java.time.format.DateTimeFormatter.ISO_INSTANT
     files.map { f =>
       val iso = fmt.format(java.time.Instant.ofEpochMilli(f.lastModified()))
-      "\"" + f.getName + "\":\"" + iso + "\""
+      Verify.jsonString(f.getName) + ":\"" + iso + "\""
     }.mkString("{", ",", "}")
   }
 }

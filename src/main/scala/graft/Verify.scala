@@ -28,19 +28,7 @@ object Verify {
         System.err.println(s"[verify] ${q.name} failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = selected.flatMap(s => s.oracle.map(sql => s"${q(s.name)}: ${q(sql)}"))
+    val json = selected.flatMap(s => s.oracle.map(sql => s"${jsonString(s.name)}: ${jsonString(sql)}"))
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // Fixture provenance: record each input table's mtime so a mid-round
@@ -50,4 +38,20 @@ object Verify {
       Provenance.fixtureMtimesJson(sfDir))
     spark.stop()
   }
+
+  /** `s` as a quoted JSON string, for every driver artifact (this dump,
+    * Bench's lines, the fixture provenance). Backslash, quote and ALL
+    * control chars (< 0x20) are escaped: a tab or CR in an oracle, an
+    * exception message or a file name would otherwise make the driver's
+    * json.load fail.
+    */
+  private[graft] def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 }

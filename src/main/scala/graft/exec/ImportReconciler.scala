@@ -1,6 +1,6 @@
 package graft.exec
 
-import graft.core.{OutputType, Project}
+import graft.core.{Dirs, OutputType, Project}
 import org.apache.spark.sql.SparkSession
 
 /** C13 — versioned import reconciliation over a materialized workspace.
@@ -133,12 +133,6 @@ object ImportReconciler {
     }
   }
 
-  private def deleteDir(path: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(path))
-      java.nio.file.Files.walk(path)
-        .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(p => java.nio.file.Files.deleteIfExists(p))
-
   /** Tables of the current database: those in the catalog and, for a
     * fresh JVM whose in-memory catalog does not know them, the directories
     * under the database's location.
@@ -186,11 +180,11 @@ object ImportReconciler {
       // hub parquet dir (materializeDir mode) and/or hub catalog table
       // (materializeTables mode) — u_delete_cascade's 'source' branch —
       // plus the pruned targets materialized output()/hubSelect calls wrote
-      deleteDir(java.nio.file.Paths.get(outDir, hubName))
+      Dirs.deleteTree(java.nio.file.Paths.get(outDir, hubName))
       Runner.dropTableAndOrphanLocation(spark, hubName)
       val pruned = java.util.regex.Pattern.quote(hubName) + "__[0-9a-f]{16}"
       Option(new java.io.File(outDir).list()).toSeq.flatten.filter(_.matches(pruned))
-        .foreach(n => deleteDir(java.nio.file.Paths.get(outDir, n)))
+        .foreach(n => Dirs.deleteTree(java.nio.file.Paths.get(outDir, n)))
       tableNames(spark).filter(_.matches("(?i)" + pruned))
         .foreach(Runner.dropTableAndOrphanLocation(spark, _))
     }
@@ -199,7 +193,7 @@ object ImportReconciler {
       tag match {
         case "table"   => Runner.dropTableAndOrphanLocation(spark, target)
         case "virtual" => spark.catalog.dropTempView(target)
-        case _         => deleteDir(java.nio.file.Paths.get(outDir, target))
+        case _         => Dirs.deleteTree(java.nio.file.Paths.get(outDir, target))
       }
     }
 

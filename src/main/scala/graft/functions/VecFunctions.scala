@@ -430,11 +430,14 @@ object GraftFunctions {
       s"text_winnow k/w must be integer literals, got $other")
   }
 
-  /** Idempotent per-session registration (temp functions). */
+  /** Registers each function the session does not hold yet (temp
+    * functions), so a repeat call replaces nothing and logs nothing.
+    */
   def register(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
     functions.foreach { case (name, builder, _) =>
-      registry.createOrReplaceTempFunction(name, builder, "built-in")
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, builder, "built-in")
     }
   }
 }

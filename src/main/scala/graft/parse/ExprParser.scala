@@ -41,9 +41,6 @@ final case class ParsedExpr(
 
   def hasAggregates: Boolean = aggs.nonEmpty
 
-  /** Parameter indexes appearing outside any aggregate span. */
-  def outerParamIndexes: Seq[Int] = segments.collect { case Seg.Param(i) => i }
-
   /** Render to SQL given per-parameter and per-aggregate SQL. */
   def render(param: Int => String, agg: Int => String = ParsedExpr.noAgg): String =
     ParsedExpr.renderSegs(segments, param, agg)

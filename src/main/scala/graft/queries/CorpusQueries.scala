@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.operators.{CorpusPipeline, Packing, Ranking, Selection, Stats, TextAnalysis}
+import graft.queries.DedupQueries.{closure, comp, md5Bucket, md5Split, shingleCte, shingles}
 import graft.queries.Fixtures._
 import org.apache.spark.sql.functions.{col, expr}
 
@@ -122,15 +123,37 @@ object CorpusQueries {
           SELECT doc_id, sm, md5(CAST(doc_id AS VARCHAR)) AS m FROM wsc),
         gk AS (
           SELECT doc_id, sm + CAST(round(1e6 * -ln(-ln((
-            ((((instr('0123456789abcdef', substr(m, 1, 1)) - 1) * 16
-              + (instr('0123456789abcdef', substr(m, 2, 1)) - 1)) * 16
-              + (instr('0123456789abcdef', substr(m, 3, 1)) - 1)) * 16
-              + (instr('0123456789abcdef', substr(m, 4, 1)) - 1))
+            ($md5Bucket)
             + 0.5) / 65536.0))) AS HUGEINT) AS key_micro
           FROM gm)
         SELECT doc_id, CAST(key_micro AS DOUBLE) / 1e6 AS key
         FROM gk ORDER BY key_micro DESC, doc_id ASC LIMIT $k"""
   }
+
+  /** `qual`, `lang` and `st`: the quality score, predicted language and
+    * token count per doc of `toks` (doc_id, text, tk), the q_clean_corpus
+    * floors.
+    */
+  private def cleanFloors(toks: String): String =
+    s"""qual AS (
+          SELECT doc_id,
+            round(
+              least(CAST(length(text) AS DOUBLE) / 200.0, 1.0) * 0.4 +
+              (CAST(length(regexp_replace(text, '[^a-zA-Z ]', '', 'g')) AS DOUBLE)
+                 / CAST(length(text) AS DOUBLE)) * 0.4 +
+              least(CAST(len(list_filter(tk, t -> t IN
+                  (${TextQueries.allStopDuck}))) AS DOUBLE)
+                 / CAST(len(tk) AS DOUBLE) * 5.0, 1.0) * 0.2
+            , 6) AS quality
+          FROM $toks),
+        lang AS (
+          SELECT doc_id,
+            ${TextQueries.langPredCaseDuck} AS lang_pred
+          FROM (
+            SELECT doc_id, text,
+              ${TextQueries.langScoresDuck}
+            FROM $toks)),
+        st AS (SELECT doc_id, CAST(len(tk) AS INTEGER) AS n_tokens FROM $toks)"""
 
   val all: Seq[Query] = Seq(
     Query("q_mix_report", (s, dir) => TextAnalysis.mixReport(docs(s, dir)),
@@ -156,16 +179,13 @@ object CorpusQueries {
         .select("doc_id", "lang"),
       // Identical md5-bucket arithmetic as the engine's stratifiedSampleHash
       // (and q_split): bucket = first 4 md5 hex digits of 'doc_id|lang'.
-      Some("""WITH h AS (
+      Some(s"""WITH h AS (
           SELECT doc_id, lang,
             md5(CAST(doc_id AS VARCHAR) || '|' || lang) AS m
           FROM documents),
         b AS (
           SELECT doc_id, lang,
-            (((instr('0123456789abcdef', substr(m, 1, 1)) - 1) * 16
-              + (instr('0123456789abcdef', substr(m, 2, 1)) - 1)) * 16
-              + (instr('0123456789abcdef', substr(m, 3, 1)) - 1)) * 16
-              + (instr('0123456789abcdef', substr(m, 4, 1)) - 1) AS bucket
+            $md5Bucket AS bucket
           FROM h)
         SELECT doc_id, lang FROM b
         WHERE bucket < CASE lang
@@ -176,27 +196,14 @@ object CorpusQueries {
       TextAnalysis.assignSplit(docs(s, dir),
         Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
         .select("doc_id", "split"),
-      Some("""WITH h AS (
-          SELECT doc_id, md5(CAST(doc_id AS VARCHAR)) AS m FROM documents),
-        b AS (
-          SELECT doc_id,
-            (((instr('0123456789abcdef', substr(m, 1, 1)) - 1) * 16
-              + (instr('0123456789abcdef', substr(m, 2, 1)) - 1)) * 16
-              + (instr('0123456789abcdef', substr(m, 3, 1)) - 1)) * 16
-              + (instr('0123456789abcdef', substr(m, 4, 1)) - 1) AS bucket
-          FROM h)
-        SELECT doc_id,
-          CASE WHEN bucket < 52429 THEN 'train'
-               WHEN bucket < 58982 THEN 'val'
-               ELSE 'test' END AS split
-        FROM b""")),
+      Some(s"""WITH ${md5Split("doc_id", "documents")}""")),
     // weight-proportional deterministic sample (P ∝ n_chars, all-integer
     // bucket·W_total < 65536·target·w comparison, W_total broadcast)
     Query("q_weighted_sample", (s, dir) =>
       TextAnalysis.weightedSampleHash(docs(s, dir), "n_chars", 300L),
       // weighted sample mirrored: same md5-bucket arithmetic as q_split,
       // same all-integer keep predicate, W_total from a 1-row scalar
-      Some("""WITH w AS (
+      Some(s"""WITH w AS (
           SELECT doc_id, text, lang, source, n_chars,
             CAST(n_chars AS BIGINT) AS wv,
             md5(CAST(doc_id AS VARCHAR)) AS m
@@ -204,10 +211,7 @@ object CorpusQueries {
         t AS (SELECT sum(wv) AS wt FROM w),
         b AS (
           SELECT w.*,
-            (((instr('0123456789abcdef', substr(m, 1, 1)) - 1) * 16
-              + (instr('0123456789abcdef', substr(m, 2, 1)) - 1)) * 16
-              + (instr('0123456789abcdef', substr(m, 3, 1)) - 1)) * 16
-              + (instr('0123456789abcdef', substr(m, 4, 1)) - 1) AS bucket
+            $md5Bucket AS bucket
           FROM w)
         SELECT doc_id, text, lang, source, n_chars FROM b, t
         WHERE bucket * wt < 65536 * 300 * wv""")),
@@ -222,7 +226,7 @@ object CorpusQueries {
       // Target-mix resample: thresholds derived from counts + the same
       // DOUBLE-cast weight literals, selection via the q_split md5-bucket
       // arithmetic over 'doc_id|lang'.
-      Some("""WITH c AS (
+      Some(s"""WITH c AS (
           SELECT lang, count(*) AS c FROM documents GROUP BY 1),
         w AS (
           SELECT lang, c,
@@ -244,10 +248,7 @@ object CorpusQueries {
           FROM documents),
         b AS (
           SELECT doc_id, lang,
-            (((instr('0123456789abcdef', substr(m, 1, 1)) - 1) * 16
-              + (instr('0123456789abcdef', substr(m, 2, 1)) - 1)) * 16
-              + (instr('0123456789abcdef', substr(m, 3, 1)) - 1)) * 16
-              + (instr('0123456789abcdef', substr(m, 4, 1)) - 1) AS bucket
+            $md5Bucket AS bucket
           FROM h)
         SELECT b.doc_id, b.lang FROM b JOIN t USING (lang)
         WHERE b.bucket < t.thresh""")),
@@ -329,25 +330,7 @@ object CorpusQueries {
             count(*) OVER (PARTITION BY h) AS dup_count
           FROM (SELECT doc_id, md5(lower(trim(regexp_replace(text, '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g')))) AS h
                 FROM documents)),
-        qual AS (
-          SELECT doc_id,
-            round(
-              least(CAST(length(text) AS DOUBLE) / 200.0, 1.0) * 0.4 +
-              (CAST(length(regexp_replace(text, '[^a-zA-Z ]', '', 'g')) AS DOUBLE)
-                 / CAST(length(text) AS DOUBLE)) * 0.4 +
-              least(CAST(len(list_filter(tk, t -> t IN
-                  (${TextQueries.allStopDuck}))) AS DOUBLE)
-                 / CAST(len(tk) AS DOUBLE) * 5.0, 1.0) * 0.2
-            , 6) AS quality
-          FROM tk),
-        lang AS (
-          SELECT doc_id,
-            ${TextQueries.langPredCaseDuck} AS lang_pred
-          FROM (
-            SELECT doc_id, text,
-              ${TextQueries.langScoresDuck}
-            FROM tk)),
-        st AS (SELECT doc_id, CAST(len(tk) AS INTEGER) AS n_tokens FROM tk)
+        ${cleanFloors("tk")}
         SELECT d.doc_id, lang.lang_pred, qual.quality, st.n_tokens, d.dup_count
         FROM dd d
         JOIN qual USING (doc_id)
@@ -368,53 +351,10 @@ object CorpusQueries {
           SELECT doc_id, text,
             list_filter(string_split_regex(lower(text), ' +'), t -> t != '') AS tk
           FROM documents),
-        sh AS (
-          SELECT DISTINCT doc_id, tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2] AS shingle
-          FROM toks, unnest(generate_series(1, greatest(len(tk) - 2, 1))) AS u(i)
-          WHERE len(tk) >= 3),
-        sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-        capped AS (
-          SELECT doc_id, shingle FROM (
-            SELECT doc_id, shingle, count(*) OVER (PARTITION BY shingle) AS f FROM sh)
-          WHERE f <= 100),
-        prs AS (
-          SELECT doc_a, doc_b FROM (
-            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-            FROM capped a JOIN capped b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-            GROUP BY 1, 2) p
-          JOIN sizes sa ON sa.doc_id = doc_a
-          JOIN sizes sb ON sb.doc_id = doc_b
-          WHERE round(CAST(inter AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - inter AS DOUBLE), 6) >= 0.5),
-        edges AS (SELECT doc_a AS a, doc_b AS b FROM prs
-                  UNION SELECT doc_b, doc_a FROM prs),
-        reach AS (
-          SELECT a, b FROM edges
-          UNION
-          SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a WHERE e.b != r.a),
-        comp AS (
-          SELECT d.doc_id,
-            least(d.doc_id, coalesce(min(r.b), d.doc_id)) AS component_id
-          FROM documents d LEFT JOIN reach r ON r.a = d.doc_id
-          GROUP BY d.doc_id),
-        qual AS (
-          SELECT doc_id,
-            round(
-              least(CAST(length(text) AS DOUBLE) / 200.0, 1.0) * 0.4 +
-              (CAST(length(regexp_replace(text, '[^a-zA-Z ]', '', 'g')) AS DOUBLE)
-                 / CAST(length(text) AS DOUBLE)) * 0.4 +
-              least(CAST(len(list_filter(tk, t -> t IN
-                  (${TextQueries.allStopDuck}))) AS DOUBLE)
-                 / CAST(len(tk) AS DOUBLE) * 5.0, 1.0) * 0.2
-            , 6) AS quality
-          FROM toks),
-        lang AS (
-          SELECT doc_id,
-            ${TextQueries.langPredCaseDuck} AS lang_pred
-          FROM (
-            SELECT doc_id, text,
-              ${TextQueries.langScoresDuck}
-            FROM toks)),
-        st AS (SELECT doc_id, CAST(len(tk) AS INTEGER) AS n_tokens FROM toks)
+        ${shingleCte()},
+        ${closure()},
+        $comp,
+        ${cleanFloors("toks")}
         SELECT c.doc_id, lang.lang_pred, qual.quality, st.n_tokens
         FROM comp c
         JOIN qual USING (doc_id)
@@ -457,24 +397,7 @@ object CorpusQueries {
           FROM pages),
         gmeas AS (
           SELECT doc_id,
-            CAST(len(ts) AS BIGINT) AS nw,
-            CASE WHEN len(ts) = 0 THEN NULL ELSE
-              CAST(list_sum(list_transform(ts, t -> length(t))) AS DOUBLE) / len(ts) END AS mwl,
-            CASE WHEN len(ts) = 0 THEN NULL ELSE
-              CAST(length(page) - length(replace(page, '#', '')) AS DOUBLE) / len(ts) END AS hr,
-            CASE WHEN len(ts) = 0 THEN NULL ELSE
-              CAST((length(page) - length(replace(page, '...', ''))) // 3
-                + (length(page) - length(replace(page, '…', ''))) AS DOUBLE) / len(ts) END AS er,
-            CASE WHEN len(ls) = 0 THEN NULL ELSE
-              CAST(len(list_filter(ls, l -> substr(ltrim(l), 1, 1) IN ('•','‣','▪','-','*'))) AS DOUBLE)
-                / len(ls) END AS br,
-            CASE WHEN len(ls) = 0 THEN NULL ELSE
-              CAST(len(list_filter(ls, l -> right(rtrim(l), 3) = '...' OR right(rtrim(l), 1) = '…')) AS DOUBLE)
-                / len(ls) END AS elr,
-            CASE WHEN len(ts) = 0 THEN NULL ELSE
-              CAST(len(list_filter(ts, t -> regexp_matches(t, '[a-z]'))) AS DOUBLE) / len(ts) END AS ar,
-            CAST(len(list_filter(['the','be','to','of','and','that','have','with'],
-              s -> list_contains(ts, s))) AS BIGINT) AS sh
+            ${TextQueries.gopherMeasures("page")}
           FROM gb),
         gkeep AS (
           SELECT doc_id,
@@ -521,32 +444,8 @@ object CorpusQueries {
                 md5(lower(trim(regexp_replace(text, '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g')))), '__NULL_TEXT__')) AS can
             FROM gated)
           WHERE doc_id = can),
-        jtoks AS (
-          SELECT doc_id, list_filter(string_split_regex(lower(text), ' +'), t -> t != '') AS tk
-          FROM ex),
-        jsh AS (
-          SELECT DISTINCT doc_id, tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2] AS shingle
-          FROM jtoks, unnest(generate_series(1, greatest(len(tk) - 2, 1))) AS u(i)
-          WHERE len(tk) >= 3),
-        jsizes AS (SELECT doc_id, count(*) AS n_sh FROM jsh GROUP BY doc_id),
-        jcapped AS (
-          SELECT doc_id, shingle FROM (
-            SELECT doc_id, shingle, count(*) OVER (PARTITION BY shingle) AS f FROM jsh)
-          WHERE f <= 100),
-        jprs AS (
-          SELECT doc_a, doc_b FROM (
-            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-            FROM jcapped a JOIN jcapped b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-            GROUP BY 1, 2) p
-          JOIN jsizes sa ON sa.doc_id = doc_a
-          JOIN jsizes sb ON sb.doc_id = doc_b
-          WHERE round(CAST(inter AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - inter AS DOUBLE), 6) >= 0.5),
-        edges AS (SELECT doc_a AS a, doc_b AS b FROM jprs
-                  UNION SELECT doc_b, doc_a FROM jprs),
-        reach AS (
-          SELECT a, b FROM edges
-          UNION
-          SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a WHERE e.b != r.a),
+        ${shingles("ex", p = "j")},
+        ${closure("j")},
         comp AS (
           SELECT e2.doc_id, least(e2.doc_id, coalesce(min(r.b), e2.doc_id)) AS component_id
           FROM ex e2 LEFT JOIN reach r ON r.a = e2.doc_id
@@ -587,14 +486,11 @@ object CorpusQueries {
         .selectExpr("source", "doc_id", "rank AS rnk"),
       // k smallest md5 buckets per source, doc_id tie-break — the exact
       // window form is the oracle for the salted two-phase plan
-      Some("""WITH h AS (
+      Some(s"""WITH h AS (
           SELECT doc_id, source, md5(CAST(doc_id AS VARCHAR)) AS m FROM documents),
         b AS (
           SELECT doc_id, source,
-            (((instr('0123456789abcdef', substr(m, 1, 1)) - 1) * 16
-              + (instr('0123456789abcdef', substr(m, 2, 1)) - 1)) * 16
-              + (instr('0123456789abcdef', substr(m, 3, 1)) - 1)) * 16
-              + (instr('0123456789abcdef', substr(m, 4, 1)) - 1) AS bucket
+            $md5Bucket AS bucket
           FROM h),
         r AS (
           SELECT source, doc_id,

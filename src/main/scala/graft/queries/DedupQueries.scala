@@ -154,6 +154,143 @@ object DedupQueries {
     }
   }
 
+  /** `<p>sh`: the distinct 3-token shingles per doc of `<p>toks`. */
+  private[queries] def shingleCte(p: String = ""): String =
+    s"""${p}sh AS (
+          SELECT DISTINCT doc_id, tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2] AS shingle
+          FROM ${p}toks, unnest(generate_series(1, greatest(len(tk) - 2, 1))) AS u(i)
+          WHERE len(tk) >= 3)"""
+
+  /** `<p>toks`, the lower-cased space-split tokens per doc of `from`, and
+    * its [[shingleCte]]: the start of every exact shingle-Jaccard oracle.
+    */
+  private[queries] def shingles(from: String = "documents", p: String = ""): String =
+    s"""${p}toks AS (
+          SELECT doc_id, list_filter(string_split_regex(lower(text), ' +'), t -> t != '') AS tk
+          FROM $from),
+        ${shingleCte(p)}"""
+
+  /** `<p>sizes`: the shingle count per doc. */
+  private def sizes(p: String = ""): String =
+    s"${p}sizes AS (SELECT doc_id, count(*) AS n_sh FROM ${p}sh GROUP BY doc_id)"
+
+  /** `<p>capped`: the shingles at most `cap` docs hold. */
+  private def capped(cap: Int, p: String = ""): String =
+    s"""${p}capped AS (
+          SELECT doc_id, shingle FROM (
+            SELECT doc_id, shingle, count(*) OVER (PARTITION BY shingle) AS f FROM ${p}sh)
+          WHERE f <= $cap)"""
+
+  /** A pair's exact Jaccard from its intersection `inter` and sizes `sa`/`sb`. */
+  private val jaccard =
+    "round(CAST(inter AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - inter AS DOUBLE), 6)"
+
+  /** `pairs`: the shingle intersection of every doc pair of `from`. */
+  private def pairs(from: String): String =
+    s"""pairs AS (
+          SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
+          FROM $from a JOIN $from b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+          GROUP BY 1, 2)"""
+
+  /** The `pairs` whose Jaccard reaches `t`, with that Jaccard. */
+  private def jaccardAtLeast(t: String): String =
+    s"""SELECT doc_a, doc_b,
+          $jaccard AS jaccard
+        FROM pairs
+        JOIN sizes sa ON sa.doc_id = doc_a
+        JOIN sizes sb ON sb.doc_id = doc_b
+        WHERE $jaccard >= $t"""
+
+  /** After [[shingles]]`(p = p)`, in a WITH RECURSIVE: `<p>prs`, the pairs
+    * whose Jaccard over the 100-capped index reaches 0.5, as undirected
+    * `edges`, and their transitive closure `reach`.
+    */
+  private[queries] def closure(p: String = ""): String =
+    s"""${sizes(p)},
+        ${capped(100, p)},
+        ${p}prs AS (
+          SELECT doc_a, doc_b FROM (
+            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
+            FROM ${p}capped a JOIN ${p}capped b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+            GROUP BY 1, 2) p
+          JOIN ${p}sizes sa ON sa.doc_id = doc_a
+          JOIN ${p}sizes sb ON sb.doc_id = doc_b
+          WHERE $jaccard >= 0.5),
+        edges AS (SELECT doc_a AS a, doc_b AS b FROM ${p}prs
+                  UNION SELECT doc_b, doc_a FROM ${p}prs),
+        reach AS (
+          SELECT a, b FROM edges
+          UNION
+          SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a WHERE e.b != r.a)"""
+
+  /** `comp`: each document labelled with the least doc id its [[closure]] reaches. */
+  private[queries] val comp: String =
+    """comp AS (
+          SELECT d.doc_id,
+            least(d.doc_id, coalesce(min(r.b), d.doc_id)) AS component_id
+          FROM documents d LEFT JOIN reach r ON r.a = d.doc_id
+          GROUP BY d.doc_id)"""
+
+  /** The md5-bucket16 arithmetic: the first 4 hex digits of `m` as an int. */
+  private[queries] val md5Bucket: String =
+    """(((instr('0123456789abcdef', substr(m, 1, 1)) - 1) * 16
+              + (instr('0123456789abcdef', substr(m, 2, 1)) - 1)) * 16
+              + (instr('0123456789abcdef', substr(m, 3, 1)) - 1)) * 16
+              + (instr('0123456789abcdef', substr(m, 4, 1)) - 1)"""
+
+  /** The q_split tail: an 80/10/10 train/val/test split of `from` by the
+    * [[md5Bucket]] of `key`.
+    */
+  private[queries] def md5Split(key: String, from: String): String =
+    s"""h AS (
+          SELECT doc_id, md5(CAST($key AS VARCHAR)) AS m FROM $from),
+        b AS (
+          SELECT doc_id,
+            $md5Bucket AS bucket
+          FROM h)
+        SELECT doc_id,
+          CASE WHEN bucket < 52429 THEN 'train'
+               WHEN bucket < 58982 THEN 'val'
+               ELSE 'test' END AS split
+        FROM b"""
+
+  /** `wn`: each doc's sorted distinct winnowing fingerprints `fps`
+    * (k = 20 chars, w = 16).
+    */
+  private val winnowFps: String =
+    """WITH cs AS (
+          SELECT doc_id,
+            list_transform(string_split(text, ''), c -> CAST(unicode(c) AS BIGINT)) AS cp
+          FROM documents),
+        h AS (
+          SELECT doc_id,
+            list_transform(range(1, len(cp) - 20 + 2),
+              i -> list_reduce(cp[i:i+19], (acc, c) -> (acc * 257 + c) % 2147483647)) AS hs
+          FROM cs WHERE len(cp) >= 20),
+        wn AS (
+          SELECT doc_id,
+            list_distinct(list_transform(range(1, greatest(1, len(hs) - 16 + 1) + 1),
+              j -> list_min(hs[j:j+15]))) AS fps
+          FROM h)"""
+
+  /** Shared by q_contamination and q_contamination_bloom. */
+  private val contaminationOracle: String =
+    s"""WITH ${shingles()},
+        ${capped(1000)}
+        SELECT c.doc_id, p.doc_id AS probe_id, count(*) AS overlap_ngrams
+        FROM capped c JOIN sh p ON c.shingle = p.shingle AND p.doc_id < 25
+        WHERE c.doc_id != p.doc_id
+        GROUP BY 1, 2
+        HAVING count(*) >= 3"""
+
+  /** Shared by q_ngram_jaccard and q_minhash_pairs. */
+  private val ngramJaccardOracle: String =
+    s"""WITH ${shingles()},
+        ${sizes()},
+        ${capped(100)},
+        ${pairs("capped")}
+        ${jaccardAtLeast("0.5")}"""
+
   val all: Seq[Query] = Seq(
     Query("q_dedup_exact", (s, dir) => Dedup.exact(docs(s, dir)),
       Some("""SELECT doc_id,
@@ -200,40 +337,14 @@ object DedupQueries {
       // Winnowing: identical rolling-hash fold ((acc*257 + c) mod 2^31-1,
       // seeded with the first codepoint — list_reduce semantics), w-window
       // minima, sorted distinct. All integer arithmetic — exact.
-      Some("""WITH cs AS (
-          SELECT doc_id,
-            list_transform(string_split(text, ''), c -> CAST(unicode(c) AS BIGINT)) AS cp
-          FROM documents),
-        h AS (
-          SELECT doc_id,
-            list_transform(range(1, len(cp) - 20 + 2),
-              i -> list_reduce(cp[i:i+19], (acc, c) -> (acc * 257 + c) % 2147483647)) AS hs
-          FROM cs WHERE len(cp) >= 20),
-        wn AS (
-          SELECT doc_id,
-            list_distinct(list_transform(range(1, greatest(1, len(hs) - 16 + 1) + 1),
-              j -> list_min(hs[j:j+15]))) AS fps
-          FROM h)
+      Some(s"""$winnowFps
         SELECT doc_id, unnest(fps) AS fp FROM wn""")),
     // substring-overlap pairs over those fingerprints (hot-fp anti-join
     // cap at 100 docs; >= 3 shared fingerprints)
     Query("q_winnow_pairs", (s, dir) =>
       Dedup.winnowPairs(docs(s, dir), k = 20, w = 16, minShared = 3,
         maxFpFreq = 100),
-      Some("""WITH cs AS (
-          SELECT doc_id,
-            list_transform(string_split(text, ''), c -> CAST(unicode(c) AS BIGINT)) AS cp
-          FROM documents),
-        h AS (
-          SELECT doc_id,
-            list_transform(range(1, len(cp) - 20 + 2),
-              i -> list_reduce(cp[i:i+19], (acc, c) -> (acc * 257 + c) % 2147483647)) AS hs
-          FROM cs WHERE len(cp) >= 20),
-        wn AS (
-          SELECT doc_id,
-            list_distinct(list_transform(range(1, greatest(1, len(hs) - 16 + 1) + 1),
-              j -> list_min(hs[j:j+15]))) AS fps
-          FROM h),
+      Some(s"""$winnowFps,
         f AS (SELECT doc_id, unnest(fps) AS fp FROM wn),
         hot AS (SELECT fp FROM f GROUP BY fp HAVING count(*) > 100),
         cool AS (SELECT * FROM f WHERE fp NOT IN (SELECT fp FROM hot))
@@ -274,28 +385,7 @@ object DedupQueries {
         FROM grp GROUP BY doc_id, g""")),
     Query("q_ngram_jaccard", (s, dir) =>
       Dedup.ngramJaccardPairs(docs(s, dir), threshold = 0.5),
-      Some("""WITH toks AS (
-          SELECT doc_id, list_filter(string_split_regex(lower(text), ' +'), t -> t != '') AS tk
-          FROM documents),
-        sh AS (
-          SELECT DISTINCT doc_id, tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2] AS shingle
-          FROM toks, unnest(generate_series(1, greatest(len(tk) - 2, 1))) AS u(i)
-          WHERE len(tk) >= 3),
-        sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-        capped AS (
-          SELECT doc_id, shingle FROM (
-            SELECT doc_id, shingle, count(*) OVER (PARTITION BY shingle) AS f FROM sh)
-          WHERE f <= 100),
-        pairs AS (
-          SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-          FROM capped a JOIN capped b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-          GROUP BY 1, 2)
-        SELECT doc_a, doc_b,
-          round(CAST(inter AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - inter AS DOUBLE), 6) AS jaccard
-        FROM pairs
-        JOIN sizes sa ON sa.doc_id = doc_a
-        JOIN sizes sb ON sb.doc_id = doc_b
-        WHERE round(CAST(inter AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - inter AS DOUBLE), 6) >= 0.5""")),
+      Some(ngramJaccardOracle)),
     // incremental dedup: an incoming batch (doc_id < 100) against the
     // already-ingested corpus (doc_id >= 100) — bipartite MinHash with
     // exact-Jaccard verification; the exact bipartite inverted index is
@@ -308,25 +398,14 @@ object DedupQueries {
     },
       // Bipartite exact sibling of the incremental (batch-vs-corpus) MinHash
       // dedup: full-set Jaccard over batch×corpus shingle matches.
-      Some("""WITH toks AS (
-          SELECT doc_id, list_filter(string_split_regex(lower(text), ' +'), t -> t != '') AS tk
-          FROM documents),
-        sh AS (
-          SELECT DISTINCT doc_id, tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2] AS shingle
-          FROM toks, unnest(generate_series(1, greatest(len(tk) - 2, 1))) AS u(i)
-          WHERE len(tk) >= 3),
-        sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
+      Some(s"""WITH ${shingles()},
+        ${sizes()},
         pairs AS (
           SELECT b.doc_id AS doc_a, c.doc_id AS doc_b, count(*) AS inter
           FROM sh b JOIN sh c ON b.shingle = c.shingle
           WHERE b.doc_id < 100 AND c.doc_id >= 100
           GROUP BY 1, 2)
-        SELECT doc_a, doc_b,
-          round(CAST(inter AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - inter AS DOUBLE), 6) AS jaccard
-        FROM pairs
-        JOIN sizes sa ON sa.doc_id = doc_a
-        JOIN sizes sb ON sb.doc_id = doc_b
-        WHERE round(CAST(inter AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - inter AS DOUBLE), 6) >= 0.5""")),
+        ${jaccardAtLeast("0.5")}""")),
     // benchmark decontamination: corpus docs sharing n-grams with a probe
     // set (first 25 docs standing in for an eval benchmark)
     Query("q_contamination", (s, dir) => {
@@ -334,22 +413,7 @@ object DedupQueries {
       Dedup.ngramContamination(d, d.filter(col("doc_id") < 25), minOverlap = 3)
         .filter(col("doc_id") =!= col("probe_id"))
     },
-      Some("""WITH toks AS (
-          SELECT doc_id, list_filter(string_split_regex(lower(text), ' +'), t -> t != '') AS tk
-          FROM documents),
-        sh AS (
-          SELECT DISTINCT doc_id, tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2] AS shingle
-          FROM toks, unnest(generate_series(1, greatest(len(tk) - 2, 1))) AS u(i)
-          WHERE len(tk) >= 3),
-        capped AS (
-          SELECT doc_id, shingle FROM (
-            SELECT doc_id, shingle, count(*) OVER (PARTITION BY shingle) AS f FROM sh)
-          WHERE f <= 1000)
-        SELECT c.doc_id, p.doc_id AS probe_id, count(*) AS overlap_ngrams
-        FROM capped c JOIN sh p ON c.shingle = p.shingle AND p.doc_id < 25
-        WHERE c.doc_id != p.doc_id
-        GROUP BY 1, 2
-        HAVING count(*) >= 3""")),
+      Some(contaminationOracle)),
     // hash-membership-prefiltered decontamination (the 100 TB variant):
     // a broadcast of DISTINCT 22-bit shingle hashes prunes the corpus
     // index with long compares before any string join; the exact-confirm
@@ -363,22 +427,7 @@ object DedupQueries {
     },
       // the prefilter is exact-confirmed, so the exact form's SQL is the
       // oracle verbatim
-      Some("""WITH toks AS (
-          SELECT doc_id, list_filter(string_split_regex(lower(text), ' +'), t -> t != '') AS tk
-          FROM documents),
-        sh AS (
-          SELECT DISTINCT doc_id, tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2] AS shingle
-          FROM toks, unnest(generate_series(1, greatest(len(tk) - 2, 1))) AS u(i)
-          WHERE len(tk) >= 3),
-        capped AS (
-          SELECT doc_id, shingle FROM (
-            SELECT doc_id, shingle, count(*) OVER (PARTITION BY shingle) AS f FROM sh)
-          WHERE f <= 1000)
-        SELECT c.doc_id, p.doc_id AS probe_id, count(*) AS overlap_ngrams
-        FROM capped c JOIN sh p ON c.shingle = p.shingle AND p.doc_id < 25
-        WHERE c.doc_id != p.doc_id
-        GROUP BY 1, 2
-        HAVING count(*) >= 3""")),
+      Some(contaminationOracle)),
     // leakage-safe split: near-dup components decide the split, so two
     // near-duplicates can never straddle the train/test fence; same
     // MinHash edge generator (oracle-proven value-equal to exact pairs)
@@ -394,51 +443,10 @@ object DedupQueries {
       // q_dup_components' recursive closure labels each doc with its
       // component minimum; the split CASE is q_split's md5 arithmetic
       // keyed on that component id
-      Some("""WITH RECURSIVE toks AS (
-          SELECT doc_id, list_filter(string_split_regex(lower(text), ' +'), t -> t != '') AS tk
-          FROM documents),
-        sh AS (
-          SELECT DISTINCT doc_id, tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2] AS shingle
-          FROM toks, unnest(generate_series(1, greatest(len(tk) - 2, 1))) AS u(i)
-          WHERE len(tk) >= 3),
-        sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-        capped AS (
-          SELECT doc_id, shingle FROM (
-            SELECT doc_id, shingle, count(*) OVER (PARTITION BY shingle) AS f FROM sh)
-          WHERE f <= 100),
-        prs AS (
-          SELECT doc_a, doc_b FROM (
-            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-            FROM capped a JOIN capped b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-            GROUP BY 1, 2) p
-          JOIN sizes sa ON sa.doc_id = doc_a
-          JOIN sizes sb ON sb.doc_id = doc_b
-          WHERE round(CAST(inter AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - inter AS DOUBLE), 6) >= 0.5),
-        edges AS (SELECT doc_a AS a, doc_b AS b FROM prs
-                  UNION SELECT doc_b, doc_a FROM prs),
-        reach AS (
-          SELECT a, b FROM edges
-          UNION
-          SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a WHERE e.b != r.a),
-        comp AS (
-          SELECT d.doc_id,
-            least(d.doc_id, coalesce(min(r.b), d.doc_id)) AS component_id
-          FROM documents d LEFT JOIN reach r ON r.a = d.doc_id
-          GROUP BY d.doc_id),
-        h AS (
-          SELECT doc_id, md5(CAST(component_id AS VARCHAR)) AS m FROM comp),
-        b AS (
-          SELECT doc_id,
-            (((instr('0123456789abcdef', substr(m, 1, 1)) - 1) * 16
-              + (instr('0123456789abcdef', substr(m, 2, 1)) - 1)) * 16
-              + (instr('0123456789abcdef', substr(m, 3, 1)) - 1)) * 16
-              + (instr('0123456789abcdef', substr(m, 4, 1)) - 1) AS bucket
-          FROM h)
-        SELECT doc_id,
-          CASE WHEN bucket < 52429 THEN 'train'
-               WHEN bucket < 58982 THEN 'val'
-               ELSE 'test' END AS split
-        FROM b""")),
+      Some(s"""WITH RECURSIVE ${shingles()},
+        ${closure()},
+        $comp,
+        ${md5Split("component_id", "comp")}""")),
     // quality-canonical dedup: per near-dup component keep the
     // highest-n_chars member (doc_id tie-break) — winner via the salted
     // two-phase ranking, MinHash edges (oracle-proven value-equal to
@@ -452,32 +460,8 @@ object DedupQueries {
     },
       // q_dup_components' recursive closure + a per-component quality
       // window: keep = rank 1 by (n_chars DESC, doc_id ASC)
-      Some("""WITH RECURSIVE toks AS (
-          SELECT doc_id, list_filter(string_split_regex(lower(text), ' +'), t -> t != '') AS tk
-          FROM documents),
-        sh AS (
-          SELECT DISTINCT doc_id, tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2] AS shingle
-          FROM toks, unnest(generate_series(1, greatest(len(tk) - 2, 1))) AS u(i)
-          WHERE len(tk) >= 3),
-        sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-        capped AS (
-          SELECT doc_id, shingle FROM (
-            SELECT doc_id, shingle, count(*) OVER (PARTITION BY shingle) AS f FROM sh)
-          WHERE f <= 100),
-        prs AS (
-          SELECT doc_a, doc_b FROM (
-            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-            FROM capped a JOIN capped b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-            GROUP BY 1, 2) p
-          JOIN sizes sa ON sa.doc_id = doc_a
-          JOIN sizes sb ON sb.doc_id = doc_b
-          WHERE round(CAST(inter AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - inter AS DOUBLE), 6) >= 0.5),
-        edges AS (SELECT doc_a AS a, doc_b AS b FROM prs
-                  UNION SELECT doc_b, doc_a FROM prs),
-        reach AS (
-          SELECT a, b FROM edges
-          UNION
-          SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a WHERE e.b != r.a),
+      Some(s"""WITH RECURSIVE ${shingles()},
+        ${closure()},
         comp AS (
           SELECT d.doc_id, d.n_chars,
             least(d.doc_id, coalesce(min(r.b), d.doc_id)) AS component_id
@@ -521,24 +505,10 @@ object DedupQueries {
         verifyPar = floorPar(s, dir)),
       // UNCAPPED brute-force quadratic Jaccard — the losslessness gate for
       // the prefix-filtered candidate generation
-      Some("""WITH toks AS (
-          SELECT doc_id, list_filter(string_split_regex(lower(text), ' +'), t -> t != '') AS tk
-          FROM documents),
-        sh AS (
-          SELECT DISTINCT doc_id, tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2] AS shingle
-          FROM toks, unnest(generate_series(1, greatest(len(tk) - 2, 1))) AS u(i)
-          WHERE len(tk) >= 3),
-        sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-        pairs AS (
-          SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-          FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-          GROUP BY 1, 2)
-        SELECT doc_a, doc_b,
-          round(CAST(inter AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - inter AS DOUBLE), 6) AS jaccard
-        FROM pairs
-        JOIN sizes sa ON sa.doc_id = doc_a
-        JOIN sizes sb ON sb.doc_id = doc_b
-        WHERE round(CAST(inter AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - inter AS DOUBLE), 6) >= 0.7""")),
+      Some(s"""WITH ${shingles()},
+        ${sizes()},
+        ${pairs("sh")}
+        ${jaccardAtLeast("0.7")}""")),
     // transitive duplicate groups, with MinHash-LSH as the edge generator —
     // the documented default/scale path (bounded fan-out); its pair set is
     // value-equal to the exact inverted-index sibling (oracle-proven by
@@ -551,32 +521,8 @@ object DedupQueries {
         Dedup.minhashPairs(d, threshold = 0.5)
           .select(col("doc_a").as("id_a"), col("doc_b").as("id_b")))
     },
-      Some("""WITH RECURSIVE toks AS (
-          SELECT doc_id, list_filter(string_split_regex(lower(text), ' +'), t -> t != '') AS tk
-          FROM documents),
-        sh AS (
-          SELECT DISTINCT doc_id, tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2] AS shingle
-          FROM toks, unnest(generate_series(1, greatest(len(tk) - 2, 1))) AS u(i)
-          WHERE len(tk) >= 3),
-        sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-        capped AS (
-          SELECT doc_id, shingle FROM (
-            SELECT doc_id, shingle, count(*) OVER (PARTITION BY shingle) AS f FROM sh)
-          WHERE f <= 100),
-        prs AS (
-          SELECT doc_a, doc_b FROM (
-            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-            FROM capped a JOIN capped b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-            GROUP BY 1, 2) p
-          JOIN sizes sa ON sa.doc_id = doc_a
-          JOIN sizes sb ON sb.doc_id = doc_b
-          WHERE round(CAST(inter AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - inter AS DOUBLE), 6) >= 0.5),
-        edges AS (SELECT doc_a AS a, doc_b AS b FROM prs
-                  UNION SELECT doc_b, doc_a FROM prs),
-        reach AS (
-          SELECT a, b FROM edges
-          UNION
-          SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a WHERE e.b != r.a)
+      Some(s"""WITH RECURSIVE ${shingles()},
+        ${closure()}
         SELECT d.doc_id AS id,
           least(d.doc_id, coalesce(min(r.b), d.doc_id)) AS component_id
         FROM documents d LEFT JOIN reach r ON r.a = d.doc_id
@@ -648,28 +594,7 @@ object DedupQueries {
       Dedup.minhashPairs(docs(s, dir), threshold = 0.5),
       // MinHash-LSH pairs are exact-verified, so the exact inverted-index
       // sibling (same SQL as q_ngram_jaccard) is the oracle.
-      Some("""WITH toks AS (
-          SELECT doc_id, list_filter(string_split_regex(lower(text), ' +'), t -> t != '') AS tk
-          FROM documents),
-        sh AS (
-          SELECT DISTINCT doc_id, tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2] AS shingle
-          FROM toks, unnest(generate_series(1, greatest(len(tk) - 2, 1))) AS u(i)
-          WHERE len(tk) >= 3),
-        sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-        capped AS (
-          SELECT doc_id, shingle FROM (
-            SELECT doc_id, shingle, count(*) OVER (PARTITION BY shingle) AS f FROM sh)
-          WHERE f <= 100),
-        pairs AS (
-          SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-          FROM capped a JOIN capped b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-          GROUP BY 1, 2)
-        SELECT doc_a, doc_b,
-          round(CAST(inter AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - inter AS DOUBLE), 6) AS jaccard
-        FROM pairs
-        JOIN sizes sa ON sa.doc_id = doc_a
-        JOIN sizes sb ON sb.doc_id = doc_b
-        WHERE round(CAST(inter AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - inter AS DOUBLE), 6) >= 0.5""")),
+      Some(ngramJaccardOracle)),
     // fully hash-gated since r10: the 64-bit XXH64 signature fold is
     // integer arithmetic end to end, so [[SimhashOracleSql]] mirrors it
     // in DuckDB (mod-2^64 emulated in HUGEINT) and the pair relation
@@ -743,26 +668,14 @@ object DedupQueries {
       // SimHash envelope: the exact-pair count is the same relation as
       // q_ngram_jaccard; the two accuracy booleans are engine-side claims the
       // oracle states as literals (a violated floor breaks the hash match).
-      Some("""WITH toks AS (
-          SELECT doc_id, list_filter(string_split_regex(lower(text), ' +'), t -> t != '') AS tk
-          FROM documents),
-        sh AS (
-          SELECT DISTINCT doc_id, tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2] AS shingle
-          FROM toks, unnest(generate_series(1, greatest(len(tk) - 2, 1))) AS u(i)
-          WHERE len(tk) >= 3),
-        sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-        capped AS (
-          SELECT doc_id, shingle FROM (
-            SELECT doc_id, shingle, count(*) OVER (PARTITION BY shingle) AS f FROM sh)
-          WHERE f <= 100),
-        pairs AS (
-          SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-          FROM capped a JOIN capped b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-          GROUP BY 1, 2)
+      Some(s"""WITH ${shingles()},
+        ${sizes()},
+        ${capped(100)},
+        ${pairs("capped")}
         SELECT count(*) AS n_exact_pairs,
           TRUE AS precision_ok, TRUE AS recall_ok, TRUE AS no_null_jaccard
         FROM pairs
         JOIN sizes sa ON sa.doc_id = doc_a
         JOIN sizes sb ON sb.doc_id = doc_b
-        WHERE round(CAST(inter AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - inter AS DOUBLE), 6) >= 0.5""")))
+        WHERE $jaccard >= 0.5""")))
 }

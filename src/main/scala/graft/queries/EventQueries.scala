@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.operators.{Features, Json}
 import graft.queries.Fixtures._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr}
 
 /** Batch event analytics: hourly stats, sessions, hopping and session
@@ -41,13 +42,9 @@ object EventQueries {
             AS attributed_cents
         FROM wgt"""
 
-  val all: Seq[Query] = Seq(
-    // first-order event-type transition counts (the Markov matrix of
-    // user paths): lead over the total (ts, event_id) order per user,
-    // one user-key exchange + one bounded-key aggregate
-    Query("q_event_transitions", (s, dir) =>
-      Features.eventTransitions(events(s, dir)),
-      Some("""WITH e AS (
+  /** Shared by q_event_transitions and its streaming twin. */
+  private[queries] val eventTransitionsOracle: String =
+    """WITH e AS (
           SELECT user_id, ts, event_id, event_type FROM events
           WHERE user_id IS NOT NULL AND ts IS NOT NULL),
         t AS (
@@ -55,7 +52,93 @@ object EventQueries {
             lead(event_type) OVER (PARTITION BY user_id ORDER BY ts ASC, event_id ASC) AS to_type
           FROM e)
         SELECT from_type, to_type, count(*) AS n_transitions
-        FROM t WHERE to_type IS NOT NULL GROUP BY 1, 2""")),
+        FROM t WHERE to_type IS NOT NULL GROUP BY 1, 2"""
+
+  /** Shared by q_session_window and its streaming twin. */
+  private[queries] val sessionWindowOracle: String =
+    """WITH e AS (
+          SELECT user_id, CAST(ts AS TIMESTAMP) AS ts,
+            CAST(round(value * 100) AS BIGINT) AS cents
+          FROM events),
+        t AS (
+          SELECT user_id, ts, cents,
+            CASE WHEN lag(ts) OVER w IS NULL
+                   OR date_diff('microsecond', lag(ts) OVER w, ts)
+                      > 1800000000 THEN 1 ELSE 0 END AS ns
+          FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
+        s AS (
+          SELECT *, sum(ns) OVER (PARTITION BY user_id ORDER BY ts) AS sid
+          FROM t)
+        SELECT user_id, min(ts) AS session_start,
+          max(ts) + INTERVAL 30 MINUTE AS session_end,
+          count(*) AS n_events, CAST(sum(cents) AS BIGINT) AS value_cents
+        FROM s GROUP BY user_id, sid"""
+
+  /** Shared by q_attribution and its streaming twin. */
+  private[queries] val attributionOracle: String =
+    """SELECT c.event_id AS click_id, p.event_id AS purchase_id, p.user_id,
+          CAST(c.ts AS TIMESTAMP) AS click_ts,
+          CAST(p.ts AS TIMESTAMP) AS purchase_ts,
+          CAST(round(p.value * 100) AS BIGINT) AS value_cents
+        FROM events c JOIN events p
+          ON c.user_id = p.user_id
+          AND c.event_type = 'click' AND p.event_type = 'purchase'
+          AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 30 MINUTE"""
+
+  /** `s`: each event with its 30-minute-gap session number per user,
+    * `session_seq`. Shared by q_sessionize and its streaming twin.
+    */
+  private[queries] val sessions: String =
+    """WITH e AS (
+          SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, value FROM events),
+        t AS (
+          SELECT user_id, ts, value,
+            CASE WHEN lag(ts) OVER w IS NULL
+                   OR CAST(floor(epoch(ts)) AS BIGINT)
+                      - CAST(floor(epoch(lag(ts) OVER w)) AS BIGINT) > 1800
+                 THEN 1 ELSE 0 END AS ns
+          FROM e
+          WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
+        s AS (
+          SELECT *, CAST(sum(ns) OVER (PARTITION BY user_id ORDER BY ts) AS BIGINT) AS session_seq
+          FROM t)"""
+
+  /** `e`, the events, and `d`, their per-user hourly snapshots: the
+    * relations every q_asof_* oracle joins.
+    */
+  private val hourlySnapshots: String =
+    """WITH e AS (
+          SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts, value FROM events),
+        d AS (
+          SELECT user_id, date_trunc('hour', ts) AS snap_ts,
+            count(*) AS hr_events,
+            CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS hr_value_cents
+          FROM e GROUP BY 1, 2)"""
+
+  /** Each event (event_id, user_id, ts) joined as of its ts to its
+    * user's hourly snapshots (hr_events, hr_value_cents).
+    */
+  private def asOfHourly(s: SparkSession, dir: String)(direction: String = "backward",
+      toleranceMs: Option[Long] = None): DataFrame = {
+    val ev = events(s, dir).select("event_id", "user_id", "ts", "value")
+    val dim = ev.groupBy(col("user_id"),
+        expr("date_trunc('hour', ts)").as("snap_ts"))
+      .agg(expr("count(1)").as("hr_events"),
+        expr("sum(CAST(round(value * 100) AS LONG))").as("hr_value_cents"))
+    graft.operators.AsOf.asOfJoin(
+      ev.select("event_id", "user_id", "ts"), dim,
+      on = Seq("user_id"), leftTs = "ts", rightTs = "snap_ts",
+      payload = Seq("hr_events", "hr_value_cents"),
+      toleranceMs = toleranceMs, direction = direction)
+  }
+
+  val all: Seq[Query] = Seq(
+    // first-order event-type transition counts (the Markov matrix of
+    // user paths): lead over the total (ts, event_id) order per user,
+    // one user-key exchange + one bounded-key aggregate
+    Query("q_event_transitions", (s, dir) =>
+      Features.eventTransitions(events(s, dir)),
+      Some(eventTransitionsOracle)),
 
     // ------- event stream (batch forms; streaming forms in graft.streaming)
     Query("q_events_hourly", (s, dir) =>
@@ -68,19 +151,7 @@ object EventQueries {
         GROUP BY 1, 2""")),
     Query("q_sessionize", (s, dir) =>
       graft.streaming.Events.sessionizeBatch(events(s, dir)),
-      Some("""WITH e AS (
-          SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, value FROM events),
-        t AS (
-          SELECT user_id, ts, value,
-            CASE WHEN lag(ts) OVER w IS NULL
-                   OR CAST(floor(epoch(ts)) AS BIGINT)
-                      - CAST(floor(epoch(lag(ts) OVER w)) AS BIGINT) > 1800
-                 THEN 1 ELSE 0 END AS ns
-          FROM e
-          WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
-        s AS (
-          SELECT *, CAST(sum(ns) OVER (PARTITION BY user_id ORDER BY ts) AS BIGINT) AS session_seq
-          FROM t)
+      Some(s"""$sessions
         SELECT user_id, session_seq,
           min(ts) AS session_start, max(ts) AS session_end,
           count(*) AS n_events,
@@ -114,23 +185,7 @@ object EventQueries {
       // only a gap STRICTLY greater than the window size breaks (> in the
       // oracle — spec-pinned against Spark), and session_end is last event
       // + gap. Microsecond-exact integer gap comparison.
-      Some("""WITH e AS (
-          SELECT user_id, CAST(ts AS TIMESTAMP) AS ts,
-            CAST(round(value * 100) AS BIGINT) AS cents
-          FROM events),
-        t AS (
-          SELECT user_id, ts, cents,
-            CASE WHEN lag(ts) OVER w IS NULL
-                   OR date_diff('microsecond', lag(ts) OVER w, ts)
-                      > 1800000000 THEN 1 ELSE 0 END AS ns
-          FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
-        s AS (
-          SELECT *, sum(ns) OVER (PARTITION BY user_id ORDER BY ts) AS sid
-          FROM t)
-        SELECT user_id, min(ts) AS session_start,
-          max(ts) + INTERVAL 30 MINUTE AS session_end,
-          count(*) AS n_events, CAST(sum(cents) AS BIGINT) AS value_cents
-        FROM s GROUP BY user_id, sid""")),
+      Some(sessionWindowOracle)),
     // click→purchase attribution: batch form through the guarded bucketed
     // range join (hash join on (user, bucket), never per-key quadratic)
     Query("q_attribution", (s, dir) =>
@@ -138,14 +193,7 @@ object EventQueries {
       // Attribution: both the batch (bucketed range join) and the
       // stream-stream (watermarked inner self-join) forms equal this plain
       // inequality join — inclusive window ends on both engines.
-      Some("""SELECT c.event_id AS click_id, p.event_id AS purchase_id, p.user_id,
-          CAST(c.ts AS TIMESTAMP) AS click_ts,
-          CAST(p.ts AS TIMESTAMP) AS purchase_ts,
-          CAST(round(p.value * 100) AS BIGINT) AS value_cents
-        FROM events c JOIN events p
-          ON c.user_id = p.user_id
-          AND c.event_type = 'click' AND p.event_type = 'purchase'
-          AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 30 MINUTE""")),
+      Some(attributionOracle)),
     // U-shaped (40/20/40) multi-touch credit over the same matched
     // pairs: exact micro-weights, one purchase-key exchange
     Query("q_attribution_multitouch", (s, dir) =>
@@ -160,24 +208,8 @@ object EventQueries {
     // leak-free feature-join shape; DuckDB's native ASOF LEFT JOIN is the
     // oracle, so the semantics (inclusive boundary, left-join nulls,
     // latest-match) are pinned engine-to-engine
-    Query("q_asof_join", (s, dir) => {
-      val ev = events(s, dir).select("event_id", "user_id", "ts", "value")
-      val dim = ev.groupBy(col("user_id"),
-          expr("date_trunc('hour', ts)").as("snap_ts"))
-        .agg(expr("count(1)").as("hr_events"),
-          expr("sum(CAST(round(value * 100) AS LONG))").as("hr_value_cents"))
-      graft.operators.AsOf.asOfJoin(
-        ev.select("event_id", "user_id", "ts"), dim,
-        on = Seq("user_id"), leftTs = "ts", rightTs = "snap_ts",
-        payload = Seq("hr_events", "hr_value_cents"))
-    },
-      Some("""WITH e AS (
-          SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts, value FROM events),
-        d AS (
-          SELECT user_id, date_trunc('hour', ts) AS snap_ts,
-            count(*) AS hr_events,
-            CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS hr_value_cents
-          FROM e GROUP BY 1, 2)
+    Query("q_asof_join", (s, dir) => asOfHourly(s, dir)(),
+      Some(s"""$hourlySnapshots
         SELECT e.event_id, e.user_id, e.ts, d.hr_events, d.hr_value_cents
         FROM e ASOF LEFT JOIN d
           ON e.user_id = d.user_id AND e.ts >= d.snap_ts""")),
@@ -185,25 +217,8 @@ object EventQueries {
     // snapshot after") — DuckDB's ASOF with the inequality flipped is
     // the native oracle; same one-exchange union+window plan, ts order
     // reversed
-    Query("q_asof_fwd", (s, dir) => {
-      val ev = events(s, dir).select("event_id", "user_id", "ts", "value")
-      val dim = ev.groupBy(col("user_id"),
-          expr("date_trunc('hour', ts)").as("snap_ts"))
-        .agg(expr("count(1)").as("hr_events"),
-          expr("sum(CAST(round(value * 100) AS LONG))").as("hr_value_cents"))
-      graft.operators.AsOf.asOfJoin(
-        ev.select("event_id", "user_id", "ts"), dim,
-        on = Seq("user_id"), leftTs = "ts", rightTs = "snap_ts",
-        payload = Seq("hr_events", "hr_value_cents"),
-        direction = "forward")
-    },
-      Some("""WITH e AS (
-          SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts, value FROM events),
-        d AS (
-          SELECT user_id, date_trunc('hour', ts) AS snap_ts,
-            count(*) AS hr_events,
-            CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS hr_value_cents
-          FROM e GROUP BY 1, 2)
+    Query("q_asof_fwd", (s, dir) => asOfHourly(s, dir)(direction = "forward"),
+      Some(s"""$hourlySnapshots
         SELECT e.event_id, e.user_id, e.ts, d.hr_events, d.hr_value_cents
         FROM e ASOF LEFT JOIN d
           ON e.user_id = d.user_id AND e.ts <= d.snap_ts""")),
@@ -211,25 +226,9 @@ object EventQueries {
     // minutes) null out — the kdb wj / pandas merge_asof tolerance
     // contract, previously spec-only; the oracle is the plain-SQL argmin
     // with the same staleness filter
-    Query("q_asof_tolerance", (s, dir) => {
-      val ev = events(s, dir).select("event_id", "user_id", "ts", "value")
-      val dim = ev.groupBy(col("user_id"),
-          expr("date_trunc('hour', ts)").as("snap_ts"))
-        .agg(expr("count(1)").as("hr_events"),
-          expr("sum(CAST(round(value * 100) AS LONG))").as("hr_value_cents"))
-      graft.operators.AsOf.asOfJoin(
-        ev.select("event_id", "user_id", "ts"), dim,
-        on = Seq("user_id"), leftTs = "ts", rightTs = "snap_ts",
-        payload = Seq("hr_events", "hr_value_cents"),
-        toleranceMs = Some(30L * 60 * 1000))
-    },
-      Some("""WITH e AS (
-          SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts, value FROM events),
-        d AS (
-          SELECT user_id, date_trunc('hour', ts) AS snap_ts,
-            count(*) AS hr_events,
-            CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS hr_value_cents
-          FROM e GROUP BY 1, 2),
+    Query("q_asof_tolerance", (s, dir) =>
+      asOfHourly(s, dir)(toleranceMs = Some(30L * 60 * 1000)),
+      Some(s"""$hourlySnapshots,
         best AS (
           SELECT e.event_id, b.hr_events, b.hr_value_cents
           FROM e JOIN LATERAL (
@@ -244,25 +243,8 @@ object EventQueries {
     // backward — DuckDB has no native nearest ASOF, but the semantics are
     // exactly expressible as an argmin over (|delta|, forward-flag), so
     // the row is fully oracle-gated (not spec-only)
-    Query("q_asof_nearest", (s, dir) => {
-      val ev = events(s, dir).select("event_id", "user_id", "ts", "value")
-      val dim = ev.groupBy(col("user_id"),
-          expr("date_trunc('hour', ts)").as("snap_ts"))
-        .agg(expr("count(1)").as("hr_events"),
-          expr("sum(CAST(round(value * 100) AS LONG))").as("hr_value_cents"))
-      graft.operators.AsOf.asOfJoin(
-        ev.select("event_id", "user_id", "ts"), dim,
-        on = Seq("user_id"), leftTs = "ts", rightTs = "snap_ts",
-        payload = Seq("hr_events", "hr_value_cents"),
-        direction = "nearest")
-    },
-      Some("""WITH e AS (
-          SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts, value FROM events),
-        d AS (
-          SELECT user_id, date_trunc('hour', ts) AS snap_ts,
-            count(*) AS hr_events,
-            CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS hr_value_cents
-          FROM e GROUP BY 1, 2)
+    Query("q_asof_nearest", (s, dir) => asOfHourly(s, dir)(direction = "nearest"),
+      Some(s"""$hourlySnapshots
         SELECT event_id, user_id, ts, hr_events, hr_value_cents
         FROM (
           SELECT e.event_id, e.user_id, e.ts, d.hr_events, d.hr_value_cents,

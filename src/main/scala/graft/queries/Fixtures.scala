@@ -4,6 +4,8 @@ import graft.analyze.Compiler
 import graft.exec.{Runner, Runners}
 import graft.operators.Similarity
 import graft.{RuntimeProject, SampleProject}
+import graft.core.Dirs
+import java.nio.file.Paths
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The fixtures every query family builds on: the compiled sample and
@@ -22,9 +24,9 @@ object Fixtures {
     * temp dir because YamlLoader reads a directory tree.
     */
   lazy val yamlCompiled = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_runtime_project")
-    RuntimeProject.copyTo(tmp)
-    new Compiler(graft.parse.YamlLoader.load(tmp.toString)).compile()
+    val tmp = tempDir("graft_runtime_project")
+    RuntimeProject.copyTo(Paths.get(tmp))
+    new Compiler(graft.parse.YamlLoader.load(tmp)).compile()
   }
 
   def yamlRunner(sfDir: String): Runner =
@@ -127,5 +129,17 @@ object Fixtures {
   private val stagedStreams =
     new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
   def staged(dir: String, shape: String)(stage: => String): String =
-    stagedStreams.computeIfAbsent((dir, shape), _ => stage)
+    stagedStreams.computeIfAbsent((dir, shape), _ => deleteAtExit(stage))
+
+  /** The temp dirs the fixtures keep for the life of the JVM (a query's
+    * result may read its dir until then), deleted by one shutdown hook.
+    */
+  private val keptDirs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  private lazy val exitHook: Unit = Runtime.getRuntime.addShutdownHook(new Thread(() =>
+    keptDirs.forEach(d => scala.util.Try(Dirs.deleteTree(Paths.get(d)))), "graft-fixture-dirs"))
+  private def deleteAtExit(dir: String): String = { exitHook; keptDirs.add(dir); dir }
+
+  /** A fresh temp dir named `prefix…`, deleted at JVM exit. */
+  private[queries] def tempDir(prefix: String): String =
+    deleteAtExit(java.nio.file.Files.createTempDirectory(prefix).toString)
 }

@@ -13,14 +13,9 @@ import org.apache.spark.sql.functions.{coalesce, col, expr, lit}
   * audits over the same warehouse.
   */
 object HubQueries {
-  val all: Seq[Query] = Seq(
-    // S1/P1/P2/P3/P6 + J1/J2/J5/J7 (implicit + explicit paths, reverse hop)
-    Query("q_lineitem_enriched", (_, dir) =>
-      runner(dir).hubSelect("tpch_lineitem",
-        "l_orderkey", "l_linenumber", "net_price", "net_price_no_returns",
-        "c_name", "c_n_name", "r_name", "part_type", "supp_name",
-        "order_line_key", "order_ym"),
-      Some("""SELECT l.l_orderkey, l.l_linenumber,
+  /** Shared by q_lineitem_enriched and q_lineitem_enriched_sql. */
+  private val lineitemEnrichedOracle: String =
+    """SELECT l.l_orderkey, l.l_linenumber,
           (l.l_extendedprice - l.l_tax - l.l_discount) * 100 AS net_price,
           CASE WHEN l.l_returnflag = 'R' THEN 0.0
                ELSE (l.l_extendedprice - l.l_tax - l.l_discount) * 100 END AS net_price_no_returns,
@@ -38,7 +33,37 @@ object HubQueries {
         LEFT JOIN supplier s ON l.l_suppkey = s.s_suppkey
         LEFT JOIN nation ns ON ns.n_nationkey = s.s_nationkey
         LEFT JOIN region r ON ns.n_regionkey = r.r_regionkey
-        LEFT JOIN part p ON l.l_partkey = p.p_partkey""")),
+        LEFT JOIN part p ON l.l_partkey = p.p_partkey"""
+
+  /** Shared by q_feature_customer and q_feature_customer_mat. */
+  private val featureCustomerOracle: String =
+    """SELECT c.c_name AS customer,
+          strftime(o.o_orderdate, '%Y%m') AS ship_ym,
+          CAST(sum(CAST(round((l.l_extendedprice - l.l_tax - l.l_discount) * 100) AS BIGINT))
+               AS BIGINT) AS net_price_100
+        FROM lineitem l
+        LEFT JOIN orders o ON l.l_orderkey = o.o_orderkey
+        LEFT JOIN customer c ON o.o_custkey = c.c_custkey
+        WHERE l.l_shipdate BETWEEN '1993-01-01' AND '1998-12-31'
+        GROUP BY c.c_name, strftime(o.o_orderdate, '%Y%m')"""
+
+  /** Shared by q_party_summary and q_party_summary_file. */
+  private val partySummaryOracle: String =
+    """SELECT c_name AS party_name, c_mktsegment AS party_type,
+          c_acctbal AS acctbal, c_nationkey AS nation_key
+        FROM customer
+        UNION ALL
+        SELECT s_name, CAST(null AS VARCHAR), s_acctbal, s_nationkey
+        FROM supplier"""
+
+  val all: Seq[Query] = Seq(
+    // S1/P1/P2/P3/P6 + J1/J2/J5/J7 (implicit + explicit paths, reverse hop)
+    Query("q_lineitem_enriched", (_, dir) =>
+      runner(dir).hubSelect("tpch_lineitem",
+        "l_orderkey", "l_linenumber", "net_price", "net_price_no_returns",
+        "c_name", "c_n_name", "r_name", "part_type", "supp_name",
+        "order_line_key", "order_ym"),
+      Some(lineitemEnrichedOracle)),
     // C9 SQL-emission side channel on the driver path: the emitted
     // reference-style SQL (CTE chains + lateral many-joins) EXECUTES via
     // spark.sql over hub temp views in topo order, and its result is
@@ -103,25 +128,7 @@ object HubQueries {
         "order_line_key", "order_ym")
     },
       // C9: the emitted-SQL execution path shares the planner row's oracle.
-      Some("""SELECT l.l_orderkey, l.l_linenumber,
-          (l.l_extendedprice - l.l_tax - l.l_discount) * 100 AS net_price,
-          CASE WHEN l.l_returnflag = 'R' THEN 0.0
-               ELSE (l.l_extendedprice - l.l_tax - l.l_discount) * 100 END AS net_price_no_returns,
-          c.c_name AS c_name,
-          n2.n_name AS c_n_name,
-          r.r_name AS r_name,
-          p.p_type AS part_type,
-          s.s_name AS supp_name,
-          CONCAT(l.l_orderkey, '|', l.l_linenumber) AS order_line_key,
-          strftime(o.o_orderdate, '%Y%m') AS order_ym
-        FROM lineitem l
-        LEFT JOIN orders o ON l.l_orderkey = o.o_orderkey
-        LEFT JOIN customer c ON o.o_custkey = c.c_custkey
-        LEFT JOIN nation n2 ON c.c_nationkey = n2.n_nationkey
-        LEFT JOIN supplier s ON l.l_suppkey = s.s_suppkey
-        LEFT JOIN nation ns ON ns.n_nationkey = s.s_nationkey
-        LEFT JOIN region r ON ns.n_regionkey = r.r_regionkey
-        LEFT JOIN part p ON l.l_partkey = p.p_partkey""")),
+      Some(lineitemEnrichedOracle)),
     // J4/A1: M-aggregates over reverse path + scalar lookup
     Query("q_customer_aggs", (_, dir) =>
       runner(dir).hubSelect("tpch_customer",
@@ -299,43 +306,22 @@ object HubQueries {
 
     // P4/A2/S4: filtered aggregate output channel
     Query("q_feature_customer", (_, dir) => runner(dir).output("feature_customer"),
-      Some("""SELECT c.c_name AS customer,
-          strftime(o.o_orderdate, '%Y%m') AS ship_ym,
-          CAST(sum(CAST(round((l.l_extendedprice - l.l_tax - l.l_discount) * 100) AS BIGINT))
-               AS BIGINT) AS net_price_100
-        FROM lineitem l
-        LEFT JOIN orders o ON l.l_orderkey = o.o_orderkey
-        LEFT JOIN customer c ON o.o_custkey = c.c_custkey
-        WHERE l.l_shipdate BETWEEN '1993-01-01' AND '1998-12-31'
-        GROUP BY c.c_name, strftime(o.o_orderdate, '%Y%m')""")),
+      Some(featureCustomerOracle)),
     // S3 hub materialization on the driver path: the same output computed
     // through DROP/CREATE-style hub parquet round-trips (every hub written
     // and re-read — the reference's hub-table contract and the restartable
     // large-pipeline mode) must be value-identical to the lazy single-DAG
     // plan; oracle = the q_feature_customer SQL
     Query("q_feature_customer_mat", (_, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_hub_mat").toString
+      val tmp = tempDir("graft_hub_mat")
       new Runner(compiled, Runners.parquetDir(dir), materializeDir = Some(tmp))
         .output("feature_customer")
     },
       // S3 materialized-hub path: same result contract as the lazy plan.
-      Some("""SELECT c.c_name AS customer,
-          strftime(o.o_orderdate, '%Y%m') AS ship_ym,
-          CAST(sum(CAST(round((l.l_extendedprice - l.l_tax - l.l_discount) * 100) AS BIGINT))
-               AS BIGINT) AS net_price_100
-        FROM lineitem l
-        LEFT JOIN orders o ON l.l_orderkey = o.o_orderkey
-        LEFT JOIN customer c ON o.o_custkey = c.c_custkey
-        WHERE l.l_shipdate BETWEEN '1993-01-01' AND '1998-12-31'
-        GROUP BY c.c_name, strftime(o.o_orderdate, '%Y%m')""")),
+      Some(featureCustomerOracle)),
     // O1/P7: multi-channel UNION ALL with typed null fill
     Query("q_party_summary", (_, dir) => runner(dir).output("party_summary"),
-      Some("""SELECT c_name AS party_name, c_mktsegment AS party_type,
-          c_acctbal AS acctbal, c_nationkey AS nation_key
-        FROM customer
-        UNION ALL
-        SELECT s_name, CAST(null AS VARCHAR), s_acctbal, s_nationkey
-        FROM supplier""")),
+      Some(partySummaryOracle)),
     // S4/S6 run-path file sink on the driver path: the same output executed
     // through Runner.run's `file` sink (parquet under outDir — the
     // reference's file-output contract) and read back; oracle = the
@@ -344,17 +330,12 @@ object HubQueries {
       val fileProj = SampleProject.project.copy(outputs = Seq(
         SampleProject.partySummary.copy(
           outputType = graft.core.OutputType.File("parquet"))))
-      val tmp = java.nio.file.Files.createTempDirectory("graft_out_file").toString
+      val tmp = tempDir("graft_out_file")
       new Runner(new Compiler(fileProj).compile(), Runners.parquetDir(dir)).run(tmp)
       s.read.parquet(s"$tmp/party_summary")
     },
       // S4/S6 file-sink round trip shares the planner row's oracle.
-      Some("""SELECT c_name AS party_name, c_mktsegment AS party_type,
-          c_acctbal AS acctbal, c_nationkey AS nation_key
-        FROM customer
-        UNION ALL
-        SELECT s_name, CAST(null AS VARCHAR), s_acctbal, s_nationkey
-        FROM supplier""")),
+      Some(partySummaryOracle)),
     // A2/A3: DISTINCT + plain aggregates, min/max
     Query("q_order_stats", (_, dir) => runner(dir).output("order_stats"),
       Some("""SELECT CAST(year(o_orderdate) AS INTEGER) AS o_year,

@@ -8,6 +8,37 @@ import org.apache.spark.sql.functions.{col, expr, lit}
   * their recall envelopes, and embedding-based duplicate pairs.
   */
 object SimilarityQueries {
+  /** `q`, the first 16 vectors, and `sc`, their exact cosine to every
+    * other vector.
+    */
+  private val bruteScores =
+    """WITH q AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 16),
+        sc AS (
+          SELECT q.vec_id AS query_id, c.vec_id AS match_id,
+            round(list_dot_product(CAST(q.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[]))
+              / (sqrt(list_dot_product(CAST(q.embedding AS DOUBLE[]), CAST(q.embedding AS DOUBLE[])))
+               * sqrt(list_dot_product(CAST(c.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[])))), 6) AS cosine
+          FROM q, embeddings c
+          WHERE q.vec_id != c.vec_id)"""
+
+  /** The rows of `sc` ranked in the top 5 of their query, as `rn`. */
+  private val top5 =
+    """FROM (SELECT *, row_number() OVER (PARTITION BY query_id
+                ORDER BY cosine DESC, match_id) AS rn FROM sc)
+        WHERE rn <= 5"""
+
+  /** Shared by q_similarity_topk and its exhaustive IVF and LSH probes. */
+  private val topKOracle =
+    s"""$bruteScores
+        SELECT query_id, match_id, cosine, CAST(rn AS INTEGER) AS rank
+        $top5"""
+
+  /** Shared by q_q8_recall_bounds and q_lsh_recall_bounds. */
+  private val recallBoundsOracle =
+    s"""$bruteScores
+        SELECT count(*) AS n_brute_rows, TRUE AS recall_ok
+        $top5"""
+
   val all: Seq[Query] = Seq(
     // SemDeDup keep/drop decisions vs the DuckDB global brute force: a
     // vector is dropped iff a smaller-id near-duplicate shares its KMeans
@@ -112,18 +143,7 @@ object SimilarityQueries {
       Similarity.cosineTopK(e, e.filter(col("vec_id") < 16), k = 5)
         .select("query_id", "match_id", "cosine", "rank")
     },
-      Some("""WITH q AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 16),
-        sc AS (
-          SELECT q.vec_id AS query_id, c.vec_id AS match_id,
-            round(list_dot_product(CAST(q.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[]))
-              / (sqrt(list_dot_product(CAST(q.embedding AS DOUBLE[]), CAST(q.embedding AS DOUBLE[])))
-               * sqrt(list_dot_product(CAST(c.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[])))), 6) AS cosine
-          FROM q, embeddings c
-          WHERE q.vec_id != c.vec_id)
-        SELECT query_id, match_id, cosine, CAST(rn AS INTEGER) AS rank
-        FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-                ORDER BY cosine DESC, match_id) AS rn FROM sc)
-        WHERE rn <= 5""")),
+      Some(topKOracle)),
     // int8-quantized brute force: maxabs quantization + exact integer
     // cosine are BOTH mirrored in DuckDB arithmetic-for-arithmetic, so
     // unlike the LSH/IVF approximations this row is fully hash-gated —
@@ -134,7 +154,7 @@ object SimilarityQueries {
       Similarity.cosineTopKQ8(e, e.filter(col("vec_id") < 16), k = 5)
         .select("query_id", "match_id", "cosine", "rank")
     },
-      Some("""WITH z AS (
+      Some(s"""WITH z AS (
           SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e,
             list_max(list_transform(CAST(embedding AS DOUBLE[]), x -> abs(x))) AS mx
           FROM embeddings),
@@ -150,9 +170,7 @@ object SimilarityQueries {
           FROM (SELECT * FROM qz WHERE vec_id < 16) a, qz c
           WHERE a.vec_id != c.vec_id)
         SELECT query_id, match_id, cosine, CAST(rn AS INTEGER) AS rank
-        FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-                ORDER BY cosine DESC, match_id) AS rn FROM sc)
-        WHERE rn <= 5""")),
+        $top5""")),
     // quantization-error envelope: recall@5 of the q8 ranking vs full
     // precision, floor 0.9 (oracle states the floor as a literal — a
     // violated floor breaks the hash match)
@@ -169,18 +187,7 @@ object SimilarityQueries {
         .select(col("n_brute_rows"),
           (col("__nhit") >= col("n_brute_rows") * 0.9).as("recall_ok"))
     },
-      Some("""WITH q AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 16),
-        sc AS (
-          SELECT q.vec_id AS query_id, c.vec_id AS match_id,
-            round(list_dot_product(CAST(q.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[]))
-              / (sqrt(list_dot_product(CAST(q.embedding AS DOUBLE[]), CAST(q.embedding AS DOUBLE[])))
-               * sqrt(list_dot_product(CAST(c.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[])))), 6) AS cosine
-          FROM q, embeddings c
-          WHERE q.vec_id != c.vec_id)
-        SELECT count(*) AS n_brute_rows, TRUE AS recall_ok
-        FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-                ORDER BY cosine DESC, match_id) AS rn FROM sc)
-        WHERE rn <= 5""")),
+      Some(recallBoundsOracle)),
     // FAISS discipline: the IVF index is fitted ONCE per dataset (memoized
     // below — coarse quantizer on a half sample, cell-assigned corpus
     // persisted) and every invocation runs the PROBE path only; the bench's
@@ -209,18 +216,7 @@ object SimilarityQueries {
         .select("query_id", "match_id", "cosine", "rank")
     },
       // Exhaustive IVF probe shares the brute-force top-k oracle.
-      Some("""WITH q AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 16),
-        sc AS (
-          SELECT q.vec_id AS query_id, c.vec_id AS match_id,
-            round(list_dot_product(CAST(q.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[]))
-              / (sqrt(list_dot_product(CAST(q.embedding AS DOUBLE[]), CAST(q.embedding AS DOUBLE[])))
-               * sqrt(list_dot_product(CAST(c.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[])))), 6) AS cosine
-          FROM q, embeddings c
-          WHERE q.vec_id != c.vec_id)
-        SELECT query_id, match_id, cosine, CAST(rn AS INTEGER) AS rank
-        FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-                ORDER BY cosine DESC, match_id) AS rn FROM sc)
-        WHERE rn <= 5""")),
+      Some(topKOracle)),
     Query("q_similarity_topk_lsh", (s, dir) => {
       val e = embeds(s, dir)
       // weakly-similar corpus (max pairwise cosine ≈ 0.5): few bits, many
@@ -245,18 +241,7 @@ object SimilarityQueries {
         .select("query_id", "match_id", "cosine", "rank")
     },
       // Exhaustive LSH probe shares the brute-force top-k oracle.
-      Some("""WITH q AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 16),
-        sc AS (
-          SELECT q.vec_id AS query_id, c.vec_id AS match_id,
-            round(list_dot_product(CAST(q.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[]))
-              / (sqrt(list_dot_product(CAST(q.embedding AS DOUBLE[]), CAST(q.embedding AS DOUBLE[])))
-               * sqrt(list_dot_product(CAST(c.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[])))), 6) AS cosine
-          FROM q, embeddings c
-          WHERE q.vec_id != c.vec_id)
-        SELECT query_id, match_id, cosine, CAST(rn AS INTEGER) AS rank
-        FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-                ORDER BY cosine DESC, match_id) AS rn FROM sc)
-        WHERE rn <= 5""")),
+      Some(topKOracle)),
     // recall@k envelope for the APPROXIMATE banding above (nBits=4,
     // tables=12): engine-side overall recall vs the brute-force top-k must
     // clear 0.7 (measured 0.75 / 0.81 / 0.89 at sf0.01 / 0.001 / 0.1 —
@@ -277,16 +262,5 @@ object SimilarityQueries {
     },
       // LSH recall envelope: the brute-force row count is the oracle's half;
       // the recall floor is the engine-side claim stated as a literal.
-      Some("""WITH q AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 16),
-        sc AS (
-          SELECT q.vec_id AS query_id, c.vec_id AS match_id,
-            round(list_dot_product(CAST(q.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[]))
-              / (sqrt(list_dot_product(CAST(q.embedding AS DOUBLE[]), CAST(q.embedding AS DOUBLE[])))
-               * sqrt(list_dot_product(CAST(c.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[])))), 6) AS cosine
-          FROM q, embeddings c
-          WHERE q.vec_id != c.vec_id)
-        SELECT count(*) AS n_brute_rows, TRUE AS recall_ok
-        FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-                ORDER BY cosine DESC, match_id) AS rn FROM sc)
-        WHERE rn <= 5""")))
+      Some(recallBoundsOracle)))
 }

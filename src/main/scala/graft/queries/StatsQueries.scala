@@ -9,6 +9,77 @@ import org.apache.spark.sql.functions.{col, expr, lit}
   * label centroids.
   */
 object StatsQueries {
+  /** Shared by q_rolling_features and its streaming twin. */
+  private[queries] val rollingFeaturesOracle: String =
+    """WITH e AS (
+          SELECT event_id, user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us,
+            CAST(round(value * 100) AS BIGINT) AS value_cents
+          FROM events)
+        SELECT event_id, user_id, value_cents,
+          count(*) OVER w_range AS roll_n,
+          CAST(sum(value_cents) OVER w_range AS BIGINT) AS roll_cents,
+          lag(value_cents) OVER w_row AS prev_cents,
+          us - lag(us) OVER w_row AS gap_us
+        FROM e
+        WINDOW
+          w_range AS (PARTITION BY user_id ORDER BY us
+            RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW),
+          w_row AS (PARTITION BY user_id ORDER BY us, event_id)"""
+
+  /** Shared by q_retention and its streaming twin. */
+  private[queries] val retentionOracle: String =
+    """WITH uw AS (
+          SELECT user_id,
+            CAST(floor(CAST(epoch_us(CAST(ts AS TIMESTAMP)) AS DOUBLE)
+              / 604800000000) AS BIGINT) AS week
+          FROM events GROUP BY 1, 2),
+        c AS (SELECT user_id, min(week) AS cohort_week FROM uw GROUP BY 1)
+        SELECT cohort_week, week - cohort_week AS week_offset,
+          count(*) AS n_users
+        FROM uw JOIN c USING (user_id) GROUP BY 1, 2"""
+
+  /** Shared by q_funnel and its streaming twin. */
+  private[queries] val funnelOracle: String =
+    """WITH s0 AS (
+          SELECT user_id, min(epoch_us(CAST(ts AS TIMESTAMP))) AS t
+          FROM events
+          WHERE event_type = 'view' AND user_id IS NOT NULL
+            AND ts IS NOT NULL
+          GROUP BY 1),
+        s1 AS (
+          SELECT e.user_id, min(epoch_us(CAST(e.ts AS TIMESTAMP))) AS t
+          FROM events e JOIN s0 ON e.user_id = s0.user_id
+          WHERE e.event_type = 'click'
+            AND epoch_us(CAST(e.ts AS TIMESTAMP)) > s0.t
+          GROUP BY 1),
+        s2 AS (
+          SELECT e.user_id, min(epoch_us(CAST(e.ts AS TIMESTAMP))) AS t
+          FROM events e JOIN s1 ON e.user_id = s1.user_id
+          WHERE e.event_type = 'purchase'
+            AND epoch_us(CAST(e.ts AS TIMESTAMP)) > s1.t
+          GROUP BY 1)
+        SELECT 0 AS stage_idx, 'view' AS stage,
+          (SELECT count(*) FROM s0) AS n_users
+        UNION ALL SELECT 1, 'click', (SELECT count(*) FROM s1)
+        UNION ALL SELECT 2, 'purchase', (SELECT count(*) FROM s2)"""
+
+  /** Each `j` (n_a, n_b) row's chi-square contribution against the
+    * column totals `t` (tot_a, tot_b), rounded to 6 places.
+    */
+  private val chi2Term: String =
+    """round(
+            pow(CAST(n_a AS DOUBLE) - (CAST(n_a + n_b AS DOUBLE)
+              * CAST(tot_a AS DOUBLE)
+              / CAST(tot_a + tot_b AS DOUBLE)), 2)
+            / (CAST(n_a + n_b AS DOUBLE) * CAST(tot_a AS DOUBLE)
+              / CAST(tot_a + tot_b AS DOUBLE))
+            + pow(CAST(n_b AS DOUBLE) - (CAST(n_a + n_b AS DOUBLE)
+              * CAST(tot_b AS DOUBLE)
+              / CAST(tot_a + tot_b AS DOUBLE)), 2)
+            / (CAST(n_a + n_b AS DOUBLE) * CAST(tot_b AS DOUBLE)
+              / CAST(tot_a + tot_b AS DOUBLE)), 6) AS chi2_term
+        FROM j, t"""
+
   val all: Seq[Query] = Seq(
     // per-dimension embedding stats in exact fixed point: micro-unit
     // sums/sums-of-squares in DECIMAL(38,0) (a double sum over 1e11
@@ -100,20 +171,7 @@ object StatsQueries {
       // CURRENT ROW means "last peer", identical in both engines); the lag
       // window totally ordered by (us, event_id). DuckDB's sum(BIGINT) is
       // HUGEINT — cast back so both sides render as int64.
-      Some("""WITH e AS (
-          SELECT event_id, user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us,
-            CAST(round(value * 100) AS BIGINT) AS value_cents
-          FROM events)
-        SELECT event_id, user_id, value_cents,
-          count(*) OVER w_range AS roll_n,
-          CAST(sum(value_cents) OVER w_range AS BIGINT) AS roll_cents,
-          lag(value_cents) OVER w_row AS prev_cents,
-          us - lag(us) OVER w_row AS gap_us
-        FROM e
-        WINDOW
-          w_range AS (PARTITION BY user_id ORDER BY us
-            RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW),
-          w_row AS (PARTITION BY user_id ORDER BY us, event_id)""")),
+      Some(rollingFeaturesOracle)),
     // categorical drift between the even/odd doc_id halves over `source`:
     // exact per-key counts + a lockstep-derived chi-square contribution
     // (the two halves of one fixture are a null-hypothesis pair — the
@@ -126,7 +184,7 @@ object StatsQueries {
     },
       // chi-square contribution kept in LOCKSTEP with
       // Stats.categoricalDrift — same casts, association order, rounding
-      Some("""WITH a AS (
+      Some(s"""WITH a AS (
           SELECT source, count(*) AS n_a FROM documents
           WHERE doc_id % 2 = 0 GROUP BY 1),
         b AS (
@@ -138,18 +196,7 @@ object StatsQueries {
           FROM a FULL OUTER JOIN b ON a.source = b.source),
         t AS (SELECT sum(n_a) AS tot_a, sum(n_b) AS tot_b FROM j)
         SELECT source, CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
-          round(
-            pow(CAST(n_a AS DOUBLE) - (CAST(n_a + n_b AS DOUBLE)
-              * CAST(tot_a AS DOUBLE)
-              / CAST(tot_a + tot_b AS DOUBLE)), 2)
-            / (CAST(n_a + n_b AS DOUBLE) * CAST(tot_a AS DOUBLE)
-              / CAST(tot_a + tot_b AS DOUBLE))
-            + pow(CAST(n_b AS DOUBLE) - (CAST(n_a + n_b AS DOUBLE)
-              * CAST(tot_b AS DOUBLE)
-              / CAST(tot_a + tot_b AS DOUBLE)), 2)
-            / (CAST(n_a + n_b AS DOUBLE) * CAST(tot_b AS DOUBLE)
-              / CAST(tot_a + tot_b AS DOUBLE)), 6) AS chi2_term
-        FROM j, t""")),
+          $chi2Term""")),
     // numeric drift: baseline-decile bins (histogram-side cumBefore, no
     // corpus window) broadcast to both slices, chi-square per bin; the
     // +20 shift on the current slice makes the drift signal real
@@ -163,7 +210,7 @@ object StatsQueries {
     },
       // numeric drift mirrored: identical cumBefore edge derivation,
       // identical count-of-edges bin assignment, identical chi2 text
-      Some("""WITH sa AS (
+      Some(s"""WITH sa AS (
           SELECT CAST(n_chars AS BIGINT) AS s FROM documents
           WHERE doc_id % 2 = 0 AND n_chars IS NOT NULL),
         sb AS (
@@ -192,18 +239,7 @@ object StatsQueries {
         t AS (SELECT sum(n_a) AS tot_a, sum(n_b) AS tot_b FROM j)
         SELECT CAST(bin AS INT) AS bin,
           CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
-          round(
-            pow(CAST(n_a AS DOUBLE) - (CAST(n_a + n_b AS DOUBLE)
-              * CAST(tot_a AS DOUBLE)
-              / CAST(tot_a + tot_b AS DOUBLE)), 2)
-            / (CAST(n_a + n_b AS DOUBLE) * CAST(tot_a AS DOUBLE)
-              / CAST(tot_a + tot_b AS DOUBLE))
-            + pow(CAST(n_b AS DOUBLE) - (CAST(n_a + n_b AS DOUBLE)
-              * CAST(tot_b AS DOUBLE)
-              / CAST(tot_a + tot_b AS DOUBLE)), 2)
-            / (CAST(n_a + n_b AS DOUBLE) * CAST(tot_b AS DOUBLE)
-              / CAST(tot_a + tot_b AS DOUBLE)), 6) AS chi2_term
-        FROM j, t""")),
+          $chi2Term""")),
     // robust per-language length outliers: median/MAD double histogram
     // pass, all-integer k·MAD cut. The fixture's length distribution is
     // light-tailed (zero rows clear 3·MAD), so every %211th doc gets a
@@ -298,15 +334,7 @@ object StatsQueries {
       Features.retentionCohorts(events(s, dir)),
       // exact integer weeks (micros DIV week-micros); the join-free Spark
       // plan and this join-shaped reference compute the same matrix
-      Some("""WITH uw AS (
-          SELECT user_id,
-            CAST(floor(CAST(epoch_us(CAST(ts AS TIMESTAMP)) AS DOUBLE)
-              / 604800000000) AS BIGINT) AS week
-          FROM events GROUP BY 1, 2),
-        c AS (SELECT user_id, min(week) AS cohort_week FROM uw GROUP BY 1)
-        SELECT cohort_week, week - cohort_week AS week_offset,
-          count(*) AS n_users
-        FROM uw JOIN c USING (user_id) GROUP BY 1, 2""")),
+      Some(retentionOracle)),
     // ordered view→click→purchase conversion: greedy-earliest chain,
     // strict-> stage advance, every join/agg on one user-key
     // partitioning (see Features.funnel)
@@ -314,28 +342,7 @@ object StatsQueries {
       Features.funnel(events(s, dir), Seq("view", "click", "purchase")),
       // greedy-earliest funnel chain in lockstep: each stage joins the
       // previous stage's (user, min-ts) and advances on strict >
-      Some("""WITH s0 AS (
-          SELECT user_id, min(epoch_us(CAST(ts AS TIMESTAMP))) AS t
-          FROM events
-          WHERE event_type = 'view' AND user_id IS NOT NULL
-            AND ts IS NOT NULL
-          GROUP BY 1),
-        s1 AS (
-          SELECT e.user_id, min(epoch_us(CAST(e.ts AS TIMESTAMP))) AS t
-          FROM events e JOIN s0 ON e.user_id = s0.user_id
-          WHERE e.event_type = 'click'
-            AND epoch_us(CAST(e.ts AS TIMESTAMP)) > s0.t
-          GROUP BY 1),
-        s2 AS (
-          SELECT e.user_id, min(epoch_us(CAST(e.ts AS TIMESTAMP))) AS t
-          FROM events e JOIN s1 ON e.user_id = s1.user_id
-          WHERE e.event_type = 'purchase'
-            AND epoch_us(CAST(e.ts AS TIMESTAMP)) > s1.t
-          GROUP BY 1)
-        SELECT 0 AS stage_idx, 'view' AS stage,
-          (SELECT count(*) FROM s0) AS n_users
-        UNION ALL SELECT 1, 'click', (SELECT count(*) FROM s1)
-        UNION ALL SELECT 2, 'purchase', (SELECT count(*) FROM s2)""")),
+      Some(funnelOracle)),
     // per-label centroids in exact micro fixed point; sums cross the
     // gate as VARCHAR digits (the q_embed_dim_stats discipline)
     Query("q_label_centroids", (s, dir) =>

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.operators.CorpusPipeline
+import graft.streaming.Events
 import graft.queries.Fixtures._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, col, concat, expr, lit}
@@ -11,12 +12,16 @@ import org.apache.spark.sql.functions.{coalesce, col, concat, expr, lit}
   * with.
   */
 object StreamQueries {
-  /** The events fixture staged as a bounded stream source, optionally
-    * with a far-future close sentinel per user.
+  /** Runs `op` to completion over the events fixture staged as a
+    * bounded stream source, optionally with a far-future close sentinel
+    * per user.
     */
-  private def stagedDir(s: SparkSession, dir: String, sentinel: Boolean): String =
-    staged(dir, if (sentinel) "sentinel" else "events")(
-      graft.streaming.Events.stageStreamDir(s, s"$dir/events.parquet", closeSentinel = sentinel))
+  private def overEvents(s: SparkSession, dir: String, sentinel: Boolean,
+      complete: Boolean = false)(op: DataFrame => DataFrame): DataFrame = {
+    val src = staged(dir, if (sentinel) "sentinel" else "events")(
+      Events.stageStreamDir(s, s"$dir/events.parquet", closeSentinel = sentinel))
+    Events.runAvailableNow(s, op(Events.readEventsStream(s, src)), complete)
+  }
 
   /** The q_cdc_merge change waves — upserts (%5, seq 2), deletes (%7,
     * seq 3), inserts (%13, fresh ids, seq 1) — each with a deterministic
@@ -70,7 +75,7 @@ object StreamQueries {
         "SELECT CAST(-1 AS BIGINT) AS doc_id, CAST(0 AS BIGINT) AS seq, " +
           "'__close' AS op, CAST(NULL AS STRING) AS text, " +
           "timestamp_seconds(1704067200 + 864000) AS ts")
-      graft.streaming.Events.stageChunkedStream(waves :+ sentinel)
+      Events.stageChunkedStream(waves :+ sentinel)
     }
     s.readStream.schema(graft.core.Parquet.schema(s, staged))
       .option("maxFilesPerTrigger", "1").parquet(staged)
@@ -152,8 +157,8 @@ object StreamQueries {
     Query("q_cdc_merge_stream", (s, dir) => {
       val d = docs(s, dir)
       val stream = waveStream(s, dir, "cdc")(cdcWaves(d))
-      val winners = graft.streaming.Events.runAvailableNow(s,
-        graft.streaming.Events.applyChangesStream(s, stream), complete = false)
+      val winners = Events.runAvailableNow(s,
+        Events.applyChangesStream(s, stream), complete = false)
       val fin = winners.groupBy("doc_id")
         .agg(expr("max(struct(seq AS s, op AS o, text AS t))").as("__w"))
         .select(col("doc_id"), col("__w.o").as("__op"), col("__w.t").as("__new"))
@@ -185,8 +190,8 @@ object StreamQueries {
         val waves = scd2Waves(d)
         Seq(waves(1), waves(0), waves(3), waves(2))
       }
-      val frames = graft.streaming.Events.runAvailableNow(s,
-        graft.streaming.Events.scd2HistoryStream(s, stream), complete = false)
+      val frames = Events.runAvailableNow(s,
+        Events.scd2HistoryStream(s, stream), complete = false)
       frames.groupBy("doc_id", "valid_from_seq")
         .agg(expr("max(struct(valid_to_seq IS NOT NULL AS closed, " +
           "valid_to_seq, text, is_current))").as("__f"))
@@ -202,12 +207,9 @@ object StreamQueries {
     // sink) over the bounded file source, value-identical to the batch
     // forms — so the batch DuckDB oracles apply to the streaming engine
     // path itself. Complete mode emits every window at end-of-stream.
-    Query("q_events_hourly_stream", (s, dir) => {
-      val e = graft.streaming.Events
-      e.runAvailableNow(s,
-        e.hourlyStatsStreamBounded(e.readEventsStream(s, stagedDir(s, dir, sentinel = false))),
-        complete = true)
-    },
+    Query("q_events_hourly_stream", (s, dir) =>
+      overEvents(s, dir, sentinel = false, complete = true)(
+        Events.hourlyStatsStreamBounded),
       // Streaming forms are value-identical to the batch forms, so the batch
       // oracles apply (minus n_users / session_seq, which the streaming
       // shapes do not emit).
@@ -221,15 +223,14 @@ object StreamQueries {
     // must be exactly the original relation — which the plain events
     // oracle checks (value_cents derived so doubles stay off the compare)
     Query("q_stream_dedup", (s, dir) => {
-      val e = graft.streaming.Events
       val staged = Fixtures.staged(dir, "doubled") {
-        val d = e.stageStreamDir(s, s"$dir/events.parquet")
-        e.copyParquetInto(s"$dir/events.parquet",
+        val d = Events.stageStreamDir(s, s"$dir/events.parquet")
+        Events.copyParquetInto(s"$dir/events.parquet",
           java.nio.file.Paths.get(d), "events_dup")
         d
       }
-      e.runAvailableNow(s,
-        e.dedupStream(e.readEventsStream(s, staged), Seq("event_id")),
+      Events.runAvailableNow(s,
+        Events.dedupStream(Events.readEventsStream(s, staged), Seq("event_id")),
         complete = false)
         .selectExpr("event_id", "ts", "user_id", "event_type",
           "CAST(round(value * 100) AS LONG) AS value_cents")
@@ -242,25 +243,9 @@ object StreamQueries {
     // close inside the single AvailableNow batch, so the emitted set is
     // exactly the batch sessionization (sentinel sessions stay in state,
     // never emitted; stream output carries no session_seq)
-    Query("q_sessionize_stream", (s, dir) => {
-      val e = graft.streaming.Events
-      e.runAvailableNow(s,
-        e.sessionizeStream(s, e.readEventsStream(s, stagedDir(s, dir, sentinel = true))),
-        complete = false)
-    },
-      Some("""WITH e AS (
-          SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, value FROM events),
-        t AS (
-          SELECT user_id, ts, value,
-            CASE WHEN lag(ts) OVER w IS NULL
-                   OR CAST(floor(epoch(ts)) AS BIGINT)
-                      - CAST(floor(epoch(lag(ts) OVER w)) AS BIGINT) > 1800
-                 THEN 1 ELSE 0 END AS ns
-          FROM e
-          WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
-        s AS (
-          SELECT *, CAST(sum(ns) OVER (PARTITION BY user_id ORDER BY ts) AS BIGINT) AS session_seq
-          FROM t)
+    Query("q_sessionize_stream", (s, dir) =>
+      overEvents(s, dir, sentinel = true)(Events.sessionizeStream(s, _)),
+      Some(s"""${EventQueries.sessions}
         SELECT user_id,
           min(ts) AS session_start, max(ts) AS session_end,
           count(*) AS n_events,
@@ -269,13 +254,9 @@ object StreamQueries {
     // streaming activity outliers: ONE complete-mode streaming count
     // (state = key space) + an all-integer 120%-of-mean cut on the
     // bounded result — replication-stable, unlike an absolute support
-    Query("q_activity_outliers_stream", (s, dir) => {
-      val e = graft.streaming.Events
-      e.aboveMeanActivity(e.runAvailableNow(s,
-        e.activityCountsStream(
-          e.readEventsStream(s, stagedDir(s, dir, sentinel = false))),
-        complete = true))
-    },
+    Query("q_activity_outliers_stream", (s, dir) =>
+      Events.aboveMeanActivity(
+        overEvents(s, dir, sentinel = false, complete = true)(Events.activityCountsStream(_))),
       // integer 120%-of-mean activity cut over exact streaming counts
       Some("""WITH c AS (SELECT user_id, count(*) AS cnt FROM events GROUP BY 1),
         t AS (SELECT CAST(sum(cnt) AS BIGINT) AS total,
@@ -285,63 +266,27 @@ object StreamQueries {
     // the same session_window agg on the REAL streaming path (watermark +
     // append mode + close sentinel) — Spark's built-in session state vs
     // the hand-rolled flatMapGroupsWithState sibling, same oracle
-    Query("q_session_window_stream", (s, dir) => {
-      val e = graft.streaming.Events
-      e.runAvailableNow(s,
-        e.sessionWindowStream(e.readEventsStream(s, stagedDir(s, dir, sentinel = true))),
-        complete = false)
-    },
+    Query("q_session_window_stream", (s, dir) =>
+      overEvents(s, dir, sentinel = true)(Events.sessionWindowStream(_)),
       // streaming session_window emits the identical session set on a
       // bounded close-sentinel run — same gaps-and-islands oracle
-      Some("""WITH e AS (
-          SELECT user_id, CAST(ts AS TIMESTAMP) AS ts,
-            CAST(round(value * 100) AS BIGINT) AS cents
-          FROM events),
-        t AS (
-          SELECT user_id, ts, cents,
-            CASE WHEN lag(ts) OVER w IS NULL
-                   OR date_diff('microsecond', lag(ts) OVER w, ts)
-                      > 1800000000 THEN 1 ELSE 0 END AS ns
-          FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
-        s AS (
-          SELECT *, sum(ns) OVER (PARTITION BY user_id ORDER BY ts) AS sid
-          FROM t)
-        SELECT user_id, min(ts) AS session_start,
-          max(ts) + INTERVAL 30 MINUTE AS session_end,
-          count(*) AS n_events, CAST(sum(cents) AS BIGINT) AS value_cents
-        FROM s GROUP BY user_id, sid""")),
+      Some(EventQueries.sessionWindowOracle)),
     // the same join as a real STREAM-STREAM inner self-join (watermarks
     // both sides + time-range condition bounding the join state); on the
     // bounded AvailableNow run the emitted set is exactly the batch join,
     // so the same oracle pins the cross-stream join state machinery
-    Query("q_attribution_stream", (s, dir) => {
-      val e = graft.streaming.Events
-      e.runAvailableNow(s,
-        e.attributionJoinStream(e.readEventsStream(s, stagedDir(s, dir, sentinel = false))),
-        complete = false)
-    },
-      Some("""SELECT c.event_id AS click_id, p.event_id AS purchase_id, p.user_id,
-          CAST(c.ts AS TIMESTAMP) AS click_ts,
-          CAST(p.ts AS TIMESTAMP) AS purchase_ts,
-          CAST(round(p.value * 100) AS BIGINT) AS value_cents
-        FROM events c JOIN events p
-          ON c.user_id = p.user_id
-          AND c.event_type = 'click' AND p.event_type = 'purchase'
-          AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 30 MINUTE""")),
+    Query("q_attribution_stream", (s, dir) =>
+      overEvents(s, dir, sentinel = false)(Events.attributionJoinStream(_)),
+      Some(EventQueries.attributionOracle)),
     // multi-touch as a stream (VERDICT r9 #7): the credit split needs the
     // COMPLETE touch set, so purchases emit only once the watermark
     // passes their event time (every attributable click precedes the
     // purchase); the close sentinel flushes the tail, making the bounded
     // run equal the batch q_attribution_multitouch image exactly — same
     // oracle
-    Query("q_attribution_multitouch_stream", (s, dir) => {
-      val e = graft.streaming.Events
-      e.runAvailableNow(s,
-        e.multiTouchAttributionStream(s,
-          e.readEventsStream(s, stagedDir(s, dir, sentinel = true)),
-          model = "u"),
-        complete = false)
-    },
+    Query("q_attribution_multitouch_stream", (s, dir) =>
+      overEvents(s, dir, sentinel = true)(
+        Events.multiTouchAttributionStream(s, _, model = "u")),
       // the streaming twin's watermark-closed emission converges to the
       // identical credited-touch relation — one oracle serves both
       Some(EventQueries.multiTouchOracle)),
@@ -351,41 +296,17 @@ object StreamQueries {
     // result, so the q_rolling_features oracle gates the streaming state
     // machinery too (batch/stream parity, the q_events_hourly_stream
     // discipline)
-    Query("q_rolling_features_stream", (s, dir) => {
-      val e = graft.streaming.Events
-      e.runAvailableNow(s,
-        e.rollingFeaturesStream(s,
-          e.readEventsStream(s, stagedDir(s, dir, sentinel = false))),
-        complete = false)
-    },
-      // the streaming form emits the identical per-event feature set on a
-      // bounded run — same oracle text as q_rolling_features
-      Some("""WITH e AS (
-          SELECT event_id, user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us,
-            CAST(round(value * 100) AS BIGINT) AS value_cents
-          FROM events)
-        SELECT event_id, user_id, value_cents,
-          count(*) OVER w_range AS roll_n,
-          CAST(sum(value_cents) OVER w_range AS BIGINT) AS roll_cents,
-          lag(value_cents) OVER w_row AS prev_cents,
-          us - lag(us) OVER w_row AS gap_us
-        FROM e
-        WINDOW
-          w_range AS (PARTITION BY user_id ORDER BY us
-            RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW),
-          w_row AS (PARTITION BY user_id ORDER BY us, event_id)""")),
+    Query("q_rolling_features_stream", (s, dir) =>
+      overEvents(s, dir, sentinel = false)(Events.rollingFeaturesStream(s, _)),
+      Some(StatsQueries.rollingFeaturesOracle)),
     // the funnel chain as a stream: per-user O(1) stage state emits an
     // advance row per stage reached; counts are a bounded agg over the
     // advances (≤ users × stages) on the bounded-evidence path. Left join
     // keeps zero-count stages so the 3-row shape matches the batch form.
     Query("q_funnel_stream", (s, dir) => {
       import s.implicits._
-      val e = graft.streaming.Events
       val stages = Seq("view", "click", "purchase")
-      val adv = e.runAvailableNow(s,
-        e.funnelStream(s,
-          e.readEventsStream(s, stagedDir(s, dir, sentinel = false)), stages),
-        complete = false)
+      val adv = overEvents(s, dir, sentinel = false)(Events.funnelStream(s, _, stages))
       val counts = adv.groupBy("stage_idx").agg(expr("count(1)").as("__n"))
       stages.zipWithIndex.map { case (st, i) => (i, st) }
         .toDF("stage_idx", "stage")
@@ -393,28 +314,7 @@ object StreamQueries {
         .select(col("stage_idx"), col("stage"),
           coalesce(col("__n"), lit(0L)).as("n_users"))
     },
-      Some("""WITH s0 AS (
-          SELECT user_id, min(epoch_us(CAST(ts AS TIMESTAMP))) AS t
-          FROM events
-          WHERE event_type = 'view' AND user_id IS NOT NULL
-            AND ts IS NOT NULL
-          GROUP BY 1),
-        s1 AS (
-          SELECT e.user_id, min(epoch_us(CAST(e.ts AS TIMESTAMP))) AS t
-          FROM events e JOIN s0 ON e.user_id = s0.user_id
-          WHERE e.event_type = 'click'
-            AND epoch_us(CAST(e.ts AS TIMESTAMP)) > s0.t
-          GROUP BY 1),
-        s2 AS (
-          SELECT e.user_id, min(epoch_us(CAST(e.ts AS TIMESTAMP))) AS t
-          FROM events e JOIN s1 ON e.user_id = s1.user_id
-          WHERE e.event_type = 'purchase'
-            AND epoch_us(CAST(e.ts AS TIMESTAMP)) > s1.t
-          GROUP BY 1)
-        SELECT 0 AS stage_idx, 'view' AS stage,
-          (SELECT count(*) FROM s0) AS n_users
-        UNION ALL SELECT 1, 'click', (SELECT count(*) FROM s1)
-        UNION ALL SELECT 2, 'purchase', (SELECT count(*) FROM s2)""")),
+      Some(StatsQueries.funnelOracle)),
 
     // the retention matrix as a stream: per-user calendar-bounded
     // weeks-seen state emits a first-activity-in-week row exactly once
@@ -422,49 +322,17 @@ object StreamQueries {
     // advances (Events.retentionMatrix) — value-matched to the batch
     // q_retention oracle on the bounded run, with NO in-order premise
     // (set membership is arrival-order-insensitive)
-    Query("q_retention_stream", (s, dir) => {
-      val e = graft.streaming.Events
-      e.retentionMatrix(e.runAvailableNow(s,
-        e.retentionStream(s,
-          e.readEventsStream(s, stagedDir(s, dir, sentinel = false))),
-        complete = false))
-    },
-      // streaming funnel emits the identical stage counts on a bounded run
-      // — same oracle text as q_funnel
-      // — same oracle text as q_retention (the streaming path is
-      // value-identical on a bounded run; only the state machine differs)
-      Some("""WITH uw AS (
-          SELECT user_id,
-            CAST(floor(CAST(epoch_us(CAST(ts AS TIMESTAMP)) AS DOUBLE)
-              / 604800000000) AS BIGINT) AS week
-          FROM events GROUP BY 1, 2),
-        c AS (SELECT user_id, min(week) AS cohort_week FROM uw GROUP BY 1)
-        SELECT cohort_week, week - cohort_week AS week_offset,
-          count(*) AS n_users
-        FROM uw JOIN c USING (user_id) GROUP BY 1, 2""")),
+    Query("q_retention_stream", (s, dir) =>
+      Events.retentionMatrix(overEvents(s, dir, sentinel = false)(Events.retentionStream(s, _))),
+      Some(StatsQueries.retentionOracle)),
 
     // the Markov transition matrix as a stream: per-user O(1) last-event
     // state emits a pair row per arrival; counts are a bounded
     // |types|²-key agg over the pairs — value-matched to the batch
     // lead-window oracle on the bounded run
-    Query("q_event_transitions_stream", (s, dir) => {
-      val e = graft.streaming.Events
-      val tr = e.runAvailableNow(s,
-        e.transitionsStream(s,
-          e.readEventsStream(s, stagedDir(s, dir, sentinel = false))),
-        complete = false)
-      tr.groupBy(col("from_type"), col("to_type"))
-        .agg(expr("count(1)").as("n_transitions"))
-    },
-      // streaming transitions emit the identical pair multiset on a
-      // bounded in-order run — same oracle text as q_event_transitions
-      Some("""WITH e AS (
-          SELECT user_id, ts, event_id, event_type FROM events
-          WHERE user_id IS NOT NULL AND ts IS NOT NULL),
-        t AS (
-          SELECT event_type AS from_type,
-            lead(event_type) OVER (PARTITION BY user_id ORDER BY ts ASC, event_id ASC) AS to_type
-          FROM e)
-        SELECT from_type, to_type, count(*) AS n_transitions
-        FROM t WHERE to_type IS NOT NULL GROUP BY 1, 2""")))
+    Query("q_event_transitions_stream", (s, dir) =>
+      overEvents(s, dir, sentinel = false)(Events.transitionsStream(s, _))
+        .groupBy(col("from_type"), col("to_type"))
+        .agg(expr("count(1)").as("n_transitions")),
+      Some(EventQueries.eventTransitionsOracle)))
 }

@@ -93,6 +93,49 @@ object TextQueries {
     */
   private[queries] def keepLangsDuck: String = defaultKeepLangs.map(sqlStr).mkString(",")
 
+  /** The Gopher measurements (nw, mwl, hr, er, br, elr, ar, sh) of a
+    * doc's words `ts` and non-blank lines `ls` and its text column `c`.
+    */
+  private[queries] def gopherMeasures(c: String): String =
+    s"""CAST(len(ts) AS BIGINT) AS nw,
+            CASE WHEN len(ts) = 0 THEN NULL ELSE
+              CAST(list_sum(list_transform(ts, t -> length(t))) AS DOUBLE) / len(ts) END AS mwl,
+            CASE WHEN len(ts) = 0 THEN NULL ELSE
+              CAST(length($c) - length(replace($c, '#', '')) AS DOUBLE) / len(ts) END AS hr,
+            CASE WHEN len(ts) = 0 THEN NULL ELSE
+              CAST((length($c) - length(replace($c, '...', ''))) // 3
+                + (length($c) - length(replace($c, '…', ''))) AS DOUBLE) / len(ts) END AS er,
+            CASE WHEN len(ls) = 0 THEN NULL ELSE
+              CAST(len(list_filter(ls, l -> substr(ltrim(l), 1, 1) IN ('•','‣','▪','-','*'))) AS DOUBLE)
+                / len(ls) END AS br,
+            CASE WHEN len(ls) = 0 THEN NULL ELSE
+              CAST(len(list_filter(ls, l -> right(rtrim(l), 3) = '...' OR right(rtrim(l), 1) = '…')) AS DOUBLE)
+                / len(ls) END AS elr,
+            CASE WHEN len(ts) = 0 THEN NULL ELSE
+              CAST(len(list_filter(ts, t -> regexp_matches(t, '[a-z]'))) AS DOUBLE) / len(ts) END AS ar,
+            CAST(len(list_filter(['the','be','to','of','and','that','have','with'],
+              s -> list_contains(ts, s))) AS BIGINT) AS sh"""
+
+  /** `lk2`, each line of `lk` (doc_id, i, t, nc, words, stops) with the
+    * length and stopword-density keep rule, and `agg`, per doc: the line
+    * count `nb`, kept count `nk`, their chars and the kept text.
+    */
+  private val keptLines =
+    """lk2 AS (
+        SELECT doc_id, i, t, nc,
+          (nc >= 25 AND (stops * 1000 >= 100 * words OR nc >= 200)) AS keep
+        FROM lk),
+      agg AS (
+        SELECT doc_id,
+          CAST(count(*) AS BIGINT) AS nb,
+          CAST(sum(nc) AS BIGINT) AS line_chars,
+          CAST(sum(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT) AS nk,
+          CAST(coalesce(sum(CASE WHEN keep THEN nc END), 0) AS BIGINT)
+            AS kept_chars,
+          coalesce(string_agg(CASE WHEN keep THEN t END, chr(10) ORDER BY i),
+            '') AS kept_text
+        FROM lk2 GROUP BY 1)"""
+
   /** DuckDB oracle for q_html_extract_multi — generated from the SAME
     * [[graft.functions.StopwordProfiles]] table as the engine kernel
     * (plant literals + per-line arithmetic with the stop count
@@ -133,20 +176,7 @@ object TextQueries {
           $stopsCase
           END AS stops
         FROM lc),
-      lk2 AS (
-        SELECT doc_id, i, t, nc,
-          (nc >= 25 AND (stops * 1000 >= 100 * words OR nc >= 200)) AS keep
-        FROM lk),
-      agg AS (
-        SELECT doc_id,
-          CAST(count(*) AS BIGINT) AS nb,
-          CAST(sum(nc) AS BIGINT) AS line_chars,
-          CAST(sum(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT) AS nk,
-          CAST(coalesce(sum(CASE WHEN keep THEN nc END), 0) AS BIGINT)
-            AS kept_chars,
-          coalesce(string_agg(CASE WHEN keep THEN t END, chr(10) ORDER BY i),
-            '') AS kept_text
-        FROM lk2 GROUP BY 1)
+      $keptLines
       SELECT r.doc_id, r.lang,
         CASE WHEN coalesce(a.kept_text, '') = '' THEN r.s_keep
              ELSE r.s_keep || chr(10) || a.kept_text END AS text_extracted,
@@ -212,20 +242,7 @@ object TextQueries {
           CAST(len(list_filter(ws, x -> lower(x) IN ($enList)))
             AS BIGINT) AS stops
         FROM lc),
-      lk2 AS (
-        SELECT doc_id, i, t, nc,
-          (nc >= 25 AND (stops * 1000 >= 100 * words OR nc >= 200)) AS keep
-        FROM lk),
-      agg AS (
-        SELECT doc_id,
-          CAST(count(*) AS BIGINT) AS nb,
-          CAST(sum(nc) AS BIGINT) AS line_chars,
-          CAST(sum(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT) AS nk,
-          CAST(coalesce(sum(CASE WHEN keep THEN nc END), 0) AS BIGINT)
-            AS kept_chars,
-          coalesce(string_agg(CASE WHEN keep THEN t END, chr(10) ORDER BY i),
-            '') AS kept_text
-        FROM lk2 GROUP BY 1)
+      $keptLines
       SELECT d.doc_id,
         CAST(CASE WHEN $g THEN 0 ELSE 4 END AS INTEGER) AS n_records,
         CAST(CASE WHEN $g THEN 0 ELSE 1 END AS INTEGER) AS n_responses,
@@ -310,7 +327,7 @@ object TextQueries {
       // symbol counts via length-difference (never regex), lines split on
       // chr(10) ('\n' is an escape in Spark SQL literals, a literal
       // backslash-n in DuckDB), NULL measurements fail rules via coalesce.
-      Some("""WITH base AS (
+      Some(s"""WITH base AS (
           SELECT doc_id,
             coalesce(list_filter(string_split_regex(lower(text), ' +'), t -> t != ''),
                      CAST([] AS VARCHAR[])) AS ts,
@@ -320,24 +337,7 @@ object TextQueries {
           FROM documents),
         m AS (
           SELECT doc_id,
-            CAST(len(ts) AS BIGINT) AS nw,
-            CASE WHEN len(ts) = 0 THEN NULL ELSE
-              CAST(list_sum(list_transform(ts, t -> length(t))) AS DOUBLE) / len(ts) END AS mwl,
-            CASE WHEN len(ts) = 0 THEN NULL ELSE
-              CAST(length(text) - length(replace(text, '#', '')) AS DOUBLE) / len(ts) END AS hr,
-            CASE WHEN len(ts) = 0 THEN NULL ELSE
-              CAST((length(text) - length(replace(text, '...', ''))) // 3
-                + (length(text) - length(replace(text, '…', ''))) AS DOUBLE) / len(ts) END AS er,
-            CASE WHEN len(ls) = 0 THEN NULL ELSE
-              CAST(len(list_filter(ls, l -> substr(ltrim(l), 1, 1) IN ('•','‣','▪','-','*'))) AS DOUBLE)
-                / len(ls) END AS br,
-            CASE WHEN len(ls) = 0 THEN NULL ELSE
-              CAST(len(list_filter(ls, l -> right(rtrim(l), 3) = '...' OR right(rtrim(l), 1) = '…')) AS DOUBLE)
-                / len(ls) END AS elr,
-            CASE WHEN len(ts) = 0 THEN NULL ELSE
-              CAST(len(list_filter(ts, t -> regexp_matches(t, '[a-z]'))) AS DOUBLE) / len(ts) END AS ar,
-            CAST(len(list_filter(['the','be','to','of','and','that','have','with'],
-              s -> list_contains(ts, s))) AS BIGINT) AS sh
+            ${gopherMeasures("text")}
           FROM base)
         SELECT doc_id,
           nw AS n_words,

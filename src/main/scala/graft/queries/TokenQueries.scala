@@ -72,27 +72,49 @@ object TokenQueries {
   /** A word `w` spelled as space-separated symbols with edge spaces. */
   private val spelled = "' ' || array_to_string(string_split(w, ''), ' ') || ' '"
 
-  /** The chain applied in 50-rule CTE layers `s1 … sN` over `s0`
-    * (doc_id, s): DuckDB's binder rejects expressions past 128 recursion
-    * depth, so one nested chain caps an oracle near 120 rules, while
-    * layers are unbounded. Returns the layers and the last layer's name.
+  /** The alphabetic words per doc, `ws` (doc_id, w). */
+  private val docWords =
+    """ws AS (
+        SELECT doc_id,
+          list_filter(string_split_regex(lower(trim(text)), ' +'),
+            w -> regexp_full_match(w, '[a-z]+')) AS w
+        FROM documents)"""
+
+  /** The corpus frequency `wf` of each alphabetic word `w`. */
+  private val wordFreq =
+    """ws AS (
+        SELECT list_filter(string_split_regex(lower(trim(text)), ' +'),
+          w -> regexp_full_match(w, '[a-z]+')) AS w
+        FROM documents),
+      w1 AS (SELECT unnest(w) AS w FROM ws),
+      wf AS (SELECT w, count(*) AS wf FROM w1 GROUP BY 1)"""
+
+  /** From the words `wx` (doc_id, w): `s0`, each word [[spelled]]; the
+    * chain applied in 50-rule CTE layers `s1 … sN` (DuckDB's binder
+    * rejects expressions past 128 recursion depth, so one nested chain
+    * caps an oracle near 120 rules, while layers are unbounded); and
+    * `cnt` (doc_id, nb), the BPE token count per doc.
     */
-  private def stagedChain(merges: Seq[(String, String)]): (String, String) = {
+  private def stagedCount(merges: Seq[(String, String)]): String = {
     val stages = merges.grouped(50).toSeq
-    val ctes = stages.zipWithIndex.map { case (g, i) =>
+    val layers = stages.zipWithIndex.map { case (g, i) =>
       s"s${i + 1} AS (SELECT doc_id, ${replaceChain("s", g)} AS s FROM s$i)"
     }
-    (ctes.mkString(",\n      "), s"s${stages.length}")
+    s"""s0 AS (
+        SELECT doc_id,
+          $spelled AS s
+        FROM wx),
+      ${layers.mkString(",\n      ")},
+      cnt AS (
+        SELECT doc_id, CAST(sum(len(string_split(trim(s), ' '))) AS BIGINT)
+          AS nb
+        FROM s${stages.length} GROUP BY 1)"""
   }
 
   /** DuckDB equivalent of [[graft.operators.TextAnalysis.bpeTokenCounts]]. */
   private def bpeOracleSql: String = {
     val applied = replaceChain(spelled, defaultBpeMerges)
-    s"""WITH ws AS (
-        SELECT doc_id,
-          list_filter(string_split_regex(lower(trim(text)), ' +'),
-            w -> regexp_full_match(w, '[a-z]+')) AS w
-        FROM documents)
+    s"""WITH $docWords
       SELECT doc_id, CAST(len(w) AS BIGINT) AS n_alpha_words,
         CAST(coalesce(list_sum(list_transform(w,
           w -> len(string_split(trim($applied), ' ')))), 0) AS BIGINT)
@@ -101,40 +123,21 @@ object TokenQueries {
   }
 
   /** [[bpeOracleSql]] for large tables: words unnested to rows, the chain
-    * applied in [[stagedChain]] layers and token counts re-aggregated per
+    * applied in [[stagedCount]] layers and token counts re-aggregated per
     * document — the same semantics as the single chain, any table size.
     */
-  private def bpeOracleSqlStaged(merges: Seq[(String, String)]): String = {
-    val (layers, last) = stagedChain(merges)
-    s"""WITH ws AS (
-        SELECT doc_id,
-          list_filter(string_split_regex(lower(trim(text)), ' +'),
-            w -> regexp_full_match(w, '[a-z]+')) AS w
-        FROM documents),
+  private def bpeOracleSqlStaged(merges: Seq[(String, String)]): String =
+    s"""WITH $docWords,
       wx AS (SELECT doc_id, unnest(w) AS w FROM ws),
-      s0 AS (
-        SELECT doc_id,
-          ' ' || array_to_string(string_split(w, ''), ' ') || ' ' AS s
-        FROM wx),
-      $layers,
-      cnt AS (
-        SELECT doc_id, CAST(sum(len(string_split(trim(s), ' '))) AS BIGINT)
-          AS nb
-        FROM $last GROUP BY 1)
+      ${stagedCount(merges)}
       SELECT ws.doc_id, CAST(len(ws.w) AS BIGINT) AS n_alpha_words,
         CAST(coalesce(cnt.nb, 0) AS BIGINT) AS n_bpe_tokens
       FROM ws LEFT JOIN cnt USING (doc_id)"""
-  }
 
   /** DuckDB equivalent of [[graft.operators.TextAnalysis.bpePieceCounts]]. */
   private def bpePieceOracleSql: String = {
     val applied = replaceChain(spelled, defaultBpeMerges)
-    s"""WITH ws AS (
-        SELECT list_filter(string_split_regex(lower(trim(text)), ' +'),
-          w -> regexp_full_match(w, '[a-z]+')) AS w
-        FROM documents),
-      w1 AS (SELECT unnest(w) AS w FROM ws),
-      wf AS (SELECT w, count(*) AS wf FROM w1 GROUP BY 1),
+    s"""WITH $wordFreq,
       pc AS (
         SELECT unnest(string_split(trim($applied), ' ')) AS piece, wf
         FROM wf)
@@ -146,12 +149,7 @@ object TokenQueries {
     */
   private def bpeMergeOracleSql(merges: Seq[(String, String)], topN: Int): String = {
     val applied = replaceChain(spelled, merges)
-    s"""WITH ws AS (
-        SELECT list_filter(string_split_regex(lower(trim(text)), ' +'),
-          w -> regexp_full_match(w, '[a-z]+')) AS w
-        FROM documents),
-      w1 AS (SELECT unnest(w) AS w FROM ws),
-      wf AS (SELECT w, count(*) AS wf FROM w1 GROUP BY 1),
+    s"""WITH $wordFreq,
       sym AS (SELECT wf, string_split(trim($applied), ' ') AS s FROM wf),
       pr AS (
         SELECT unnest(list_transform(range(1, len(s)),
@@ -177,11 +175,10 @@ object TokenQueries {
   /** DuckDB mirror of [[graft.operators.TextAnalysis.bpeTokenCountsGpt2]]
     * over [[gpt2MultiDocsrcSql]]: the SAME sentinel pre-pass and split
     * pattern (RE2 side; quotes doubled for a DuckDB literal, backslashes
-    * untouched), letter runs priced through the [[stagedChain]] layers,
+    * untouched), letter runs priced through the [[stagedCount]] layers,
     * everything else at one token.
     */
   private def bpeGpt2OracleSqlStaged: String = {
-    val (layers, last) = stagedChain(largeBpeMerges)
     val split = gpt2SplitPattern.replace("'", "''")
     s"""WITH docsrc AS ($gpt2MultiDocsrcSql),
       pre AS (
@@ -201,19 +198,30 @@ object TokenQueries {
         SELECT doc_id, ltrim(t, ' ') AS w
         FROM (SELECT doc_id, unnest(ts) AS t FROM tok)
         WHERE regexp_full_match(t, ' ?\\p{L}+')),
-      s0 AS (
-        SELECT doc_id,
-          ' ' || array_to_string(string_split(w, ''), ' ') || ' ' AS s
-        FROM wx),
-      $layers,
-      cnt AS (
-        SELECT doc_id, CAST(sum(len(string_split(trim(s), ' '))) AS BIGINT)
-          AS nb
-        FROM $last GROUP BY 1)
+      ${stagedCount(largeBpeMerges)}
       SELECT b.doc_id, b.n_pretokens,
         CAST(b.n_other + coalesce(cnt.nb, 0) AS BIGINT) AS n_bpe_tokens_gpt2
       FROM base b LEFT JOIN cnt USING (doc_id)"""
   }
+
+  /** `tk` (doc_id, token), the lower-cased space-split tokens, and `pd`,
+    * each token's count per doc `tf_doc`.
+    */
+  private val docTokenCounts: String =
+    """WITH tk AS (
+          SELECT doc_id, unnest(list_filter(string_split_regex(lower(text), ' +'),
+                                t -> t != '')) AS token
+          FROM documents),
+        pd AS (SELECT doc_id, token, count(*) AS tf_doc FROM tk GROUP BY 1, 2)"""
+
+  /** `c`, each token's corpus count `cnt`, and `t`, their `total`. */
+  private val tokenTotals: String =
+    """WITH tk AS (
+          SELECT unnest(list_filter(string_split_regex(lower(text), ' +'),
+                        t -> t != '')) AS token
+          FROM documents),
+        c AS (SELECT token, count(*) AS cnt FROM tk GROUP BY 1),
+        t AS (SELECT sum(cnt) AS total FROM c)"""
 
   val all: Seq[Query] = Seq(
     // SymSpell fuzzy vocabulary map: planted typos (one hash-derived
@@ -281,11 +289,7 @@ object TokenQueries {
     // corpus-level curation ops: vocabulary, salient terms, repetition
     // quality signals, data-mix report, stratified mixing
     Query("q_vocabulary", (s, dir) => TextAnalysis.vocabulary(docs(s, dir)),
-      Some("""WITH tk AS (
-          SELECT doc_id, unnest(list_filter(string_split_regex(lower(text), ' +'),
-                                t -> t != '')) AS token
-          FROM documents),
-        pd AS (SELECT doc_id, token, count(*) AS tf_doc FROM tk GROUP BY 1, 2)
+      Some(s"""$docTokenCounts
         SELECT token, CAST(sum(tf_doc) AS BIGINT) AS tf, count(*) AS df
         FROM pd GROUP BY 1""")),
     // heavy-hitter tokens: the emitted relation is the EXACT set (integer
@@ -301,24 +305,14 @@ object TokenQueries {
       // `covered` to TRUE for every exact hitter — so the oracle asserts
       // the constant (the q_approx_bounds envelope pattern, folded into
       // one row).
-      Some("""WITH tk AS (
-          SELECT unnest(list_filter(string_split_regex(lower(text), ' +'),
-                        t -> t != '')) AS token
-          FROM documents),
-        c AS (SELECT token, count(*) AS cnt FROM tk GROUP BY 1),
-        t AS (SELECT sum(cnt) AS total FROM c)
+      Some(s"""$tokenTotals
         SELECT token, CAST(cnt AS BIGINT) AS cnt, TRUE AS covered
         FROM c, t WHERE cnt * 60 > total""")),
     // Count-Min-Sketch envelope: exact hitter counts hash-gated, each
     // CMS estimate asserted inside [cnt, cnt + ceil(eps*N)] in-plan
     Query("q_cms_bounds", (s, dir) =>
       Stats.cmsBounds(TextAnalysis.tokenPairs(docs(s, dir)), "token", 60L),
-      Some("""WITH tk AS (
-          SELECT unnest(list_filter(string_split_regex(lower(text), ' +'),
-                        t -> t != '')) AS token
-          FROM documents),
-        c AS (SELECT token, count(*) AS cnt FROM tk GROUP BY 1),
-        t AS (SELECT sum(cnt) AS total FROM c)
+      Some(s"""$tokenTotals
         SELECT token, CAST(cnt AS BIGINT) AS cnt, TRUE AS cms_within
         FROM c, t WHERE cnt * 60 > total""")),
     // headMinDf/headMinTf below are joinTokenTotals' frequency-routing
@@ -327,11 +321,7 @@ object TokenQueries {
     // BOTH routing paths, not just the all-tail degenerate plan.
     Query("q_top_terms", (s, dir) =>
       TextAnalysis.topTerms(docs(s, dir), k = 5, headMinDf = 10L),
-      Some("""WITH tk AS (
-          SELECT doc_id, unnest(list_filter(string_split_regex(lower(text), ' +'),
-                                t -> t != '')) AS token
-          FROM documents),
-        pd AS (SELECT doc_id, token, count(*) AS tf_doc FROM tk GROUP BY 1, 2),
+      Some(s"""$docTokenCounts,
         v AS (SELECT token, count(*) AS df FROM pd GROUP BY 1),
         sc AS (
           SELECT pd.doc_id, pd.token,
@@ -344,11 +334,7 @@ object TokenQueries {
                 ORDER BY score DESC, token) AS rn FROM sc)
         WHERE rn <= 5""")),
     Query("q_repetition", (s, dir) => TextAnalysis.repetitionStats(docs(s, dir)),
-      Some("""WITH tk AS (
-          SELECT doc_id, unnest(list_filter(string_split_regex(lower(text), ' +'),
-                                t -> t != '')) AS token
-          FROM documents),
-        pd AS (SELECT doc_id, token, count(*) AS tf_doc FROM tk GROUP BY 1, 2),
+      Some(s"""$docTokenCounts,
         agg AS (
           SELECT doc_id, CAST(sum(tf_doc) AS BIGINT) AS n_tokens,
                  count(*) AS n_distinct, max(tf_doc) AS mx
@@ -364,11 +350,7 @@ object TokenQueries {
     // libm last-ulp divergence; see TextAnalysis.unigramSurprise)
     Query("q_surprise", (s, dir) =>
       TextAnalysis.unigramSurprise(docs(s, dir), headMinTf = 10L),
-      Some("""WITH tk AS (
-          SELECT doc_id, unnest(list_filter(string_split_regex(lower(text), ' +'),
-                                t -> t != '')) AS token
-          FROM documents),
-        pd AS (SELECT doc_id, token, count(*) AS tf_doc FROM tk GROUP BY 1, 2),
+      Some(s"""$docTokenCounts,
         tot AS (SELECT token, CAST(sum(tf_doc) AS BIGINT) AS tf FROM pd GROUP BY 1),
         n AS (SELECT CAST(sum(tf) AS BIGINT) AS n FROM tot),
         q AS (

@@ -738,16 +738,8 @@ object Events {
         .find(_.getName.endsWith(".parquet"))
         .getOrElse(sys.error(s"no part file written under $out"))
       java.nio.file.Files.copy(part.toPath, dest)
-    } finally deleteTree(tmp)
+    } finally scala.util.Try(graft.core.Dirs.deleteTree(tmp))
   }
-
-  /** Best-effort recursive delete of a temp dir this module made. */
-  private def deleteTree(dir: java.nio.file.Path): Unit =
-    scala.util.Try {
-      java.nio.file.Files.walk(dir)
-        .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(p => java.nio.file.Files.deleteIfExists(p))
-    }
 
   /** Streaming form of [[graft.operators.Features.rollingEventFeatures]]:
     * per-event trailing-window count/sum plus previous-event lag/gap,
@@ -1077,7 +1069,7 @@ object Events {
       graft.core.Materialize.pin(spark.table(name), eager = true)
     } finally {
       spark.catalog.dropTempView(name)
-      deleteTree(ckDir)
+      scala.util.Try(graft.core.Dirs.deleteTree(ckDir))
     }
   }
 

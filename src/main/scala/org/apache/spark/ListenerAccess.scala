@@ -1,6 +1,6 @@
 package org.apache.spark
 
-/** Reaches the one package-private call job-counting specs need: waiting
+/** Reaches the one package-private call job counting needs: waiting
   * until every queued listener event has been delivered, so a listener's
   * totals are complete before they are read.
   */

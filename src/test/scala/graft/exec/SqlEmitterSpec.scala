@@ -137,23 +137,7 @@ class SqlEmitterSpec extends AnyFunSuite with BeforeAndAfterAll {
     //   1 -> unrecognized error: FAIL, investigate
     // The probe never touches this suite's session, so no view state
     // needs restoring on any path.
-    val javaBin = new java.io.File(
-      new java.io.File(sys.props("java.home"), "bin"), "java").getAbsolutePath
-    val addOpens = Seq(
-      "java.base/java.lang", "java.base/java.lang.invoke",
-      "java.base/java.lang.reflect", "java.base/java.io",
-      "java.base/java.net", "java.base/java.nio",
-      "java.base/java.util", "java.base/java.util.concurrent",
-      "java.base/java.util.concurrent.atomic",
-      "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-      "java.base/sun.security.action", "java.base/sun.util.calendar",
-    ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-    val cmd = (Seq(javaBin) ++ addOpens ++ Seq("-Xmx4g",
-      "-cp", sys.props("java.class.path"),
-      "graft.exec.InlineCteProbe", sfDir)).toArray
-    val proc = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
-    val out = scala.io.Source.fromInputStream(proc.getInputStream).mkString
-    val code = proc.waitFor()
+    val (code, out) = graft.SubJvm.run("graft.exec.InlineCteProbe", Seq(sfDir))
     val probeLine = out.linesIterator.find(_.startsWith("PROBE_"))
       .getOrElse(out.takeRight(400))
     code match {

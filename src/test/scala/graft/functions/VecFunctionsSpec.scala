@@ -182,4 +182,39 @@ class VecFunctionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val built = GraftFunctions.functions.head._2(Seq(Literal(1f), Literal(2f)))
     assert(built.isInstanceOf[FloatVecCosine])
   }
+
+  /** The WARN messages the session's function registry logs in `body`. */
+  private def registryWarnings(body: => Unit): Seq[String] = {
+    import org.apache.logging.log4j.Level
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("registry-warnings", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel == Level.WARN) seen.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val logger = LoggerContext.getContext(false)
+      .getLogger(spark.sessionState.functionRegistry.getClass.getName)
+    logger.addAppender(appender)
+    try body finally logger.removeAppender(appender)
+    seen.toArray(Array.empty[String]).toSeq
+  }
+
+  test("a second register on one session replaces nothing and logs no warning") {
+    GraftFunctions.register(spark)
+    val (name, builder, _) = GraftFunctions.functions.head
+    // the capture sees the warning a replacing registration logs
+    assert(registryWarnings(spark.sessionState.functionRegistry
+      .createOrReplaceTempFunction(name, builder, "built-in"))
+      .exists(_.contains("replaced a previously registered function")))
+    val warnings = registryWarnings(GraftFunctions.register(spark))
+    assert(warnings.isEmpty, warnings.mkString("\n"))
+    val r = spark.sql("SELECT vec_dot(a, b), vec_cosine(a, a) FROM (SELECT " +
+      "CAST(array(1, 2) AS ARRAY<FLOAT>) AS a, CAST(array(3, 4) AS ARRAY<FLOAT>) AS b)").head()
+    assert(r.getDouble(0) === 11.0)
+    assert(math.abs(r.getDouble(1) - 1.0) < 1e-12)
+  }
 }
