@@ -156,7 +156,7 @@ object Main {
       val rows = cp.project.relations.flatMap { r =>
         val rel = cp.relations(r.name)
         val thisKeys = rel.expr.params.indices.collect {
-          case i if rel.sides(i) == "This" => rel.expr.params(i).path
+          case i if !rel.bindsFar(i, rel.forward) => rel.expr.params(i).path
         }.distinct
         if (thisKeys.isEmpty) None
         else Some(graft.operators.Integrity.skewAudit(

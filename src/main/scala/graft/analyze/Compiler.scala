@@ -23,18 +23,12 @@ final case class CompiledRule(
     params: IndexedSeq[ResolvedParam],
     aggPaths: IndexedSeq[Vector[Hop]]) {
   def name: String = rule.name
-}
 
-/** Relation with both sides' parameters resolved.
-  * `thisIsRule(i)`/`relatedIsRule(i)` record whether param i of the
-  * expression is a rule (needed for join-dependency ordering and the
-  * unique-join guard — reference: u_enr_query_add_join.sql:101-117).
-  */
-final case class CompiledRelation(
-    relation: RelationDef,
-    expr: ParsedExpr,
-    sides: IndexedSeq[String],   // per param: "This" | "Related"
-    isRule: IndexedSeq[Boolean])
+  /** Every relation path the rule traverses (scalar lookups + aggregates,
+    * including transit prefixes which read intermediate hubs).
+    */
+  def paths: Seq[Vector[Hop]] = (params.filter(_.path.nonEmpty).map(_.path) ++ aggPaths).distinct
+}
 
 final case class CompiledMapping(
     mapping: Mapping,
@@ -76,7 +70,9 @@ final class Compiler(project: Project, maxHops: Int = RelGraph.DefaultMaxHops) {
   private val graph = new RelGraph(project, maxHops)
 
   private lazy val relationsCompiled: Map[String, CompiledRelation] =
-    project.relations.map(r => r.name -> compileRelation(r)).toMap
+    project.relations.map { r =>
+      r.name -> CompiledRelation.compile(r, (src, p) => resolveAttr(src, p, r.name)._2)
+    }.toMap
 
   def compile(): CompiledProject = {
     project.validate()
@@ -99,27 +95,6 @@ final class Compiler(project: Project, maxHops: Int = RelGraph.DefaultMaxHops) {
       failOnNullResult: Boolean = false): (CompiledProject, Seq[String]) = {
     val cp = compile()
     (cp, TypeProbe.check(spark, cp, failOnNullResult))
-  }
-
-  // ------------------------------------------------------------- relations
-
-  private def compileRelation(r: RelationDef): CompiledRelation = {
-    val e = ExprParser.parse(r.expression)
-    if (e.hasAggregates || e.windowFlag)
-      throw CompileError(s"Relation '${r.name}': expression must be a plain boolean expression")
-    val sides = e.params.map { p =>
-      p.container match {
-        case "This" | "Related" => p.container
-        case other =>
-          throw CompileError(
-            s"Relation '${r.name}': parameter [$other] must be [This] or [Related]")
-      }
-    }
-    val isRule = e.params.zip(sides).map { case (p, side) =>
-      val src = if (side == "This") r.sourceName else r.relatedName
-      resolveAttr(src, p, r.name)._2
-    }
-    CompiledRelation(r, e, sides, isRule)
   }
 
   // --------------------------------------------------------------- sources
@@ -145,19 +120,11 @@ final class Compiler(project: Project, maxHops: Int = RelGraph.DefaultMaxHops) {
         // the referenced rule, computed in an earlier wave
         if (p.path.nonEmpty && p.path.last.to == s.name && p.isRule) deps += p.ref.attribute
       }
-      usedPaths(cr).foreach { path =>
-        path.headOption.foreach { h0 =>
-          val rel = relationsCompiled(h0.relation.name)
-          rel.expr.params.indices.foreach { i =>
-            val side = rel.sides(i)
-            val bindsThisSource =
-              if (h0.isSelf) true
-              else if (!h0.reverse) side == "This"
-              else side == "Related"
-            if (bindsThisSource && rel.isRule(i) &&
-                ruleByName.contains(rel.expr.params(i).attribute))
-              deps += rel.expr.params(i).attribute
-          }
+      // a path's first hop binds rules of this source: compute those first
+      cr.paths.flatMap(_.headOption).foreach { h0 =>
+        val rel = relationsCompiled(h0.relation.name)
+        rel.expr.params.indices.foreach { i =>
+          if (rel.isRule(i) && rel.sourceOf(i) == s.name) deps += rel.expr.params(i).attribute
         }
       }
       deps.filter(ruleByName.contains).toSet
@@ -167,17 +134,11 @@ final class Compiler(project: Project, maxHops: Int = RelGraph.DefaultMaxHops) {
     val order = orderRules(s.name, s.rules.map(_.name), deps)
 
     val sourceDeps = compiled.values.flatMap { cr =>
-      usedPaths(cr).flatten.map(_.to).filter(_ != s.name)
+      cr.paths.flatten.map(_.to).filter(_ != s.name)
     }.toSet
 
     CompiledSource(s, order.map(compiled), sourceDeps)
   }
-
-  /** Every relation path the rule traverses (scalar lookups + aggregates,
-    * including transit prefixes which read intermediate hubs).
-    */
-  private def usedPaths(cr: CompiledRule): Seq[Vector[Hop]] =
-    (cr.params.filter(_.path.nonEmpty).map(_.path) ++ cr.aggPaths).distinct
 
   /** Topological order of a source's rules; cycle = compile error
     * (reference: u_check_enrichment_loop.sql).

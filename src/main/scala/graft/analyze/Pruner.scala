@@ -19,11 +19,14 @@ import scala.collection.mutable
 object Pruner {
 
   /** Transitive closure of needed rule names per source, starting from
-    * `roots` (source → rule names directly referenced by the consumer).
+    * `roots` (source → rule names directly referenced by the consumer) and
+    * the relation-condition attributes of `hops`.
     * Raw attributes need no tracking: they live in the scan projection and
     * Catalyst prunes them for free.
     */
-  def closure(cp: CompiledProject, roots: Map[String, Set[String]]): Map[String, Set[String]] = {
+  def closure(
+      cp: CompiledProject, roots: Map[String, Set[String]],
+      hops: Seq[Hop] = Nil): Map[String, Set[String]] = {
     val needed = mutable.Map.empty[String, mutable.Set[String]]
     val queue = mutable.Queue.empty[(String, String)]
 
@@ -34,40 +37,28 @@ object Pruner {
       if (set.add(attr)) queue.enqueue((source, attr))
     }
 
+    // a traversed hop binds relation-condition attributes on both of its
+    // sides; rules among them must be computed on that side, plus the far
+    // side's unique-join uv_flag companions (u_enr_query_add_join.sql:101-117)
+    def addHop(hop: Hop): Unit = {
+      val rel = cp.relations(hop.relation.name)
+      rel.expr.params.indices.foreach { i =>
+        if (rel.isRule(i)) add(rel.sourceOf(i), rel.expr.params(i).attribute)
+      }
+      rel.guards(hop, cp.project).foreach(add(hop.to, _))
+    }
+
     roots.foreach { case (s, attrs) => attrs.foreach(add(s, _)) }
+    hops.foreach(addHop)
 
     while (queue.nonEmpty) {
       val (sourceName, ruleName) = queue.dequeue()
-      val cs = cp.compiledSource(sourceName)
-      val cr = cs.rules.find(_.name == ruleName).get
-
+      val cr = cp.compiledSource(sourceName).rules.find(_.name == ruleName).get
       // parameters: same-source rules and cross-source rule lookups
       cr.params.foreach { p =>
         if (p.isRule) add(p.targetSource, p.ref.attribute)
       }
-
-      // every traversed path binds relation-condition attributes on both
-      // sides of each hop; rules among them must be computed on that side
-      // (plus unique-join uv_flag companions — u_enr_query_add_join.sql:101-117)
-      val paths = (cr.params.filter(_.path.nonEmpty).map(_.path) ++ cr.aggPaths).distinct
-      paths.foreach { path =>
-        var near = sourceName
-        path.foreach { hop =>
-          val rel = cp.relations(hop.relation.name)
-          rel.expr.params.indices.foreach { i =>
-            val p = rel.expr.params(i)
-            val toNew = if (hop.reverse) rel.sides(i) == "This" else rel.sides(i) == "Related"
-            val side = if (toNew) hop.to else near
-            if (rel.isRule(i)) {
-              add(side, p.attribute)
-              if (toNew &&
-                  cp.project.source(hop.to).rules.exists(r => r.name == p.attribute && r.uniqueFlag))
-                add(hop.to, p.attribute + "_uv_flag")
-            }
-          }
-          near = hop.to
-        }
-      }
+      cr.paths.flatten.foreach(addHop)
     }
     needed.map { case (s, set) => s -> set.toSet }.toMap
   }

@@ -1,6 +1,7 @@
 package graft.analyze
 
 import graft.core._
+import graft.core.Sql.q
 import graft.parse._
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
@@ -145,11 +146,9 @@ final class TypeProbe(spark: SparkSession, failOnNullResult: Boolean = false) {
     }
     val relations = cp.relations.values.map { rel =>
       val ps = rel.expr.params
-      def side(i: Int) =
-        if (rel.sides(i) == "This") rel.relation.sourceName else rel.relation.relatedName
       Probe(s"relation '${rel.relation.name}'",
-        ps.indices.filter(rel.isRule).map(i => (side(i), ps(i).attribute)).toSet, None,
-        () => probeParts(rel.expr, i => attrType(cp, side(i), ps(i)), None),
+        ps.indices.filter(rel.isRule).map(i => (rel.sourceOf(i), ps(i).attribute)).toSet, None,
+        () => probeParts(rel.expr, i => attrType(cp, rel.sourceOf(i), ps(i)), None),
         err => CompileError(
           s"""Invalid relation expressions: [{"name": "${rel.relation.name}", "error": "$err"}]"""))
     }
@@ -382,7 +381,6 @@ object TypeProbe {
     */
   private[analyze] def probeParts(
       e: ParsedExpr, paramType: Int => DataType, castDatatype: Option[String]): ProbeParts = {
-    def quote(n: String) = "`" + n.replace("`", "``") + "`"
     def alias(i: Int): String = {
       val p = e.params(i)
       (p.attribute +: p.keys).mkString("__")
@@ -391,11 +389,11 @@ object TypeProbe {
     // non-aggregated params wrap in first_value so the probe query stays a
     // valid global aggregate (reference :49-52)
     var body = e.render(
-      i => if (hasAggs) s"first_value(${quote(alias(i))})" else quote(alias(i)),
-      j => e.renderAggInner(j, i => quote(alias(i))))
+      i => if (hasAggs) s"first_value(${q(alias(i))})" else q(alias(i)),
+      j => e.renderAggInner(j, i => q(alias(i))))
     castDatatype.foreach(t => body = s"CAST($body as $t)")
     val entries = e.params.indices
-      .map(i => alias(i) -> s"${exemplar(paramType(i))} AS ${quote(alias(i))}").distinct
+      .map(i => alias(i) -> s"${exemplar(paramType(i))} AS ${q(alias(i))}").distinct
     entries.groupBy(_._1).collect { case (a, es) if es.size > 1 => a }.headOption
       .foreach(a => throw CompileError(
         s"Probe alias collision: parameter `$a` resolves to different types " +

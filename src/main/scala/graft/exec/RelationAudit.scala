@@ -1,8 +1,10 @@
 package graft.exec
 
-import graft.analyze.CompiledProject
-import org.apache.spark.sql.DataFrame
+import graft.analyze.{CompiledProject, Pruner}
+import graft.core.Sql.q
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Project-level relation audit: for every declared relation, measure how
   * the DATA honors the declaration — unmatched source rows (a lookup that
@@ -10,10 +12,11 @@ import org.apache.spark.sql.functions._
   * whose join actually FANS OUT — the silent row-inflation bug), and the
   * worst fan-out. This welds the [[graft.operators.Integrity]] discipline
   * onto the reference-parity YAML world: the relation expressions
-  * themselves (rendered exactly as [[SourcePlanner]] renders them for the
-  * real joins — same `[This]`/`[Related]` binding, same hub columns, so
-  * rule-keyed and multi-conjunct relations audit correctly) drive the
-  * audit joins, no hand-typed key lists.
+  * themselves (the forward join condition that
+  * [[graft.analyze.CompiledRelation]] renders for [[SourcePlanner]]'s real
+  * joins — same `[This]`/`[Related]` binding, same unique-join guards, same
+  * hub columns, so rule-keyed and multi-conjunct relations audit correctly)
+  * drive the audit joins, no hand-typed key lists.
   *
   * Shape per relation: source hub LEFT JOIN related hub on the rendered
   * condition, grouped by a per-source-row id to count matches (the id is
@@ -24,16 +27,25 @@ import org.apache.spark.sql.functions._
   * hash joins exactly as in the planner path).
   */
 object RelationAudit {
-  import SourcePlanner.{prefixAll, q}
+  import SourcePlanner.prefixAll
 
+  /** One row per relation; a project without relations audits to no rows. */
   def audit(cp: CompiledProject, hub: String => DataFrame): DataFrame =
-    cp.project.relations.map(r => auditOne(cp, hub, r.name)).reduce(_.unionAll(_))
+    cp.project.relations.map(r => auditOne(cp, hub, r.name)).reduceOption(_.unionAll(_))
+      .getOrElse(SparkSession.active.createDataFrame(java.util.List.of[Row](), schema))
+
+  private val schema = StructType.fromDDL(
+    "relation STRING NOT NULL, cardinality STRING NOT NULL, source_rows BIGINT NOT NULL, " +
+      "unmatched_source_rows BIGINT NOT NULL, multi_match_source_rows BIGINT NOT NULL, " +
+      "max_matches BIGINT NOT NULL, cardinality_violations BIGINT NOT NULL")
 
   /** [[audit]] over PRUNED hubs: each audit join needs only the columns
     * the relation expression binds (plus uv-flag companions), so the hub
     * provider plans just those rules — raw-attribute relations audit
     * against bare source scans instead of re-building the full enriched
-    * hub (its whole lookup/aggregate join tree) once per relation.
+    * hub (its whole lookup/aggregate join tree) once per relation. The
+    * pruning seeds are each relation traversed forward, the join
+    * [[auditOne]] runs.
     * Identical counts: rule columns that don't key the join cannot change
     * which rows match. Caveat: that equivalence assumes the pruned-away
     * rule JOINS don't inflate hub rows — a declared `*-1` lookup that
@@ -44,32 +56,7 @@ object RelationAudit {
     * audit() exactly when some unrelated relation is already broken.
     */
   def auditPruned(cp: CompiledProject, runner: Runner): DataFrame =
-    audit(cp, runner.hubs(graft.analyze.Pruner.closure(cp, neededRules(cp))))
-
-  /** Rule-typed attributes each relation binds, per source — the pruning
-    * roots for [[auditPruned]] (raw attributes are free; Pruner.closure
-    * expands rule-on-rule deps — but uv-flag companions only for PATH
-    * hops, not root seeds, so the guard columns [[auditOne]] ANDs into
-    * joins keyed on a unique_flag rule must be seeded here explicitly,
-    * mirroring auditOne's guard logic; without them the pruned related
-    * hub lacks `<rule>_uv_flag` and the audit join fails to resolve).
-    */
-  private def neededRules(cp: CompiledProject): Map[String, Set[String]] =
-    cp.project.relations.flatMap { r =>
-      val rel = cp.relations(r.name)
-      val rd = rel.relation
-      rel.expr.params.indices.flatMap { i =>
-        val p = rel.expr.params(i)
-        if (!rel.isRule(i)) Nil
-        else if (rel.sides(i) == "This") Seq(rd.sourceName -> p.attribute)
-        else {
-          val guard = cp.project.source(rd.relatedName).rules
-            .find(_.name == p.attribute).filter(_.uniqueFlag)
-            .map(_ => rd.relatedName -> (p.attribute + "_uv_flag"))
-          Seq(rd.relatedName -> p.attribute) ++ guard
-        }
-      }
-    }.groupBy(_._1).map { case (s, xs) => s -> xs.map(_._2).toSet }
+    audit(cp, runner.hubs(Pruner.closure(cp, Map.empty, cp.relations.values.map(_.forward).toSeq)))
 
   def auditOne(
       cp: CompiledProject, hub: String => DataFrame, name: String): DataFrame = {
@@ -79,23 +66,10 @@ object RelationAudit {
       .withColumn("__sid", monotonically_increasing_id())
     val r = prefixAll(hub(rd.relatedName), "__r_")
       .withColumn("__rmark", lit(true))
-    val rendered = rel.expr.render { i =>
-      val p = rel.expr.params(i)
-      val pfx = if (rel.sides(i) == "This") "__s_" else "__r_"
-      q(pfx + p.attribute) + p.keys.map(k => "." + q(k)).mkString
-    }
-    // unique-join guard parity (J6): the planner ANDs the `<rule>_uv_flag`
-    // companion into joins keyed on a unique_flag rule — the audit must
-    // measure the join the planner will RUN, not the bare expression
-    // (without this, a unique-filtered relation audits as a fan-out)
-    val guards = rel.expr.params.indices.flatMap { i =>
-      val p = rel.expr.params(i)
-      if (rel.sides(i) != "Related" || !rel.isRule(i)) None
-      else cp.project.source(rd.relatedName).rules
-        .find(_.name == p.attribute).filter(_.uniqueFlag)
-        .map(_ => q("__r_" + p.attribute + "_uv_flag"))
-    }.distinct
-    val cond = (s"($rendered)" +: guards).mkString(" AND ")
+    // the join the planner runs, unique-join guard included (J6): without
+    // it a unique-filtered relation audits as a fan-out
+    val cond = rel.joinCondition(
+      rel.forward, cp.project, attr => q("__s_" + attr), attr => q("__r_" + attr))
     val oneRelated = rd.cardinality.relatedOne
     s.join(r, expr(cond), "left")
       .groupBy(col("__sid"))

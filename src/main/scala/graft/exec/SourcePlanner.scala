@@ -2,6 +2,7 @@ package graft.exec
 
 import graft.analyze._
 import graft.core._
+import graft.core.Sql.{q, withKeys}
 import graft.parse._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -66,10 +67,8 @@ final class SourcePlanner(
         val bySig = m.getOrElseUpdate(pathKey(path), mutable.LinkedHashMap.empty)
         if (!bySig.contains(sig))
           bySig(sig) = AggSpec(s"__a${nextId()}", cr.expr.aggs(j).func,
-            bind => cr.expr.renderAggInner(j, i => {
-              val ref = cr.params(i).ref
-              bind(ref.attribute) + ref.keys.map(k => "." + q(k)).mkString
-            }))
+            bind => cr.expr.renderAggInner(j, i =>
+              withKeys(bind(cr.params(i).ref.attribute), cr.params(i).ref.keys)))
       }
     }
     m.toMap
@@ -109,12 +108,9 @@ final class SourcePlanner(
   }
 
   /** SQL fragment for a scalar (non-aggregate) parameter. */
-  private def bindParam(p: ResolvedParam): String = {
-    val base =
-      if (p.path.isEmpty) q(p.ref.attribute)
-      else q(joinPrefix(pathKey(p.path)) + p.ref.attribute)
-    base + p.ref.keys.map(k => "." + q(k)).mkString
-  }
+  private def bindParam(p: ResolvedParam): String = withKeys(
+    if (p.path.isEmpty) q(p.ref.attribute)
+    else q(joinPrefix(pathKey(p.path)) + p.ref.attribute), p.ref.keys)
 
   // ----------------------------------------------------------------- joins
 
@@ -149,11 +145,10 @@ final class SourcePlanner(
             val prevPfx = joinPrefix(pathKey(prefix.init))
             attr => q(prevPfx + attr)
           }
-        val cond = renderRelation(hop, currentBind, attr => q(pfx + attr))
-        val guarded = uniqueGuard(hop, attr => q(pfx + attr))
-          .map(g => s"($cond) AND $g").getOrElse(cond)
+        val cond = cp.relations(hop.relation.name)
+          .joinCondition(hop, cp.project, currentBind, attr => q(pfx + attr))
         df =
-          try df.join(far, expr(guarded), "left")
+          try df.join(far, expr(cond), "left")
           catch {
             case e: org.apache.spark.sql.AnalysisException =>
               // boolean gate parity (impc_update_test_results.sql:37-49)
@@ -165,45 +160,6 @@ final class SourcePlanner(
       }
       i += 1
     }
-  }
-
-  /** Render a hop's relation expression with the given bindings for the
-    * current (near) and new (far) physical sides. `[This]`/`[Related]`
-    * containers map to physical sides depending on traversal direction
-    * (reference: u_enr_query_add_join.sql:92-103).
-    */
-  private def renderRelation(
-      hop: Hop, currentBind: String => String, newBind: String => String): String = {
-    val rel = cp.relations(hop.relation.name)
-    rel.expr.render { i =>
-      val p = rel.expr.params(i)
-      val toNew = if (hop.reverse) rel.sides(i) == "This" else rel.sides(i) == "Related"
-      val base = if (toNew) newBind(p.attribute) else currentBind(p.attribute)
-      base + p.keys.map(k => "." + q(k)).mkString
-    }
-  }
-
-  /** Unique-join guard: when the far side of the join is keyed on a rule
-    * marked `unique_flag`, AND in its `<name>_uv_flag` companion rule
-    * (reference: u_enr_query_add_join.sql:101-117).
-    */
-  private def uniqueGuard(hop: Hop, newBind: String => String): Option[String] = {
-    val rel = cp.relations(hop.relation.name)
-    val farSource = cp.project.source(hop.to)
-    val guards = rel.expr.params.indices.flatMap { i =>
-      val p = rel.expr.params(i)
-      val toNew = if (hop.reverse) rel.sides(i) == "This" else rel.sides(i) == "Related"
-      if (!toNew || !rel.isRule(i)) None
-      else farSource.rules.find(_.name == p.attribute).filter(_.uniqueFlag).map { _ =>
-        val companion = p.attribute + "_uv_flag"
-        if (!farSource.rules.exists(_.name == companion))
-          throw CompileError(
-            s"Uniqueness validation enrichment is missing or inactive for rule " +
-              s"'${p.attribute}' referenced in relation '${hop.relation.name}'")
-        newBind(companion)
-      }
-    }
-    if (guards.isEmpty) None else Some(guards.distinct.mkString(" AND "))
   }
 
   // ------------------------------------------------------------ aggregates
@@ -232,8 +188,7 @@ final class SourcePlanner(
     }
   }
 
-  private def qKeys(ref: ParamRef): String =
-    q(ref.attribute) + ref.keys.map(k => "." + q(k)).mkString
+  private def qKeys(ref: ParamRef): String = withKeys(q(ref.attribute), ref.keys)
 
   /** Join all aggregate columns for one relation path in a single pass. */
   private def joinAggPath(path: Vector[Hop]): Unit = {
@@ -247,10 +202,11 @@ final class SourcePlanner(
       if (transit.isEmpty) attr => q(attr)
       else attr => q(joinPrefix(pathKey(transit)) + attr)
 
+    val rel = cp.relations(lastHop.relation.name)
     val related = relatedSide(lastHop)
     val specs = aggPlan(pathKey(path)).values.toSeq
 
-    equiConjuncts(lastHop) match {
+    equiConjuncts(rel, lastHop, currentBind) match {
       case Some(pairs) =>
         // Equi rewrite: aggregate the related hub once, grouped by its side
         // of the join keys, then left-join. Shuffles each side once and
@@ -259,12 +215,12 @@ final class SourcePlanner(
         val gks = pairs.indices.map(i => s"__gk${gid}_$i")
         val aggCols = specs.map(sp => expr(sp.render(a => q(a))).as(sp.col))
         val aggDf = related
-          .groupBy(pairs.zipWithIndex.map { case ((_, newSide), i) =>
-            expr(newSide).as(gks(i))
+          .groupBy(pairs.zipWithIndex.map { case ((_, farSide), i) =>
+            expr(farSide).as(gks(i))
           }: _*)
           .agg(aggCols.head, aggCols.tail: _*)
-        val cond = pairs.zipWithIndex.map { case ((cur, _), i) =>
-          s"(${renderSide(cur, lastHop, currentBind)}) = ${q(gks(i))}"
+        val cond = pairs.zipWithIndex.map { case ((nearSide, _), i) =>
+          s"($nearSide) = ${q(gks(i))}"
         }.mkString(" AND ")
         df = df.join(aggDf, expr(cond), "left").drop(gks: _*)
       case None =>
@@ -297,7 +253,7 @@ final class SourcePlanner(
         // and a released cache only recomputes.
         val tagged = Materialize.cache(df.withColumn(
           rid, struct(xxhash64(allCols: _*), row_number().over(w))))
-        val cond = renderRelation(lastHop, currentBind, attr => q(pfx + attr))
+        val cond = rel.render(lastHop, currentBind, attr => q(pfx + attr))
         val aggCols = specs.map(sp => expr(sp.render(a => q(pfx + a))).as(sp.col))
         val matches = tagged
           .join(prefixAll(related, pfx), expr(cond), "inner")
@@ -308,54 +264,36 @@ final class SourcePlanner(
   }
 
   /** Split the last hop's relation expression into equi conjuncts
-    * (currentSideSql, newSideSql). The new side is rendered over the bare
-    * related hub columns. Returns None when any conjunct is not a simple
-    * `near = far` equality.
+    * (nearSideSql, farSideSql); the near side is bound by `near`, the far
+    * side over the bare related hub columns. Returns None when any
+    * conjunct is not a simple `near = far` equality.
     */
-  private def equiConjuncts(hop: Hop): Option[Seq[(Vector[Seg], String)]] = {
-    val rel = cp.relations(hop.relation.name)
+  private def equiConjuncts(
+      rel: CompiledRelation, hop: Hop, near: String => String): Option[Seq[(String, String)]] = {
     val conjuncts = splitTopLevel(rel.expr.segments, "AND").getOrElse(return None)
+    def render(segs: Vector[Seg]) = rel.render(hop, near, attr => q(attr), segs)
     val out = conjuncts.map { c =>
-      val sides = splitEquality(c).getOrElse(return None)
-      val (lhs, rhs) = sides
-      def sideOf(segs: Vector[Seg]): Option[Boolean] = { // Some(true)=new side
-        val ps = segs.collect { case Seg.Param(i) => i }
-        if (ps.isEmpty) return None
-        val toNew = ps.map { i =>
-          if (hop.reverse) rel.sides(i) == "This" else rel.sides(i) == "Related"
-        }
-        if (toNew.forall(_ == true)) Some(true)
-        else if (toNew.forall(_ == false)) Some(false)
+      val (lhs, rhs) = splitEquality(c).getOrElse(return None)
+      def sideOf(segs: Vector[Seg]): Option[Boolean] = { // Some(true)=far side
+        val far = segs.collect { case Seg.Param(i) => rel.bindsFar(i, hop) }
+        if (far.isEmpty) None
+        else if (far.forall(identity)) Some(true)
+        else if (far.forall(!_)) Some(false)
         else None
       }
       (sideOf(lhs), sideOf(rhs)) match {
-        case (Some(false), Some(true)) =>
-          (lhs, renderSide(rhs, hop, attr => q(attr)))
-        case (Some(true), Some(false)) =>
-          (rhs, renderSide(lhs, hop, attr => q(attr)))
+        case (Some(false), Some(true)) => (render(lhs), render(rhs))
+        case (Some(true), Some(false)) => (render(rhs), render(lhs))
         case _ => return None
       }
     }
     Some(out)
   }
 
-  /** Render one side of a relation conjunct with a binding for its params. */
-  private def renderSide(
-      segs: Vector[Seg], hop: Hop, bind: String => String): String = {
-    val rel = cp.relations(hop.relation.name)
-    ParsedExpr.renderSegs(segs, i => {
-      val p = rel.expr.params(i)
-      bind(p.attribute) + p.keys.map(k => "." + q(k)).mkString
-    }, ParsedExpr.noAgg)
-  }
-
   private def nextId(): Int = { counter += 1; counter }
 }
 
 object SourcePlanner {
-
-  /** Backtick-quote an identifier (reference: u_add_backticks.sql). */
-  def q(name: String): String = "`" + name.replace("`", "``") + "`"
 
   def pathKey(path: Seq[Hop]): String = path.map(_.key).mkString(",")
 

@@ -2,6 +2,7 @@ package graft.exec
 
 import graft.analyze._
 import graft.core._
+import graft.core.Sql.{q, withKeys}
 import scala.collection.mutable
 
 /** Reference-comparable SQL side channel.
@@ -29,8 +30,6 @@ import scala.collection.mutable
 final class SqlEmitter(
     cp: CompiledProject,
     ruleTypes: Map[(String, String), org.apache.spark.sql.types.DataType] = Map.empty) {
-
-  import SourcePlanner.q
 
   /** FROM-clause text for a source's physical input. */
   type TableRef = SourceDef => String
@@ -78,30 +77,6 @@ final class SqlEmitter(
     def relatedRef(hop: Hop): String =
       if (hop.to == s.name) ctes.last._1 else hubRef(hop.to)
 
-    def renderRelation(hop: Hop, currentBind: String => String,
-        newBind: String => String): String = {
-      val rel = cp.relations(hop.relation.name)
-      rel.expr.render { i =>
-        val p = rel.expr.params(i)
-        val toNew = if (hop.reverse) rel.sides(i) == "This" else rel.sides(i) == "Related"
-        val base = if (toNew) newBind(p.attribute) else currentBind(p.attribute)
-        base + p.keys.map(k => "." + q(k)).mkString
-      }
-    }
-
-    def uniqueGuard(hop: Hop, newBind: String => String): Option[String] = {
-      val rel = cp.relations(hop.relation.name)
-      val farSource = cp.project.source(hop.to)
-      val guards = rel.expr.params.indices.flatMap { i =>
-        val p = rel.expr.params(i)
-        val toNew = if (hop.reverse) rel.sides(i) == "This" else rel.sides(i) == "Related"
-        if (!toNew || !rel.isRule(i)) None
-        else farSource.rules.find(_.name == p.attribute).filter(_.uniqueFlag)
-          .map(_ => newBind(p.attribute + "_uv_flag"))
-      }
-      if (guards.isEmpty) None else Some(guards.distinct.mkString(" AND "))
-    }
-
     def ensurePath(path: Vector[Hop]): Unit = {
       var i = 1
       while (i <= path.length) {
@@ -121,10 +96,9 @@ final class SqlEmitter(
           val currentBind: String => String =
             if (i == 1) attr => s"T.${q(attr)}"
             else attr => colRef(SourcePlanner.pathKey(prefix.init), attr)
-          val cond = renderRelation(hop, currentBind, attr => s"$alias.${q(pfx + attr)}")
-          val guarded = uniqueGuard(hop, attr => s"$alias.${q(pfx + attr)}")
-            .map(g => s"($cond) AND $g").getOrElse(cond)
-          pendingJoins += s"LEFT JOIN (SELECT $farCols FROM $far) $alias\n    ON $guarded"
+          val cond = cp.relations(hop.relation.name)
+            .joinCondition(hop, cp.project, currentBind, attr => s"$alias.${q(pfx + attr)}")
+          pendingJoins += s"LEFT JOIN (SELECT $farCols FROM $far) $alias\n    ON $cond"
           pendingJoinAliases += alias
           joinPrefix(key) = pfx
           currentCteAlias(key) = alias
@@ -133,12 +107,9 @@ final class SqlEmitter(
       }
     }
 
-    def bindParam(p: ResolvedParam): String = {
-      val base =
-        if (p.path.isEmpty) s"T.${q(p.ref.attribute)}"
-        else colRef(SourcePlanner.pathKey(p.path), p.ref.attribute)
-      base + p.ref.keys.map(k => "." + q(k)).mkString
-    }
+    def bindParam(p: ResolvedParam): String = withKeys(
+      if (p.path.isEmpty) s"T.${q(p.ref.attribute)}"
+      else colRef(SourcePlanner.pathKey(p.path), p.ref.attribute), p.ref.keys)
 
     // one CTE per rule wave: joins needed by the rule are attached to the
     // CTE that computes it; `T.*` carries prior columns forward
@@ -155,9 +126,9 @@ final class SqlEmitter(
           if (transit.isEmpty) attr => s"T.${q(attr)}"
           else attr => colRef(SourcePlanner.pathKey(transit), attr)
         val inner = cr.expr.renderAggInner(j,
-          i => s"R.${q(cr.params(i).ref.attribute)}" +
-            cr.params(i).ref.keys.map(k => "." + q(k)).mkString)
-        val cond = renderRelation(lastHop, currentBind, attr => s"R.${q(attr)}")
+          i => withKeys(s"R.${q(cr.params(i).ref.attribute)}", cr.params(i).ref.keys))
+        val cond = cp.relations(lastHop.relation.name)
+          .render(lastHop, currentBind, attr => s"R.${q(attr)}")
         val alias = s"A${nextId()}"
         pendingJoins +=
           s"LEFT JOIN LATERAL (SELECT $inner AS ${q(alias + "_v")}\n    FROM ${relatedRef(lastHop)} R WHERE $cond) $alias ON true"
@@ -201,13 +172,12 @@ final class SqlEmitter(
     val channels = co.channels.map { ch =>
       val hub = hubRef(ch.channel.sourceName)
       val where = ch.filter.map { f =>
-        val sql = f.expr.render(i => q(f.params(i).ref.attribute) +
-          f.params(i).ref.keys.map(k => "." + q(k)).mkString)
+        val sql = f.expr.render(i =>
+          withKeys(q(f.params(i).ref.attribute), f.params(i).ref.keys))
         s"\n  WHERE $sql"
       }.getOrElse("")
       val byTarget = ch.mappings.map(m => m.mapping.targetColumn -> m).toMap
-      def inner(m: CompiledMapping): String =
-        q(m.attribute) + m.keys.map(k => "." + q(k)).mkString
+      def inner(m: CompiledMapping): String = withKeys(q(m.attribute), m.keys)
       if (ch.channel.operationType == OperationType.Aggregate) {
         val dims = ch.mappings.filter(_.mapping.aggregate.isEmpty)
         val select = co.output.columns.map { c =>

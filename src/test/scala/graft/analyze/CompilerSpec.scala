@@ -119,4 +119,59 @@ class CompilerSpec extends AnyFunSuite {
     val e = intercept[CompileError](new Compiler(Project(Seq(src), Nil, Seq(out))).compile())
     assert(e.message.contains("does not exist"))
   }
+
+  // fact -> dim is keyed on unique rules at both ends; only dim declares
+  // the `_uv_flag` companion. emp relates to itself.
+  private lazy val bound = new Compiler(Project(
+    Seq(
+      SourceDef("fact", "fact", Seq(RawAttr.parse("dim_ref int")),
+        rules = Seq(RuleDef("fact_key", "CONCAT('k', [This].dim_ref)", uniqueFlag = true))),
+      SourceDef("dim", "dim", Seq(RawAttr.parse("dim_id int")),
+        rules = Seq(
+          RuleDef("key", "CONCAT('k', [This].dim_id)", uniqueFlag = true),
+          RuleDef("key_uv_flag", "count(1) OVER (PARTITION BY [This].key) = 1"))),
+      SourceDef("emp", "emp", Seq(RawAttr.parse("emp_id int"), RawAttr.parse("mgr_id int")),
+        rules = Seq(
+          RuleDef("ekey", "[This].emp_id", uniqueFlag = true),
+          RuleDef("ekey_uv_flag", "count(1) OVER (PARTITION BY [This].ekey) = 1"),
+          RuleDef("meta", "named_struct('lvl', [This].emp_id)")))),
+    Seq(
+      RelationDef("[fact]- key -[dim]", "[This].fact_key = [Related].key", Cardinality.ManyOne),
+      RelationDef("[emp]- mgr -[emp]", "[This].mgr_id = [Related].ekey AND [Related].meta.lvl > 0",
+        Cardinality.ManyOne)))).compile()
+  private def near(a: String) = s"n.$a"
+  private def far(a: String) = s"f.$a"
+
+  test("forward hop: [This] binds the near side, [Related] the guarded far side") {
+    val rel = bound.relations("[fact]- key -[dim]")
+    val hop = Hop(rel.relation, reverse = false)
+    assert(rel.forward == hop)
+    assert(Seq(0, 1).map(rel.sourceOf) == Seq("fact", "dim"))
+    assert(Seq(0, 1).map(rel.bindsFar(_, hop)) == Seq(false, true))
+    assert(rel.guards(hop, bound.project) == Seq("key_uv_flag"))
+    assert(rel.joinCondition(hop, bound.project, near, far) ==
+      "(n.fact_key = f.key) AND f.key_uv_flag")
+  }
+
+  test("reverse hop flips the sides; a far key without its companion is an error") {
+    val rel = bound.relations("[fact]- key -[dim]")
+    val hop = Hop(rel.relation, reverse = true)
+    assert(Seq(0, 1).map(rel.sourceOf) == Seq("fact", "dim"))
+    assert(Seq(0, 1).map(rel.bindsFar(_, hop)) == Seq(true, false))
+    assert(rel.guards(hop, bound.project) == Seq("fact_key_uv_flag"))
+    assert(rel.render(hop, near, far) == "f.fact_key = n.key")
+    val e = intercept[CompileError](rel.joinCondition(hop, bound.project, near, far))
+    assert(e.message == "Uniqueness validation enrichment is missing or inactive for rule " +
+      "'fact_key' referenced in relation '[fact]- key -[dim]'")
+  }
+
+  test("self hop: both sides read this source, [Related] binds the far snapshot") {
+    val rel = bound.relations("[emp]- mgr -[emp]")
+    val hop = Hop(rel.relation, reverse = false)
+    assert(Seq(0, 1, 2).map(rel.sourceOf) == Seq("emp", "emp", "emp"))
+    assert(Seq(0, 1, 2).map(rel.bindsFar(_, hop)) == Seq(false, true, true))
+    assert(rel.guards(hop, bound.project) == Seq("ekey_uv_flag"))
+    assert(rel.joinCondition(hop, bound.project, near, far) ==
+      "(n.mgr_id = f.ekey AND f.meta.`lvl` > 0) AND f.ekey_uv_flag")
+  }
 }

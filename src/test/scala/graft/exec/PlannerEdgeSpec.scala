@@ -85,19 +85,11 @@ class PlannerEdgeSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("unique join without companion rule is a compile-time error") {
-    val p = Project(
-      sources = Seq(
-        SourceDef("dim", "dim", Seq(RawAttr("dim_id", LongType)),
-          rules = Seq(RuleDef("key", "CONCAT('k', [This].dim_id)", uniqueFlag = true))),
-        SourceDef("fact", "fact", Seq(RawAttr("dim_ref", LongType)),
-          rules = Seq(RuleDef("x", "[dim].dim_id")))),
-      relations = Seq(RelationDef("[fact]- key -[dim]",
-        "CONCAT('k', [This].dim_ref) = [Related].key", Cardinality.ManyOne)))
     import spark.implicits._
     val dim = Seq(1L).toDF("dim_id")
     val fact = Seq(1L).toDF("dim_ref")
     val e = intercept[CompileError](
-      run(p, Map("dim" -> dim, "fact" -> fact)).hub("fact"))
+      run(PlannerEdgeSpec.uniqueWithoutCompanion, Map("dim" -> dim, "fact" -> fact)).hub("fact"))
     assert(e.message.contains("Uniqueness validation"))
   }
 
@@ -499,4 +491,19 @@ class PlannerEdgeSpec extends AnyFunSuite with BeforeAndAfterAll {
     run(p, Map("s" -> t)).run(tmp)
     assert(spark.table("vout").count() == 1)
   }
+}
+
+object PlannerEdgeSpec {
+
+  /** A lookup keyed on a unique_flag rule whose `_uv_flag` companion is
+    * not declared.
+    */
+  val uniqueWithoutCompanion: Project = Project(
+    sources = Seq(
+      SourceDef("dim", "dim", Seq(RawAttr("dim_id", LongType)),
+        rules = Seq(RuleDef("key", "CONCAT('k', [This].dim_id)", uniqueFlag = true))),
+      SourceDef("fact", "fact", Seq(RawAttr("dim_ref", LongType)),
+        rules = Seq(RuleDef("x", "[dim].dim_id")))),
+    relations = Seq(RelationDef("[fact]- key -[dim]",
+      "CONCAT('k', [This].dim_ref) = [Related].key", Cardinality.ManyOne)))
 }

@@ -16,6 +16,11 @@ import scala.util.Random
   * relates to one earlier source), so implicit path inference stays
   * unambiguous by construction: scalar lookups walk toward the root,
   * aggregates (equi and theta) walk away from it.
+  *
+  * On guarded seeds the last tree edge is keyed on a `unique_flag` rule of
+  * the parent with its `_uv_flag` companion, so lookups over it pass
+  * through the unique-join guard; `dupKeys` makes some of those keys
+  * repeat, which the guard must null out rather than fan out.
   */
 class PlannerEmitterPropSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -39,16 +44,22 @@ class PlannerEmitterPropSpec extends AnyFunSuite with BeforeAndAfterAll {
     }.toMap
   }
 
-  private def genProject(rnd: Random, nSources: Int): Project = {
+  /** `guard`: None, or Some(dupKeys) to key the last tree edge on a
+    * unique_flag rule of its parent, with repeated keys when `dupKeys`.
+    */
+  private def genProject(rnd: Random, nSources: Int, guard: Option[Boolean]): Project = {
     val names = (0 until nSources).map(i => s"src$i")
     val attrs = Seq(RawAttr.parse("id long"), RawAttr.parse("v long"),
       RawAttr.parse("s string"), RawAttr.parse("amt int"))
     // tree: source i (>0) relates to a random earlier source (M-1 toward
     // the parent); every third edge is additionally theta-capable
+    val guarded = guard.map(_ => nSources - 1)
     val relations = (1 until nSources).map { i =>
       val parent = rnd.nextInt(i)
-      RelationDef(s"[src$i]- r$i -[src$parent]",
-        "[This].v = [Related].id", Cardinality.ManyOne)
+      val cond =
+        if (guarded.contains(i)) "CONCAT('k', [This].v) = [Related].ukey"
+        else "[This].v = [Related].id"
+      RelationDef(s"[src$i]- r$i -[src$parent]", cond, Cardinality.ManyOne)
     }
     val thetaRel =
       if (nSources >= 2)
@@ -61,9 +72,11 @@ class PlannerEmitterPropSpec extends AnyFunSuite with BeforeAndAfterAll {
     // Lookup = child reads parent's hub; Aggregate = parent reads child's.
     // The theta relation makes src0 read src1, so src1's tree edge must
     // not be Lookup when its parent chain reaches src0.
+    // a guarded edge other than edge 1 is always a Lookup edge, so its
+    // child can look up through the guard
     val lookupEdge: Map[Int, Boolean] = (1 until nSources).map { i =>
       i -> (if (i == 1 && thetaRel.nonEmpty) false else rnd.nextBoolean())
-    }.toMap
+    }.toMap ++ guarded.filter(_ != 1).map(_ -> true)
     val parentOf: Map[Int, Int] = relations.map(r =>
       r.sourceName.drop(3).toInt -> r.relatedName.drop(3).toInt).toMap
 
@@ -106,6 +119,19 @@ class PlannerEmitterPropSpec extends AnyFunSuite with BeforeAndAfterAll {
       if (i == 0 && thetaRel.nonEmpty)
         rules :+= RuleDef("theta_cnt", "count([src1].id)",
           parameters = Seq(ParamSpec("src1", Seq("[src0]- theta -[src1]"))))
+      // the guarded edge: its parent carries the unique key and companion,
+      // its child (on a Lookup edge) looks up through it
+      guarded.foreach { g =>
+        val rel = relations(g - 1)
+        if (rel.relatedName == n) {
+          val key = if (guard.get) "[This].id DIV 2" else "[This].id"
+          rules :+= RuleDef("ukey", s"CONCAT('k', $key)", uniqueFlag = true)
+          rules :+= RuleDef("ukey_uv_flag", "count(1) OVER (PARTITION BY [This].ukey) = 1")
+        }
+        if (rel.sourceName == n && lookupEdge(g))
+          rules :+= RuleDef("u_s", s"[${rel.relatedName}].s",
+            parameters = Seq(ParamSpec(rel.relatedName, Seq(rel.name))))
+      }
       SourceDef(n, n, attrs, rules)
     }
 
@@ -121,9 +147,13 @@ class PlannerEmitterPropSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("planner == emitted SQL == materialized mode on random projects") {
+    var guardedDupLookups = 0
     (1 to 12).foreach { seed =>
       val rnd = new Random(seed)
-      val p = genProject(rnd, 2 + rnd.nextInt(3))
+      val guard = if (seed % 3 != 0) Some(seed % 2 == 0) else None
+      val p = genProject(rnd, 2 + rnd.nextInt(3), guard)
+      if (guard.contains(true) && p.sources.exists(_.rules.exists(_.name == "u_s")))
+        guardedDupLookups += 1
       val tables = genTables(rnd, p.sources.map(_.name))
       val cp = new Compiler(p).compile()
       val emitter = new SqlEmitter(cp)
@@ -151,6 +181,13 @@ class PlannerEmitterPropSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(viaSql.exceptAll(viaPlanner).count() == 0 &&
         viaPlanner.exceptAll(viaSql).count() == 0,
         s"seed $seed: output diverges between emitted SQL and planner")
+
+      // generated ids are unique and the keyed edge is guarded, so no *-1
+      // relation fans out: pruned and full hubs audit the same
+      val full = RelationAudit.audit(cp, lazyRunner.hub).collect().map(_.toString).sorted.toSeq
+      val pruned = RelationAudit.auditPruned(cp, lazyRunner).collect().map(_.toString).sorted.toSeq
+      assert(full == pruned, s"seed $seed: pruned audit != full audit")
     }
+    assert(guardedDupLookups > 0, "no seed looks up through a guard over repeated keys")
   }
 }

@@ -104,6 +104,17 @@ class RelationAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("a project without relations audits to no rows") {
+    val _ = spark
+    val src = graft.core.SourceDef("s", "t", Seq(graft.core.RawAttr.parse("x int")))
+    val ncp = new Compiler(graft.core.Project(Seq(src))).compile()
+    val audit = RelationAudit.audit(ncp, _ => fail("no hub is read"))
+    val runner = new Runner(cp, Runners.parquetDir(sfDir))
+    assert(audit.schema === RelationAudit.audit(cp, runner.hub).schema)
+    assert(audit.collect().isEmpty)
+    assert(!RelationAudit.hasViolations(audit))
+  }
+
   test("duplicated parent row: the M-1 declaration's fan-out is reported") {
     val base = Runners.parquetDir(sfDir)
     val reader: graft.core.SourceDef => DataFrame = s =>

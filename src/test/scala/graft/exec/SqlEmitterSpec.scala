@@ -121,6 +121,12 @@ class SqlEmitterSpec extends AnyFunSuite with BeforeAndAfterAll {
       "runtime output event_struct: emitted SQL diverges from planner")
   }
 
+  test("unique join without companion rule fails emission as it fails planning") {
+    val ecp = new Compiler(PlannerEdgeSpec.uniqueWithoutCompanion).compile()
+    val e = intercept[graft.core.CompileError](new SqlEmitter(ecp).sourceSql("fact", tableFor))
+    assert(e.message.contains("Uniqueness validation enrichment is missing or inactive for rule 'key'"))
+  }
+
   test("InlineCTE canary: sub-JVM probe of the nested hub SQL (SparkEntry localCheckpoint workaround)") {
     // The InlineCTE miscompile that forces HubQueries
     // q_lineitem_enriched_sql to localCheckpoint() each hub view only
