@@ -58,6 +58,26 @@ final case class CompiledProject(
   def compiledSource(name: String): CompiledSource =
     sources.find(_.source.name == name)
       .getOrElse(throw CompileError(s"Unknown source '$name'"))
+
+  def output(name: String): CompiledOutput =
+    outputs.find(_.output.name == name)
+      .getOrElse(throw CompileError(s"Unknown output '$name'"))
+
+  /** `names` and every source they transitively depend on, grouped into
+    * dependency levels in topological order: a source's level is one more
+    * than its deepest dependency's, so each level reads only earlier ones.
+    */
+  def levels(names: Seq[String]): Seq[Seq[String]] = {
+    val need = mutable.Set.empty[String]
+    def visit(n: String): Unit = if (need.add(n)) compiledSource(n).dependsOn.foreach(visit)
+    names.foreach(visit)
+    val depth = mutable.Map.empty[String, Int]
+    val order = sources.filter(cs => need(cs.source.name))
+    order.foreach { cs =>
+      depth(cs.source.name) = (cs.dependsOn.toSeq.map(depth(_) + 1) :+ 0).max
+    }
+    order.map(_.source.name).groupBy(depth).toSeq.sortBy(_._1).map(_._2)
+  }
 }
 
 /** The compile pipeline: parse every expression, resolve parameters, infer

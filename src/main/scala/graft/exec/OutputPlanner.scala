@@ -2,69 +2,46 @@ package graft.exec
 
 import graft.analyze._
 import graft.core._
-import graft.core.Sql.{q, withKeys}
+import graft.core.Sql.q
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import scala.collection.mutable
 
-/** Builds an output table's DataFrame from its channels
-  * (reference: u_output_generate_query.sql:53-155).
+/** Builds an output table's DataFrame from the channels of
+  * [[Lowering.output]] (reference: u_output_generate_query.sql:53-155).
   *
-  * Per channel: filter → optional groupBy-aggregate (GROUP BY every
-  * non-aggregate mapping — reference A2) → project the declared output
-  * columns in order with casts, NULL-filling unmapped columns
-  * (u_output_query_column_select.sql:13-21) → UNION ALL by position
-  * (u_output_generate_query.sql:88,148).
+  * Per channel: filter → optional groupBy-aggregate → the declared output
+  * columns in order with casts, NULL-filling unmapped columns → UNION ALL
+  * by position (u_output_generate_query.sql:88,148).
   */
-final class OutputPlanner(cp: CompiledProject, hubs: String => DataFrame) {
+final class OutputPlanner(hubs: String => DataFrame) {
 
   def plan(co: CompiledOutput): DataFrame =
-    co.channels.map(channel(co, _)).reduce(_ union _)
+    Lowering.output(co).map(channel(co, _)).reduce(_ union _)
 
-  private def channel(co: CompiledOutput, ch: CompiledChannel): DataFrame = {
-    var df = hubs(ch.channel.sourceName)
-    ch.filter.foreach { f =>
-      val sql = f.expr.render(i =>
-        withKeys(q(f.params(i).ref.attribute), f.params(i).ref.keys))
+  private def channel(co: CompiledOutput, ch: Lowering.OutputChannel): DataFrame = {
+    var df = hubs(ch.source)
+    ch.filter.foreach { sql =>
       val cond = expr(sql)
       // boolean gate, reference parity (impc_update_test_results.sql:66-77)
       val dt = df.select(cond).schema.head.dataType
       if (dt != org.apache.spark.sql.types.BooleanType)
         throw CompileError(
           s"Output '${co.output.name}': filter must be a boolean expression " +
-            s"(got ${dt.simpleString}): ${f.expr.raw}")
+            s"(got ${dt.simpleString}): ${ch.ch.filter.get.expr.raw}")
       df = df.filter(cond)
     }
-    val byTarget: Map[String, CompiledMapping] =
-      ch.mappings.map(m => m.mapping.targetColumn -> m).toMap
-
-    def innerSql(m: CompiledMapping): String = withKeys(q(m.attribute), m.keys)
-
-    if (ch.channel.operationType == OperationType.Aggregate) {
-      val (aggMaps, dimMaps) = ch.mappings.partition(_.mapping.aggregate.isDefined)
-      if (aggMaps.isEmpty)
-        throw CompileError(
-          s"Output '${co.output.name}': Aggregate channel has no aggregate mappings")
-      val dims = dimMaps.map(m => expr(innerSql(m)).as(m.mapping.targetColumn))
-      val aggs = aggMaps.map { m =>
-        expr(graft.parse.ParsedExpr.renderAggCall(
-          m.mapping.aggregate.get, m.mapping.distinct, innerSql(m)))
-          .as(m.mapping.targetColumn)
-      }
+    if (ch.grouped) {
+      val dims = ch.dims.map { case (target, sql) => expr(sql).as(target) }
+      val aggs = ch.aggs.map { case (target, sql) => expr(sql).as(target) }
       df = df.groupBy(dims: _*).agg(aggs.head, aggs.tail: _*)
       // after aggregation, every mapped target column exists under its name
-      df.select(co.output.columns.map { c =>
-        if (byTarget.contains(c.name)) df.col(q(c.name)).cast(c.dataType).as(c.name)
-        else lit(null).cast(c.dataType).as(c.name)
+      df.select(ch.columns.map { case (c, value) =>
+        (if (value.isDefined) df.col(q(c.name)) else lit(null)).cast(c.dataType).as(c.name)
       }: _*)
-    } else {
-      df.select(co.output.columns.map { c =>
-        byTarget.get(c.name) match {
-          case Some(m) => expr(innerSql(m)).cast(c.dataType).as(c.name)
-          case None    => lit(null).cast(c.dataType).as(c.name)
-        }
+    } else
+      df.select(ch.columns.map { case (c, value) =>
+        value.fold(lit(null))(expr).cast(c.dataType).as(c.name)
       }: _*)
-    }
   }
 }
 
@@ -223,22 +200,10 @@ final class Runner(
     */
   private def prebuildHubs(
       names: Seq[String], build: String => DataFrame): Unit =
-    if (materialized) {
-      val need = mutable.LinkedHashSet.empty[String]
-      def visit(n: String): Unit = if (!need.contains(n)) {
-        cp.compiledSource(n).dependsOn.foreach(visit); need += n
-      }
-      names.foreach(visit)
-      val depth = mutable.Map.empty[String, Int]
-      need.foreach { n =>
-        depth(n) =
-          (cp.compiledSource(n).dependsOn.toSeq.map(d => depth(d) + 1) :+ 0).max
-      }
-      need.toSeq.groupBy(depth).toSeq.sortBy(_._1).foreach { case (_, lvl) =>
-        // build(n) is idempotent and per-key locked, so an already-built
-        // name is a cheap no-op; names within a level are distinct
-        Pool.all("graft-hub-build", lvl.map(n => () => { build(n); () }))
-      }
+    if (materialized) cp.levels(names).foreach { lvl =>
+      // build(n) is idempotent and per-key locked, so an already-built
+      // name is a cheap no-op; names within a level are distinct
+      Pool.all("graft-hub-build", lvl.map(n => () => { build(n); () }))
     }
 
   def buildAllHubs(): Unit = {
@@ -260,11 +225,10 @@ final class Runner(
     * level-parallel.
     */
   def output(name: String): DataFrame = {
-    val co = cp.outputs.find(_.output.name == name)
-      .getOrElse(throw CompileError(s"Unknown output '$name'"))
+    val co = cp.output(name)
     val get = hubs(Pruner.neededForOutput(cp, co))
     prebuildHubs(co.channels.map(_.channel.sourceName).distinct, get)
-    new OutputPlanner(cp, get).plan(co)
+    new OutputPlanner(get).plan(co)
   }
 
   /** Execute the full pipeline: all hubs, then write all outputs.
@@ -285,7 +249,7 @@ final class Runner(
   def run(outDir: String): Unit = Materialize.scope {
     buildAllHubs()
     cp.outputs.foreach { co =>
-      val df = new OutputPlanner(cp, hub).plan(co)
+      val df = new OutputPlanner(hub).plan(co)
       val target = co.output.target
       co.output.outputType match {
         case OutputType.Virtual => df.createOrReplaceTempView(target)

@@ -78,10 +78,10 @@ object HubQueries {
       val sqls = compiled.sources.map(cs =>
         cs.source.name ->
           em.sourceSql(cs.source.name, src => src.sourceTable))
-      // hubs CONSUMED by a downstream source's SQL (inter-source scans)
-      val consumed = sqls.map(_._1).filter(n =>
-        sqls.exists { case (m, sql) => m != n && sql.contains(em.hubRef(n)) })
-        .toSet
+      // hubs CONSUMED by a downstream source's SQL (inter-source scans):
+      // `dependsOn` holds exactly the non-self hop targets whose hub views
+      // the emitted SQL names
+      val consumed = compiled.sources.flatMap(_.dependsOn).toSet
       // localCheckpoint CONSUMED hubs only: an RDD-backed view means
       // downstream hub SQL never sees nested CTE chains — Spark's
       // InlineCTE pass miscompiles deeply nested CTE+lateral trees
@@ -102,15 +102,7 @@ object HubQueries {
       // §2.6). Level order keeps every dep's view registered before a
       // dependent's s.sql() parses; results are unchanged.
       val bySource = sqls.toMap
-      val deps: Map[String, Seq[String]] = sqls.map { case (name, sql) =>
-        name -> sqls.map(_._1).filter(m => m != name &&
-          sql.contains(em.hubRef(m)))
-      }.toMap
-      val depth = scala.collection.mutable.Map.empty[String, Int]
-      compiled.sources.map(_.source.name).foreach { n =>
-        depth(n) = (deps(n).map(d => depth(d) + 1) :+ 0).max
-      }
-      sqls.map(_._1).groupBy(depth).toSeq.sortBy(_._1).foreach { case (_, lvl) =>
+      compiled.levels(compiled.sources.map(_.source.name)).foreach { lvl =>
         val (eager, lazyHubs) = lvl.partition(consumed)
         // parse+register serially (cheap, needs dep views), checkpoint
         // concurrently (the expensive blocking jobs)

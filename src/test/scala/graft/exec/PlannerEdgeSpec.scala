@@ -93,6 +93,29 @@ class PlannerEdgeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(e.message.contains("Uniqueness validation"))
   }
 
+  test("a lookup over a hop that is not cardinality 1 fails planning and emission alike") {
+    // path inference never yields such a hop, so widen a compiled one
+    import spark.implicits._
+    val p = Project(
+      sources = Seq(
+        SourceDef("dim", "dim", Seq(RawAttr("dim_id", LongType))),
+        SourceDef("fact", "fact", Seq(RawAttr("dim_ref", LongType)),
+          rules = Seq(RuleDef("x", "[dim].dim_id")))),
+      relations = Seq(RelationDef("[fact]- ref -[dim]",
+        "[This].dim_ref = [Related].dim_id", Cardinality.ManyOne)))
+    val good = new Compiler(p).compile()
+    def widen(h: graft.analyze.Hop) =
+      h.copy(relation = h.relation.copy(cardinality = Cardinality.ManyMany))
+    val cp = good.copy(sources = good.sources.map(cs => cs.copy(rules = cs.rules.map(cr =>
+      cr.copy(params = cr.params.map(rp => rp.copy(path = rp.path.map(widen))))))))
+    val tables = Map("dim" -> Seq(1L).toDF("dim_id"), "fact" -> Seq(1L).toDF("dim_ref"))
+    val planned = intercept[CompileError](
+      new Runner(cp, s => tables(s.sourceTable)).hub("fact"))
+    val emitted = intercept[CompileError](new SqlEmitter(cp).sourceSql("fact", _.sourceTable))
+    assert(planned.message === "Join cardinality is not 1 for relation '[fact]- ref -[dim]'")
+    assert(emitted.message === planned.message)
+  }
+
   test("theta (non-equi) M-aggregate falls back to tagged join") {
     import spark.implicits._
     val buckets = Seq((1L, 0.0, 100.0), (2L, 100.0, 200.0)).toDF("b_id", "lo", "hi")

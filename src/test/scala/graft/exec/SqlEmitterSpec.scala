@@ -127,6 +127,37 @@ class SqlEmitterSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(e.message.contains("Uniqueness validation enrichment is missing or inactive for rule 'key'"))
   }
 
+  /** One source `d(k, js)` with one output channel of `mappings`. */
+  private def oneChannel(op: graft.core.OperationType, mappings: String*) = {
+    import graft.core._
+    import org.apache.spark.sql.types._
+    new Compiler(Project(
+      sources = Seq(SourceDef("d", "d", Seq(RawAttr("k", LongType), RawAttr("js", StringType)))),
+      outputs = Seq(OutputDef("o", Seq(OutputCol("k", LongType), OutputCol("v", StringType)),
+        Seq(Channel("d", mappings.map(graft.core.Mapping.parse), operationType = op)))))).compile()
+  }
+
+  /** `outputSql` raises the same CompileError as the planner's `output`. */
+  private def assertSameOutputError(ocp: graft.analyze.CompiledProject, text: String): Unit = {
+    val d = spark.createDataFrame(java.util.List.of(org.apache.spark.sql.Row(1L, "{}")),
+      org.apache.spark.sql.types.StructType.fromDDL("k BIGINT, js STRING"))
+    val planned = intercept[graft.core.CompileError](new Runner(ocp, _ => d).output("o"))
+    val emitted = intercept[graft.core.CompileError](new SqlEmitter(ocp).outputSql("o"))
+    assert(planned.message.contains(text))
+    assert(emitted.message === planned.message)
+  }
+
+  test("aggregate channel without aggregate mappings fails emission as it fails planning") {
+    assertSameOutputError(oneChannel(graft.core.OperationType.Aggregate, "k k", "js v"),
+      "Output 'o': Aggregate channel has no aggregate mappings")
+  }
+
+  test("schema_of_json_agg in an output mapping fails emission as it fails planning") {
+    assertSameOutputError(
+      oneChannel(graft.core.OperationType.Aggregate, "k k", "schema_of_json_agg(js) v"),
+      "Aggregate function 'schema_of_json_agg' is Databricks-only")
+  }
+
   test("InlineCTE canary: sub-JVM probe of the nested hub SQL (SparkEntry localCheckpoint workaround)") {
     // The InlineCTE miscompile that forces HubQueries
     // q_lineitem_enriched_sql to localCheckpoint() each hub view only
